@@ -62,40 +62,27 @@ def ivf_build(df: DataFrame, id_col: str, vec_col: str, path: str,
                   if fit_fraction else df)
         centers_list = cl.kmeans_fit(fit_on, id_col, vec_col,
                                      k=n_centroids, iters=iters)
-        # centroid assignment via _assign_df: above ASSIGN_EXPR_MAX_K
-        # centroids the full-corpus build scan switches to the
-        # vectorized NumPy kernel (bit-identical — see clustering.py);
-        # a deployment-sized n_centroids must not pay the O(k·dim)
-        # interpreted expression per row.
-        assigned = (cl._assign_df(
-            df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v")), centers_list)
-            .select("id", F.col("v").alias("embedding"),
-                    F.col("cluster").alias("centroid")))
+        # ONE assignment scan (clustering._assign_multi_cols) encodes
+        # the centroid and, with pq_m, the m PQ codes as m+1 specs of
+        # the same vector; vectors not exactly dim wide raise. Above
+        # ASSIGN_EXPR_MAX_K codes it runs as the vectorized NumPy
+        # kernel (bit-identical), so a deployment-sized n_centroids
+        # does not pay the O(k·dim) interpreted expression per row.
+        dim = len(centers_list[0])
+        specs = [(0, dim, centers_list)]
         if pq_m is not None:
-            dim = len(centers_list[0])
             sub = dim // pq_m
             pq_books = cl.pq_fit(fit_on, id_col, vec_col, m=pq_m,
                                  k_codes=pq_codes, iters=pq_iters,
                                  dim=dim)
-            # one nested codebook literal + one transform lambda per
-            # code column (r13 literal fusion — see clustering.pq_audit;
-            # bit-identical (d, cl) structs and array_min tie-break)
-            bmat = F.lit([[[float(w) for w in c] for c in book]
-                          for book in pq_books])
-
-            def _cand_struct(sl):
-                # closure factory: pyspark HOF binding counts named
-                # lambda params
-                return lambda c, i: F.struct(
-                    cl._sqdist(sl, c).alias("d"), i.alias("cl"))
-
-            for j in range(pq_m):
-                sl = F.slice(F.col("embedding"), j * sub + 1, sub)
-                cands = F.transform(F.element_at(bmat, j + 1),
-                                    _cand_struct(sl))
-                assigned = assigned.withColumn(
-                    f"code{j}", F.array_min(cands)["cl"].cast("int"))
+            specs += [(j * sub, sub, b) for j, b in enumerate(pq_books)]
+        assigned = cl._assign_multi_cols(
+            df.select(F.col(id_col).alias("id"),
+                      F.col(vec_col).alias("v")), specs, dim).select(
+            "id", F.col("v").alias("embedding"),
+            F.col("__cl0").alias("centroid"),
+            *[F.col(f"__cl{j + 1}").alias(f"code{j}")
+              for j in range(len(specs) - 1)])
     elif quantizer == "mllib":
         if pq_m is not None:
             raise ValueError("pq_m requires quantizer='det' (the PQ "
@@ -194,11 +181,12 @@ def ivf_query_adc(spark: SparkSession, path: str,
     (ReadSchema-asserted in tests), and each candidate costs m integer
     table lookups.
 
-    Ranking semantics == clustering.ivf_pq_topk: probe cells by squared
-    distance (tie → lowest centroid), ADC tables in 1e6 fixed-point
-    longs, ties by (d6, id). Requires an index built with
-    ``ivf_build(pq_m=...)``."""
-    from dataprofiler_spark.operators.clustering import _SCALE
+    Ranking semantics == clustering.ivf_pq_topk, through the same
+    helpers (clustering._adc_probe / _adc_table / _adc_expr): probe
+    cells by squared distance (tie → lowest centroid), ADC tables in
+    1e6 fixed-point longs, ties by (d6, id). Requires an index built
+    with ``ivf_build(pq_m=...)``."""
+    from dataprofiler_spark.operators import clustering as cl
     from dataprofiler_spark.operators.topk import ranked_topk
 
     meta = ivf_meta(path)
@@ -208,39 +196,24 @@ def ivf_query_adc(spark: SparkSession, path: str,
     with open(os.path.join(path, "_pq_codebooks.json")) as f:
         books = json.load(f)
     m = meta["pq_m"]
-    sub = meta["dim"] // m
     qv = [float(x) for x in query_vec]
-
-    def _sq(a, b):
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
     cent_rows = spark.read.parquet(
         os.path.join(path, "centroids")).collect()
-    ranked = sorted(cent_rows,
-                    key=lambda r: (_sq(qv, list(r["center"])),
-                                   r["centroid"]))
-    probe = [r["centroid"] for r in ranked[:nprobe]]
-    dt6 = [[int(round(_sq(qv[j * sub:(j + 1) * sub], code) * _SCALE))
-            for code in book] for j, book in enumerate(books)]
+    coarse = [list(r["center"])
+              for r in sorted(cent_rows, key=lambda r: r["centroid"])]
+    probe = cl._adc_probe(qv, coarse, nprobe)
 
     cols = ["id", "centroid"] + [f"code{j}" for j in range(m)]
     vecs = spark.read.parquet(os.path.join(path, "vectors")).select(*cols)
     cand = vecs.where(F.col("centroid").isin(probe))
     if exclude_id is not None:
         cand = cand.where(F.col("id") != exclude_id)
-    # one nested table literal (r13 fusion): same values, same
-    # integer adds — bit-identical d6
-    tmat = F.lit(dt6)
-    total = None
-    for j in range(m):
-        term = F.element_at(F.element_at(tmat, j + 1),
-                            F.col(f"code{j}") + 1)
-        total = term if total is None else total + term
-    scored = cand.select(F.col("id").alias("vec_id"),
-                         total.alias("d6"))
+    scored = cand.select(
+        F.col("id").alias("vec_id"),
+        cl._adc_expr(F.lit(cl._adc_table(qv, books)), m).alias("d6"))
     return (ranked_topk(scored, [F.asc("d6"), F.asc("vec_id")], k)
             .select("rank", "vec_id",
-                    F.round(F.col("d6") / F.lit(float(_SCALE)), 6)
+                    F.round(F.col("d6") / F.lit(float(cl._SCALE)), 6)
                     .alias("approx_d")))
 
 

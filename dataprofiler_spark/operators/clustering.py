@@ -7,6 +7,16 @@ same way IVF indexing (operators/ann_index.py) does: embeddings are a
 first-class column type, and cluster assignment is the coarse structure
 every mixture / dedup / decontamination decision wants to stratify on.
 
+One implementation per algorithm: every nearest-codeword decision in
+this module, operators/ann_index.py and streaming/semdedup.py goes
+through ``_assign_multi_cols`` (k-means = one spec over the whole
+vector, a PQ encoder = m slice specs), every fit through
+``kmeans_fit_multi`` (``kmeans_fit`` is its one-spec form), and every
+IVF-PQ asymmetric-distance score through ``_adc_probe`` /
+``_adc_table`` / ``_adc_expr``. Width rule: every non-NULL vector is
+exactly as wide as the fitted dim; a ragged vector raises on the
+assignment scan instead of being sliced short or long.
+
 Scale shape (the MLlib KMeans plan, re-derived on DataFrames):
   per iteration = ONE scan assigning each vector to its nearest centroid
   (centroids are literals — broadcast by construction, no join) + ONE
@@ -89,116 +99,34 @@ def _assign_expr(vec: Column, centroids: list[list[float]]) -> Column:
 ASSIGN_EXPR_MAX_K = 16
 
 
-def _assign_df(base: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """(id, v, ...) → (id, v, ..., cluster int): nearest-centroid
-    assignment over the ``v`` column (extra columns pass through),
-    expression path for small k (JVM, zero Python), NumPy mapInPandas
-    above ASSIGN_EXPR_MAX_K. Vectors must share the centroids' width
-    (the fixed-dim contract every caller already enforces)."""
-    if len(centroids) <= ASSIGN_EXPR_MAX_K:
-        return base.select(
-            "*",
-            _assign_expr(F.col("v"), centroids).cast("int").alias("cluster"))
-    import numpy as np
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
-    from dataprofiler_spark.session import ensure_parallelism
-
-    cents = np.asarray(centroids, dtype=np.float64)
-    dim = cents.shape[1]
-    out_schema = StructType(list(base.schema.fields)
-                            + [StructField("cluster", IntegerType())])
-
-    def assign(batches):
-        import pandas as pd
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf) == 0:
-                pdf["cluster"] = pd.Series([], dtype="int32")
-                yield pdf
-                continue
-            v = np.asarray(pdf["v"].to_list(), dtype=np.float64)
-            acc = np.zeros((len(pdf), cents.shape[0]))
-            for d in range(dim):
-                diff = v[:, d, None] - cents[None, :, d]
-                acc += diff * diff          # same per-dim fold order
-            pdf["cluster"] = np.argmin(acc, axis=1).astype("int32")
-            yield pdf
-
-    return ensure_parallelism(base).mapInPandas(assign, schema=out_schema)
-
-
-def _init_centroids(base: DataFrame, k: int) -> list[list[float]]:
-    rows = base.orderBy("id").limit(k).select("v").collect()
-    if len(rows) < k:
-        raise ValueError(f"k={k} exceeds the {len(rows)} available vectors")
-    return [[float(x) for x in r["v"]] for r in rows]
-
-
-def _update_centroids(assigned: DataFrame, prev: list[list[float]]
-                      ) -> list[list[float]]:
-    """ONE fixed-width shuffle (r13, VERDICT r12 item 6): a wide
-    struct-of-sums aggregate — per cluster, dim integer SUM columns
-    plus one COUNT — replaces the r12 ``posexplode`` shape (n·dim
-    map-side rows into a (cl, pos) partial agg, then a second
-    re-assembly shuffle). Map output is k rows × dim longs per
-    partition either way, but the map side no longer materializes and
-    hashes dim entries per input row, and the second exchange is gone.
-    The driver still receives k rows and folds them with NumPy
-    (VERDICT r11 item 3). Integer sums are order-independent, so the
-    regrouping is bit-identical (pinned by
-    test_update_centroids_wide_agg_matches_posexplode). Mean =
-    (int_sum / n) / 1e6 — both divisions are exact-input IEEE ops,
-    elementwise identical between NumPy doubles and any engine's
-    scalar path. The whole sum struct is ONE F.expr (a single py4j
-    call + one flat parse, not dim Column round-trips — matters at
-    dim=768)."""
-    import numpy as np
-
-    dim = len(prev[0])
-    sums = ", ".join(
-        f"sum(cast(round(cast(v[{d}] as double) * {_SCALE}, 0) as bigint))"
-        for d in range(dim))
-    rows = (
-        assigned.groupBy("cl")
-        .agg(F.expr(f"struct({sums})").alias("s"),
-             F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    cents = [list(c) for c in prev]  # empty clusters keep prev centroid
-    for r in rows:
-        s = np.asarray(list(r["s"]), dtype=np.float64)
-        cents[r["cl"]] = ((s / float(r["n"])) / _SCALE).tolist()
-    return cents
-
-
-def kmeans_fit(df: DataFrame, id_col: str, vec_col: str, k: int = 4,
-               iters: int = 2) -> list[list[float]]:
-    """Run ``iters`` Lloyd rounds; return the final centroids."""
-    df = df.where(F.col(vec_col).isNotNull())  # NULL vec: no cell
-    base = df.select(F.col(id_col).alias("id"),
-                     F.col(vec_col).alias("v"))
-    cents = _init_centroids(base, k)
-    for _ in range(iters):
-        assigned = _assign_df(base, cents).withColumnRenamed("cluster",
-                                                             "cl")
-        cents = _update_centroids(assigned, cents)
-    return cents
-
-
 def _assign_multi_cols(base: DataFrame,
-                       specs_cents: list[tuple[int, int, list[list[float]]]]
-                       ) -> DataFrame:
-    """(id, v) → (id, v, __cl0.., __cl{m-1}): nearest-centroid index per
-    spec, where spec i covers the contiguous slice
-    [start_i, start_i + width_i) of ``v``. Expression path when every
-    codebook is small; one fused NumPy kernel otherwise. Both replay
-    ``_assign_df``'s exact per-slice arithmetic (cast to double,
-    (x−y)·(x−y), sequential left-fold from 0.0, lowest-index ties)."""
+                       specs_cents: list[tuple[int, int, list[list[float]]]],
+                       dim: int) -> DataFrame:
+    """THE nearest-codeword assignment of this package: (id, v, ...) →
+    (id, v, ..., __cl0.., __cl{m-1}), the nearest-centroid index per
+    spec, where spec i covers the contiguous slice [start_i, start_i +
+    width_i) of ``v`` (extra columns pass through). k-means is one spec
+    over the whole vector, a PQ encoder is m slice specs, and IVF-PQ
+    encodes cell + codes as m+1 specs in one scan.
+
+    Width rule: every non-NULL ``v`` is exactly ``dim`` wide. A ragged
+    vector raises (``raise_error`` in the expression arm, ValueError in
+    the kernel) on the assignment scan itself — no extra action —
+    instead of being silently sliced short or long.
+
+    Expression arm when every codebook has at most ASSIGN_EXPR_MAX_K
+    codes (JVM, zero Python); one fused NumPy kernel otherwise. Both
+    replay the same per-slice arithmetic (cast to double, (x−y)·(x−y),
+    sequential left-fold from 0.0, lowest-index ties)."""
     if all(len(c) <= ASSIGN_EXPR_MAX_K for _, _, c in specs_cents):
+        v = F.col("v")
+        ragged = F.raise_error(F.concat(
+            F.lit("vector width "), F.size(v).cast("string"),
+            F.lit(f" != fitted dim {dim}")))
         cols = [
-            _assign_expr(F.slice(F.col("v"), start + 1, width), cents)
-            .cast("int").alias(f"__cl{i}")
+            F.when(v.isNull() | (F.size(v) == dim),
+                   _assign_expr(F.slice(v, start + 1, width), cents))
+            .otherwise(ragged).cast("int").alias(f"__cl{i}")
             for i, (start, width, cents) in enumerate(specs_cents)
         ]
         return base.select("*", *cols)
@@ -223,7 +151,12 @@ def _assign_multi_cols(base: DataFrame,
                     pdf[f"__cl{i}"] = pd.Series([], dtype="int32")
                 yield pdf
                 continue
-            v = np.asarray(pdf["v"].to_list(), dtype=np.float64)
+            rows = pdf["v"].to_list()
+            for r in rows:
+                if r is not None and len(r) != dim:
+                    raise ValueError(
+                        f"vector width {len(r)} != fitted dim {dim}")
+            v = np.asarray(rows, dtype=np.float64)
             for i, (start, width, c) in enumerate(mats):
                 acc = np.zeros((len(pdf), c.shape[0]))
                 for d in range(width):
@@ -239,26 +172,24 @@ def _update_centroids_multi(proj: DataFrame,
                             specs_cents: list[tuple[int, int,
                                                     list[list[float]]]]
                             ) -> list[list[list[float]]]:
-    """Fused centroid update for every spec in ONE job: per row, each
-    spec contributes width_i (spec, cl, pos, x) entries (built with
-    ``transform``/``element_at`` over the shared vector — the exact x
-    values ``posexplode`` of the slice would yield), then one
-    groupBy(spec, cl, pos) of integer partial sums and one
-    re-assembly groupBy — ``_update_centroids``'s algebra with ``spec``
-    prepended to the keys. Integer sums are order-independent, so the
-    regrouping is bit-identical to m separate updates."""
+    """Centroid update for every spec in ONE job: explode each row by
+    SPEC only — m (spec, cl, slice) rows per input row — then ONE wide
+    struct-of-sums aggregate per (spec, cl): width integer SUM columns
+    of round(x · 1e6) plus one COUNT. Map output is k·m rows × width
+    longs per partition; the per-element work is codegen'd
+    GetArrayItem sums. The whole sum struct is ONE F.expr (a single
+    py4j call + one flat parse, not width Column round-trips — matters
+    at dim=768). Positions past a narrower spec's width sum to NULL and
+    are sliced off on the driver, which folds the k·m rows with NumPy.
+
+    Integer sums are order-independent, so Spark's partial-aggregate
+    tree and DuckDB's sequential sum give the same integers; mean =
+    (int_sum / n) / 1e6 — two IEEE ops on identical inputs. Empty
+    clusters keep their previous centroid. Pinned per spec against the
+    DuckDB ``_kmeans_ctes`` oracle by
+    test_kmeans_fit_multi_matches_oracle."""
     import numpy as np
 
-    # r13 (VERDICT r12 item 6, multi form): explode by SPEC only —
-    # m+1 (spec, cl, slice) rows per input row instead of sum(width)
-    # interpreted (spec, cl, pos, x) entries — then ONE wide
-    # struct-of-sums aggregate per (spec, cl) (see _update_centroids).
-    # Map output rows drop by ×width; the per-element work moves from
-    # an interpreted transform-lambda into codegen'd GetArrayItem
-    # sums. Positions past a narrower spec's width sum to NULL and are
-    # sliced off on the driver. Integer sums are order-independent:
-    # bit-identical to the r12 shape (pinned by
-    # test_kmeans_fit_multi_matches_sequential).
     widths = [w for _, w, _ in specs_cents]
     maxw = max(widths)
     specs_arr = F.array(*[
@@ -294,22 +225,18 @@ def kmeans_fit_multi(df: DataFrame, id_col: str, vec_col: str,
     ``vec_col`` — all specs sharing ONE smallest-id init collect and
     ONE fused scan per Lloyd round. ``start=None``/``width=None``
     selects the full vector (width resolved from the first collected
-    row). Replaces m sequential independent fits — m·(iters+1) scans
-    and driver round-trips — with max(iters)+1 (guide §1.2: fix the
-    number of passes before anything else; §2.6: don't serialize
-    independent work).
+    row, which is also the dim every vector must have). m independent
+    fits would cost m·(iters+1) scans and driver round-trips; this
+    costs max(iters)+1 (guide §1.2: fix the number of passes before
+    anything else; §2.6: don't serialize independent work).
 
-    Bit-identical to ``[kmeans_fit(df.select(id, slice(vec)), ...)]``
-    per spec — PROVIDED ids are unique (true for every corpus this
-    engine ingests): with duplicate ids, ``orderBy(id)`` ties make any
-    ``limit`` prefix nondeterministic, so the first k of a max_k
-    collect could differ from the sequential path's ``limit(k)``
-    (ADVICE r12). Same init rows (slicing never reorders ids), same
-    per-slice assignment arithmetic (``_assign_multi_cols``), same
-    scaled-integer centroid update regrouped by a ``spec`` key
-    (``_update_centroids_multi``) — integer sums are order-independent,
-    so the fusion cannot drift. Pinned by
-    test_kmeans_fit_multi_matches_sequential."""
+    Per spec the result is exactly an independent fit over that slice
+    — PROVIDED ids are unique (true for every corpus this engine
+    ingests): with duplicate ids, ``orderBy(id)`` ties make any
+    ``limit`` prefix nondeterministic (ADVICE r12). Same init rows
+    (slicing never reorders ids), per-slice assignment arithmetic
+    (``_assign_multi_cols``), scaled-integer centroid update keyed by
+    spec (``_update_centroids_multi``)."""
     df = df.where(F.col(vec_col).isNotNull())  # NULL vec: no cell
     base = df.select(F.col(id_col).alias("id"),
                      F.col(vec_col).alias("v"))
@@ -328,14 +255,19 @@ def kmeans_fit_multi(df: DataFrame, id_col: str, vec_col: str,
                       for r in rows[:k]])
     for t in range(1, max(it for _, _, _, it in resolved) + 1):
         active = [i for i, (_, _, _, it) in enumerate(resolved) if t <= it]
-        if not active:
-            break
         sc = [(resolved[i][0], resolved[i][1], books[i]) for i in active]
-        proj = _assign_multi_cols(base, sc)
+        proj = _assign_multi_cols(base, sc, full_w)
         upd = _update_centroids_multi(proj, sc)
         for pos, i in enumerate(active):
             books[i] = upd[pos]
     return books
+
+
+def kmeans_fit(df: DataFrame, id_col: str, vec_col: str, k: int = 4,
+               iters: int = 2) -> list[list[float]]:
+    """Run ``iters`` Lloyd rounds over the whole vector; return the
+    final centroids (the one-spec ``kmeans_fit_multi``)."""
+    return kmeans_fit_multi(df, id_col, vec_col, [(None, None, k, iters)])[0]
 
 
 # Resolved auto-k at or above this engages the two-level quantizer in
@@ -370,7 +302,7 @@ def two_level_cells(df: DataFrame, id_col: str, vec_col: str,
     end: the coarse fit is the deterministic distributed k-means, and
     the fine stage is a pure function of its cell's rows (sorted by
     id, lowest-id init, fixed iters, the same scaled-integer centroid
-    arithmetic as ``_update_centroids``), so partitioning cannot move
+    arithmetic as ``_update_centroids_multi``), so partitioning cannot move
     results. NOT oracle-expressible as one SQL query (per-cell
     independent Lloyd) — covered by invariant tests
     (tests/test_clustering.py) instead; every oracled configuration
@@ -392,8 +324,9 @@ def two_level_cells(df: DataFrame, id_col: str, vec_col: str,
         k_total = max(1, -(-n // int(target_cell_size)))
         coarse_k = max(1, math.isqrt(k_total - 1) + 1 if k_total > 1 else 1)
     cents = kmeans_fit(base, "id", "v", coarse_k, iters)
-    assigned = (_assign_df(base, cents)
-                .withColumnRenamed("cluster", "__coarse"))
+    dim = len(cents[0])
+    assigned = (_assign_multi_cols(base, [(0, dim, cents)], dim)
+                .withColumnRenamed("__cl0", "__coarse"))
 
     target = int(target_cell_size)
     n_iters = int(iters)
@@ -459,8 +392,10 @@ def kmeans_assign(df: DataFrame, id_col: str, vec_col: str, k: int = 4,
     cents = kmeans_fit(df, id_col, vec_col, k, iters)
     base = df.select(F.col(id_col).alias("id"),
                      F.col(vec_col).alias("v"))
-    return (_assign_df(base, cents)
-            .select(F.col("id").alias(id_col), "cluster"))
+    dim = len(cents[0])
+    return (_assign_multi_cols(base, [(0, dim, cents)], dim)
+            .select(F.col("id").alias(id_col),
+                    F.col("__cl0").alias("cluster")))
 
 
 def kmeans_summary(df: DataFrame, id_col: str, vec_col: str, k: int = 4,
@@ -476,9 +411,11 @@ def kmeans_summary(df: DataFrame, id_col: str, vec_col: str, k: int = 4,
     # re-deriving every distance per row
     cmat = F.lit([[float(w) for w in c] for c in cents])
     d = _sqdist(F.col("v"), F.element_at(cmat, F.col("cluster") + 1))
-    assigned = (_assign_df(
+    dim = len(cents[0])
+    assigned = (_assign_multi_cols(
         df.select(F.col(id_col).alias("id"),
-                  F.col(vec_col).alias("v")), cents)
+                  F.col(vec_col).alias("v")), [(0, dim, cents)], dim)
+        .withColumnRenamed("__cl0", "cluster")
         .select("cluster",
                 # fixed-point so the cross-engine sum is exact
                 F.round(d * _SCALE, 0).cast("long").alias("d6")))
@@ -610,14 +547,16 @@ def ivf_topk_det(df: DataFrame, id_col: str, vec_col: str,
     from dataprofiler_spark.operators.similarity import cosine_expr
 
     cents = kmeans_fit(df, id_col, vec_col, k_clusters, iters)
-    # corpus-side assignment via _assign_df: vectorized kernel above
-    # ASSIGN_EXPR_MAX_K cells (the probe side stays an expression —
-    # it runs on n_queries rows, not the corpus)
-    cells = (_assign_df(
+    # corpus-side assignment via _assign_multi_cols (one spec; NumPy
+    # kernel above ASSIGN_EXPR_MAX_K cells, ragged vectors raise). The
+    # probe side below is a top-nprobe ranking of cells, not an argmin:
+    # it stays an array_sort over n_queries rows, not the corpus.
+    dim = len(cents[0])
+    cells = (_assign_multi_cols(
         df.select(F.col(id_col).alias("id"),
-                  F.col(vec_col).alias("v")), cents)
+                  F.col(vec_col).alias("v")), [(0, dim, cents)], dim)
         .select(F.col("id").alias("vec_id"), "v",
-                F.col("cluster").alias("cell")))
+                F.col("__cl0").alias("cell")))
     # one nested centroid-matrix literal + one transform lambda (r13,
     # same fusion as _assign_expr): identical (d, cl) structs, identical
     # array_sort order, k·dim fewer py4j/plan nodes
@@ -712,9 +651,11 @@ def embedding_outliers(df: DataFrame, id_col: str, vec_col: str,
     # re-derived all k distances per row)
     cmat = F.lit([[float(w) for w in c] for c in cents])
     d = _sqdist(F.col("v"), F.element_at(cmat, F.col("cluster") + 1))
-    assigned = (_assign_df(
+    dim = len(cents[0])
+    assigned = (_assign_multi_cols(
         df.select(F.col(id_col).alias("id"),
-                  F.col(vec_col).alias("v")), cents)
+                  F.col(vec_col).alias("v")), [(0, dim, cents)], dim)
+        .withColumnRenamed("__cl0", "cluster")
         .select("id", "cluster",
                 F.round(d * _SCALE, 0).cast("long").alias("d6")))
     per_cl = assigned.groupBy("cluster").agg(
@@ -948,18 +889,19 @@ def label_centroid_audit(df: DataFrame, id_col: str, vec_col: str,
     for r in sums:
         by_lbl.setdefault(r["lbl"], [0.0] * dim)[r["pos"]] = (
             (r["s"] / r["n"]) / _SCALE)
-    # nearest label-centroid via _assign_df (vectorized kernel above
-    # ASSIGN_EXPR_MAX_K labels — the O(labels·dim) literal expression
-    # was the same interpreted-HOF trap the k-means paths had, only
-    # capped at MAX_AUDIT_LABELS instead of fixed). Centroids are
-    # ordered by label, so the kernel's (distance, index) tie-break
-    # equals the old (distance, label) lexicographic min.
+    # nearest label-centroid via _assign_multi_cols, one spec
+    # (vectorized kernel above ASSIGN_EXPR_MAX_K labels — the
+    # O(labels·dim) literal expression is an interpreted-HOF trap at
+    # MAX_AUDIT_LABELS; vectors narrower or wider than dim raise).
+    # Centroids are ordered by label, so the (distance, index)
+    # tie-break equals the (distance, label) lexicographic min.
     labels_sorted = sorted(by_lbl)
     lmap = F.array(*[F.lit(lb) for lb in labels_sorted])
-    assigned = _assign_df(base, [by_lbl[lb] for lb in labels_sorted])
+    assigned = _assign_multi_cols(
+        base, [(0, dim, [by_lbl[lb] for lb in labels_sorted])], dim)
     flagged = assigned.select(
         "lbl",
-        (F.element_at(lmap, F.col("cluster") + 1) != F.col("lbl"))
+        (F.element_at(lmap, F.col("__cl0") + 1) != F.col("lbl"))
         .alias("suspect"))
     return (flagged.groupBy(F.col("lbl").alias("label")).agg(
         F.count(F.lit(1)).alias("n"),
@@ -1149,26 +1091,22 @@ def pq_audit(df: DataFrame, id_col: str, vec_col: str, m: int = 4,
     df = df.where(F.col(vec_col).isNotNull())  # NULL vec: no cell
     books = pq_fit(df, id_col, vec_col, m, k_codes, iters, dim)
     sub = dim // m
-    # all m codebooks in ONE nested literal, one transform lambda per
-    # subvector (r13 literal fusion — see ivf_pq_topk): same (d, cl)
-    # structs, same array_min tie-break, bit-identical codes/errors
+    codes = _assign_multi_cols(
+        df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")),
+        [(j * sub, sub, book) for j, book in enumerate(books)], dim)
+    # error of the chosen code: ONE O(sub) distance against it (the
+    # kmeans_summary pattern) — the same _sqdist fold on the same
+    # doubles the assignment minimized, so the value is bit-identical
     bmat = F.lit([[[float(w) for w in c] for c in book] for book in books])
-
-    def _cand_struct(sl):
-        # closure factory: pyspark HOF binding counts named lambda params
-        return lambda c, i: F.struct(_sqdist(sl, c).alias("d"),
-                                     i.alias("cl"))
-
     structs = []
     for j in range(m):
-        sl = F.slice(F.col(vec_col), j * sub + 1, sub)
-        cands = F.transform(F.element_at(bmat, j + 1), _cand_struct(sl))
-        best = F.array_min(cands)
+        code = F.col(f"__cl{j}")
+        d = _sqdist(F.slice(F.col("v"), j * sub + 1, sub),
+                    F.element_at(F.element_at(bmat, j + 1), code + 1))
         structs.append(F.struct(
-            F.lit(j).alias("subvector"),
-            best["cl"].cast("int").alias("code"),
-            F.round(best["d"] * _SCALE, 0).cast("long").alias("d6")))
-    exploded = (df.select(F.explode(F.array(*structs)).alias("s"))
+            F.lit(j).alias("subvector"), code.alias("code"),
+            F.round(d * _SCALE, 0).cast("long").alias("d6")))
+    exploded = (codes.select(F.explode(F.array(*structs)).alias("s"))
                 .select("s.subvector", "s.code", "s.d6"))
     return (exploded.groupBy("subvector")
             .agg(F.count(F.lit(1)).alias("n"),
@@ -1178,6 +1116,42 @@ def pq_audit(df: DataFrame, id_col: str, vec_col: str, m: int = 4,
                  F.round(F.max("d6") / F.lit(float(_SCALE)),
                          round_digits).alias("max_sq_err"))
             .orderBy("subvector"))
+
+
+def _py_sqdist(a: list[float], b: list[float]) -> float:
+    """Driver-side ``_sqdist``: the same sequential left fold."""
+    return sum((x - y) * (x - y) for x, y in zip(a, b))
+
+
+def _adc_probe(qv: list[float], coarse: list[list[float]],
+               nprobe: int) -> list[int]:
+    """The ``nprobe`` cells nearest the query by squared distance, ties
+    to the lowest cell index (the assignment's tie-break)."""
+    return sorted(range(len(coarse)),
+                  key=lambda c: (_py_sqdist(qv, coarse[c]), c))[:nprobe]
+
+
+def _adc_table(qv: list[float], books: list[list[list[float]]]
+               ) -> list[list[int]]:
+    """Asymmetric-distance table [subvector][code]: the query slice's
+    squared distance to every codeword, in 1e6 fixed-point longs so the
+    ADC sum is integer addition — order-independent, engine-exact."""
+    sub = len(books[0][0])
+    return [[int(round(_py_sqdist(qv[j * sub:(j + 1) * sub], code)
+                       * _SCALE)) for code in book]
+            for j, book in enumerate(books)]
+
+
+def _adc_expr(table: Column, m: int) -> Column:
+    """ADC score of a row's PQ codes ``code0..code{m-1}`` against one
+    ``_adc_table`` (a nested int array Column): m ``element_at``
+    lookups, integer adds only."""
+    total = None
+    for j in range(m):
+        term = F.element_at(F.element_at(table, j + 1),
+                            F.col(f"code{j}") + 1)
+        total = term if total is None else total + term
+    return total
 
 
 def ivf_pq_topk(df: DataFrame, id_col: str, vec_col: str,
@@ -1223,61 +1197,40 @@ def ivf_pq_topk(df: DataFrame, id_col: str, vec_col: str,
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m}")
     sub = dim // m
+    base = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     if by_residual:
-        # residual codebooks depend on the coarse fit — sequential
+        # residual codebooks depend on the coarse fit — sequential: one
+        # scan assigns cells, the codes are assigned over the residuals
         coarse = kmeans_fit(df, id_col, vec_col, k_clusters, iters)
+        cmat = F.lit([[float(w) for w in c] for c in coarse])
+        resid = (_assign_multi_cols(base, [(0, dim, coarse)], dim)
+                 .select("id", F.col("__cl0").alias("cell"),
+                         F.zip_with(F.col("v"),
+                                    F.element_at(cmat, F.col("__cl0") + 1),
+                                    lambda a, b: a.cast("double") - b)
+                         .alias("v")))
+        books = pq_fit(resid, "id", "v", m, k_codes, pq_iters, dim)
+        encoded = _assign_multi_cols(
+            resid, [(j * sub, sub, b) for j, b in enumerate(books)], dim)
+        first_code = 0
     else:
         # raw-vector mode: the coarse quantizer and every PQ book are
         # independent fits over slices of the same vector — ONE fused
-        # fit (kmeans_fit_multi, r12) shares the init collect and one
-        # scan per Lloyd round across all m+1 of them, vs the previous
-        # sequential coarse fit + m book fits (guide §1.2/§2.6)
-        fused = kmeans_fit_multi(
-            df, id_col, vec_col,
-            [(None, None, k_clusters, iters)]
-            + [(j * sub, sub, k_codes, pq_iters) for j in range(m)])
+        # fit shares the init collect and one scan per Lloyd round
+        # across all m+1 of them (guide §1.2/§2.6), and ONE assignment
+        # scan encodes cell + m codes as m+1 specs
+        specs = ([(0, dim, k_clusters, iters)]
+                 + [(j * sub, sub, k_codes, pq_iters) for j in range(m)])
+        fused = kmeans_fit_multi(df, id_col, vec_col, specs)
         coarse, books = fused[0], fused[1:]
-    # cell assignment ONCE via _assign_df (vectorized kernel above
-    # ASSIGN_EXPR_MAX_K cells): embedding the assign expression in
-    # cell_expr used to re-evaluate it inside EVERY residual code
-    # column (m+1 times per row)
-    assigned = _assign_df(
-        df.select(F.col(id_col).alias("id"),
-                  F.col(vec_col).alias("v")), coarse)
-    if by_residual:
-        cmat = F.lit([[float(w) for w in c] for c in coarse])
-        code_vec = F.zip_with(F.col("v"),
-                              F.element_at(cmat, F.col("cluster") + 1),
-                              lambda a, b: a.cast("double") - b)
-        fit_src = assigned.select("id", code_vec.alias("v"))
-        books = pq_fit(fit_src, "id", "v", m, k_codes, pq_iters, dim)
-    else:
-        code_vec = F.col("v")
-
-    # one scan: cell + m codes per vector, all broadcast-literal argmins.
-    # All m codebooks live in ONE nested literal walked by one transform
-    # lambda per code column (r13 literal fusion, guide §1.2): the
-    # unfused form built m·k_codes separate _sqdist trees over
-    # m·k_codes·sub scalar literals — pure py4j/Catalyst latency.
-    # Same (d, cl) structs, same array_min tie-break: bit-identical.
-    bmat = F.lit([[[float(w) for w in c] for c in book] for book in books])
-
-    def _code_struct(sl):
-        # closure factory, not default-arg capture: pyspark's HOF
-        # binding counts every named parameter of the lambda
-        return lambda c, i: F.struct(_sqdist(sl, c).alias("d"),
-                                     i.alias("cl"))
-
-    code_cols = []
-    for j in range(m):
-        sl = F.slice(code_vec, j * sub + 1, sub)
-        cands = F.transform(F.element_at(bmat, j + 1), _code_struct(sl))
-        code_cols.append(F.array_min(cands)["cl"].cast("int")
-                         .alias(f"code{j}"))
-    encoded = assigned.select(
-        F.col("id").alias("vec_id"),
-        F.col("cluster").alias("cell"),
-        *code_cols)
+        encoded = (_assign_multi_cols(
+            base, [(st, w, c) for (st, w, _, _), c in zip(specs, fused)],
+            dim).withColumnRenamed("__cl0", "cell"))
+        first_code = 1
+    encoded = encoded.select(
+        F.col("id").alias("vec_id"), "cell",
+        *[F.col(f"__cl{j + first_code}").alias(f"code{j}")
+          for j in range(m)])
 
     # driver-side: query vectors (n_queries smallest ids), their probe
     # cells, and the fixed-point ADC tables keyed (query, cell)
@@ -1285,51 +1238,26 @@ def ivf_pq_topk(df: DataFrame, id_col: str, vec_col: str,
              .select(F.col(id_col).alias("qid"),
                      F.col(vec_col).cast("array<double>").alias("qv"))
              .collect())
-
-    def _sq(a: list[float], b: list[float]) -> float:
-        return sum((x - y) * (x - y) for x, y in zip(a, b))
-
     probe_rows = []
     tables: list[list[list[int]]] = []   # [probe ordinal][j][code]
     for r in qrows:
         qv = [float(x) for x in r["qv"]]
-        ranked = sorted(range(k_clusters),
-                        key=lambda c: (_sq(qv, coarse[c]), c))
-        for c in ranked[:nprobe]:
-            qr = ([qv[i] - coarse[c][i] for i in range(dim)]
+        for c in _adc_probe(qv, coarse, nprobe):
+            qr = ([x - y for x, y in zip(qv, coarse[c])]
                   if by_residual else qv)
             probe_rows.append((r["qid"], c, len(tables)))
-            tables.append([
-                [int(round(_sq(qr[j * sub:(j + 1) * sub], code)
-                           * _SCALE)) for code in book]
-                for j, book in enumerate(books)])
+            tables.append(_adc_table(qr, books))
 
     spark = df.sparkSession
     probes = F.broadcast(spark.createDataFrame(
         probe_rows, "qid long, cell int, pidx int"))
-
-    # ADC: every (query, cell) table lives in ONE nested int literal
-    # indexed by the probe-row ordinal the broadcast join delivers —
-    # each subvector contributes one element_at lookup; integer adds
-    # only. (r13 fusion: the r12 form chained n_queries·nprobe WHEN
-    # branches per subvector, each with its own k_codes-literal array —
-    # hundreds of py4j calls and a CASE Catalyst re-walked per
-    # reference. Same table values, same integer sum: bit-identical.)
-    tmat = F.lit(tables)
-
-    def adc_expr():
-        trow = F.element_at(tmat, F.col("pidx") + 1)
-        total = None
-        for j in range(m):
-            term = F.element_at(F.element_at(trow, j + 1),
-                                F.col(f"code{j}") + 1)
-            total = term if total is None else total + term
-        return total
-
+    # every (query, cell) table lives in ONE nested int literal indexed
+    # by the probe-row ordinal the broadcast join delivers
+    trow = F.element_at(F.lit(tables), F.col("pidx") + 1)
     scored = (encoded.join(probes, "cell")
               .where(F.col("vec_id") != F.col("qid"))
               .select(F.col("qid").alias("query_id"), "vec_id", "cell",
-                      adc_expr().alias("d6")))
+                      _adc_expr(trow, m).alias("d6")))
     w = Window.partitionBy("query_id").orderBy(F.asc("d6"),
                                                F.asc("vec_id"))
     return (scored.withColumn("rank", F.row_number().over(w).cast("int"))
@@ -1579,9 +1507,11 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
             assigned = assigned.drop("ck")
     else:
         cents = kmeans_fit(df, id_col, vec_col, k_clusters, iters)
-        assigned = _assign_df(
+        dim = len(cents[0])
+        assigned = _assign_multi_cols(
             df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v")), cents)
+                      F.col(vec_col).alias("v")), [(0, dim, cents)], dim
+        ).withColumnRenamed("__cl0", "cluster")
     if cache:
         # persist discipline (the minhash_lsh_pairs `cache` contract):
         # `assigned` feeds FOUR plan subtrees (the size agg, the sized

@@ -83,7 +83,8 @@ class StreamingSemanticDedup:
     def process_batch(self, batch_df: DataFrame) -> DataFrame:
         """(id, v, cluster) of the batch docs that survive both dedup
         stages — pure function of (batch, store); the caller appends."""
-        from dataprofiler_spark.operators.clustering import _assign_df
+        from dataprofiler_spark.operators.clustering import (
+            _assign_multi_cols)
         from dataprofiler_spark.operators.similarity import cosine_expr
 
         meta = self.meta
@@ -93,10 +94,14 @@ class StreamingSemanticDedup:
                 .select(F.col(self.id_col).cast("long").alias("id"),
                         F.col(self.vec_col).cast("array<double>")
                         .alias("v")))
-        # _assign_df: a production store's frozen quantizer can carry
-        # hundreds of cells — above k=16 the per-batch assignment runs
-        # as the vectorized NumPy kernel (bit-identical)
-        assigned = _assign_df(base, meta["centroids"])
+        # the one assignment function, one spec: a production store's
+        # frozen quantizer can carry hundreds of cells — above k=16 the
+        # per-batch assignment runs as the vectorized NumPy kernel
+        # (bit-identical); a vector not exactly dim wide raises
+        dim = meta["dim"]
+        assigned = _assign_multi_cols(
+            base, [(0, dim, meta["centroids"])], dim
+        ).withColumnRenamed("__cl0", "cluster")
 
         # stage 1: within-batch min-id ε-ball (the batch operator's rule)
         a, b = assigned.alias("a"), assigned.alias("b")

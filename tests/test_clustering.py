@@ -334,6 +334,39 @@ def test_null_vectors_excluded_everywhere(spark):
                        dim=2).collect()[0]["n"] == 10
 
 
+@pytest.mark.parametrize("width", [3, 5], ids=["short", "long"])
+def test_ragged_vectors_rejected_everywhere(spark, tmp_path, width):
+    """Width rule: every non-NULL vector is exactly as wide as the
+    fitted dim. One short or long vector among 4-wide ones raises on
+    every path through the one assignment function — fit, PQ fit,
+    assignment and the IVF-PQ build — in both the expression arm and
+    the NumPy kernel arm (k > ASSIGN_EXPR_MAX_K), instead of averaging
+    a short row into some dims or routing a long one silently."""
+    from dataprofiler_spark.operators import ann_index as ai
+
+    rows = [(i, [float(i % 5), float(i % 3), 1.0, float(i)])
+            for i in range(20)]
+    rows.append((20, [float(x) for x in range(width)]))
+    df = spark.createDataFrame(rows, "id long, v array<double>")
+    calls = {
+        "kmeans_fit": lambda: cl.kmeans_fit(df, "id", "v", k=2, iters=2),
+        "kmeans_fit_kernel": lambda: cl.kmeans_fit(df, "id", "v", k=18,
+                                                   iters=1),
+        "pq_fit": lambda: cl.pq_fit(df, "id", "v", m=2, k_codes=2,
+                                    iters=1, dim=4),
+        "kmeans_assign": lambda: cl.kmeans_assign(df, "id", "v", k=2,
+                                                  iters=1).collect(),
+        "ivf_build": lambda: ai.ivf_build(
+            df, "id", "v", str(tmp_path / "ivf"), n_centroids=2,
+            iters=1, pq_m=2, pq_codes=2),
+    }
+    for name, call in calls.items():
+        with pytest.raises(Exception, match=f"vector width {width} "
+                                            "!= fitted dim 4"):
+            call()
+            pytest.fail(f"{name} accepted a {width}-wide vector")
+
+
 def test_pq_audit_semantics(spark):
     """Perfectly code-book-representable data reconstructs exactly:
     vectors drawn from k_codes distinct subvector patterns give zero
@@ -460,28 +493,35 @@ def test_assign_paths_bit_identical(spark):
     (distance, index) lexicographic tie-break. Adversarial inputs:
     duplicated centroids (exact ties), near-tie perturbations at 1e-15,
     float32 vectors (upcast before subtraction, as the expression
-    casts), negative and denormal-ish values."""
+    casts), negative and denormal-ish values — over the whole vector
+    and over a slice that starts past 0 (the PQ encoder's spec)."""
     import numpy as np
 
     from dataprofiler_spark.operators import clustering as clus
 
     rng = np.random.default_rng(11)
     k, dim, n = 24, 16, 200            # k > ASSIGN_EXPR_MAX_K
+    start, width = 5, 8                # sliced spec, start > 0
     assert k > clus.ASSIGN_EXPR_MAX_K
     cents = rng.normal(0, 1, (k, dim))
     cents[7] = cents[3]                 # exact duplicate -> index tie
     cents[12] = cents[5] + 1e-15        # near-tie
     cents = [[float(x) for x in c] for c in cents]
+    sliced = [c[start:start + width] for c in cents]
     vecs = rng.normal(0, 1, (n, dim))
     vecs[:50] = np.asarray(cents)[rng.integers(0, k, 50)]  # on-centroid
     rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
     for typ in ("array<double>", "array<float>"):
         df = spark.createDataFrame(rows, f"id long, v {typ}")
-        fast = {r["id"]: r["cluster"]
-                for r in clus._assign_df(df, cents).collect()}
-        slow = {r["id"]: r["cluster"] for r in df.select(
-            "id", clus._assign_expr(F.col("v"), cents).cast("int")
-            .alias("cluster")).collect()}
+        fast = {(r["id"], r["__cl0"], r["__cl1"])
+                for r in clus._assign_multi_cols(
+                    df, [(0, dim, cents), (start, width, sliced)],
+                    dim).collect()}
+        slow = {(r["id"], r["a"], r["b"]) for r in df.select(
+            "id",
+            clus._assign_expr(F.col("v"), cents).cast("int").alias("a"),
+            clus._assign_expr(F.slice(F.col("v"), start + 1, width),
+                              sliced).cast("int").alias("b")).collect()}
         assert fast == slow, typ
 
 
@@ -683,17 +723,17 @@ def test_two_level_cells_edge_shapes(spark):
     assert set(kept) == expect
 
 
-def test_kmeans_fit_multi_matches_sequential(spark):
-    """The fused multi-spec fit (r12: one init collect + one scan per
-    Lloyd round for ALL specs) must reproduce m independent
-    ``kmeans_fit`` runs over the same slices BIT-FOR-BIT — the integer
-    partial sums are order-independent, so regrouping by a spec key
-    cannot drift. Covers: disjoint PQ-style slices, an overlapping
-    full-vector spec (the ivf_pq coarse+books fusion), mixed per-spec
-    iters, and the k > ASSIGN_EXPR_MAX_K kernel path."""
+def test_kmeans_fit_multi_matches_oracle(spark, duck):
+    """Every spec of the fused multi-spec fit (one init collect + one
+    scan per Lloyd round for ALL specs) must equal the DuckDB
+    ``_kmeans_ctes`` oracle run over that spec's slice alone,
+    BIT-FOR-BIT — the integer partial sums are order-independent, so
+    regrouping by a spec key cannot drift. Covers: disjoint PQ-style
+    slices, an overlapping full-vector spec (the ivf_pq coarse+books
+    fusion; ``kmeans_fit`` is this spec alone), mixed per-spec iters,
+    and the k > ASSIGN_EXPR_MAX_K kernel path."""
     import numpy as np
-
-    from dataprofiler_spark.operators import clustering as clus
+    import pandas as pd
 
     rng = np.random.default_rng(7)
     n, dim = 120, 8
@@ -701,20 +741,27 @@ def test_kmeans_fit_multi_matches_sequential(spark):
             for i in range(n)]
     df = spark.createDataFrame(rows, "id long, v array<double>")
 
-    def seq_fit(start, width, k, iters):
-        sliced = df.select(F.col("id"),
-                           F.slice(F.col("v"), start + 1, width).alias("v"))
-        return cl.kmeans_fit(sliced, "id", "v", k=k, iters=iters)
-
     specs = [(0, 4, 3, 2), (4, 4, 5, 1), (None, None, 2, 2),
              (2, 4, 18, 2)]           # last one forces the kernel path
-    expected = [seq_fit(0, 4, 3, 2), seq_fit(4, 4, 5, 1),
-                cl.kmeans_fit(df, "id", "v", k=2, iters=2),
-                seq_fit(2, 4, 18, 2)]
     fused = cl.kmeans_fit_multi(df, "id", "v", specs)
-    assert fused == expected
+    assert fused[2] == cl.kmeans_fit(df, "id", "v", k=2, iters=2)
 
-    # k > n guard matches the sequential error
+    duck.register("km_multi", pd.DataFrame(
+        {"id": [r[0] for r in rows], "v": [r[1] for r in rows]}))
+    try:
+        for (start, width, k, iters), got in zip(specs, fused):
+            start, width = start or 0, width or dim
+            ctes = cl._kmeans_ctes(
+                "km_multi", "id", "v", k, iters, width,
+                vec_expr=f"(v::DOUBLE[])[{start + 1}:{start + width}]")
+            want = [list(r[0]) for r in duck.sql(
+                f"WITH {ctes} SELECT v FROM c{iters} ORDER BY cl"
+            ).fetchall()]
+            assert got == want, (start, width, k, iters)
+    finally:
+        duck.unregister("km_multi")
+
+    # k > n guard
     with pytest.raises(ValueError, match="exceeds"):
         cl.kmeans_fit_multi(df, "id", "v", [(0, 4, n + 1, 1)])
 

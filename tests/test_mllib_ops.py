@@ -183,23 +183,27 @@ def test_ivf_build_quantizer_variants(spark, sf_dir, tmp_path):
                      quantizer="hnsw")
 
 
-def test_ivf_pq_persisted_matches_inline(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("pq_codes", [4, 24])
+def test_ivf_pq_persisted_matches_inline(spark, sf_dir, tmp_path,
+                                         pq_codes):
     """The durable IVF-PQ path (ivf_build(pq_m=..) + ivf_query_adc) must
     reproduce clustering.ivf_pq_topk's ranking exactly for the same
     settings — same coarse cells, same codebooks, same fixed-point ADC
-    tables — and its pruned scan must never read the vector column."""
+    tables — and its pruned scan must never read the vector column.
+    pq_codes=24 (> ASSIGN_EXPR_MAX_K) encodes the codes with the NumPy
+    kernel on both sides."""
     from dataprofiler_spark.operators import ann_index as ai
     from dataprofiler_spark.operators import clustering as cl
 
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     path = str(tmp_path / "ivfpq")
     meta = ai.ivf_build(emb, "vec_id", "embedding", path, n_centroids=4,
-                        quantizer="det", iters=1, pq_m=4, pq_codes=4,
-                        pq_iters=1)
+                        quantizer="det", iters=1, pq_m=4,
+                        pq_codes=pq_codes, pq_iters=1)
     assert meta["pq_m"] == 4
 
     inline = cl.ivf_pq_topk(emb, "vec_id", "embedding", k_clusters=4,
-                            iters=1, m=4, k_codes=4, pq_iters=1,
+                            iters=1, m=4, k_codes=pq_codes, pq_iters=1,
                             nprobe=2, n_queries=1, k=5, dim=64).collect()
     qid = inline[0]["query_id"]
     qrow = emb.where(F.col("vec_id") == qid).head()

@@ -19,9 +19,33 @@ SF001_PINNED = {"cnn_labeler_customer", "ner_spans_orders",
                 "cnn_head_tuned_customer"}
 
 
+# The vector family (k-means / IVF / PQ / ADC / SemDeDup) replays in the
+# default gate: these rows share one assignment, fit and ADC
+# implementation, so a drift there must fail every run, not only the
+# nightly one.
+VECTOR_FAMILY = [
+    "kmeans_assign_embeddings", "kmeans_clusters_embeddings",
+    "cluster_sample_embeddings", "embedding_outliers_embeddings",
+    "ivf_topk_embeddings", "label_centroid_audit_embeddings",
+    "pq_audit_embeddings", "ivf_pq_topk_embeddings",
+    "ivf_pq_residual_topk_embeddings", "ann_index_query_embeddings",
+    "ann_index_pq_query_embeddings", "semantic_dedup_embeddings",
+]
+
+
 @pytest.mark.nightly
 @pytest.mark.parametrize("name", sorted(SPARK_QUERIES))
 def test_query_matches_oracle(name, spark, duck, sf_dir):
+    _assert_matches_oracle(name, spark, duck, sf_dir)
+
+
+@pytest.mark.parametrize("name", VECTOR_FAMILY)
+def test_vector_family_matches_oracle(name, spark, duck, sf_dir):
+    assert name in ORACLE_SQL
+    _assert_matches_oracle(name, spark, duck, sf_dir)
+
+
+def _assert_matches_oracle(name, spark, duck, sf_dir):
     sdf = SPARK_QUERIES[name](spark, sf_dir).toPandas()
     if name not in ORACLE_SQL or (
             name in SF001_PINNED and not sf_dir.rstrip("/").endswith("sf0.01")):

@@ -482,3 +482,48 @@ def test_flat_report_consistent_with_deterministic_slice(spark):
                 assert float(flat[key]) == vn, (col, stat)
                 checked += 1
     assert checked >= 20  # the overlap is real, not vacuously empty
+
+
+def _count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs on this thread, counted through a job
+    group (PySpark pins Python threads to JVM threads, so the group's
+    local property reaches every job the call submits)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"job-budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_vector_ops_job_budgets(spark, sf_dir, tmp_path):
+    """Per-operator job budgets for the k-means / PQ / ADC family: an
+    added Spark action fails here instead of surfacing later as a bench
+    drift. kmeans_fit = init collect + 2 per Lloyd round (AQE runs the
+    shuffle map stage as its own job); pq_fit = one fused fit; the
+    build adds its own fit, the write and the centroid table; a query
+    reads the centroid table and scans the probed cells."""
+    from dataprofiler_spark.operators import ann_index as ai
+    from dataprofiler_spark.operators import clustering as cl
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    path = str(tmp_path / "ivfpq")
+    q = [float(x) for x in emb.orderBy("vec_id").head()["embedding"]]
+    counts = {
+        "kmeans_fit": _count_jobs(spark, lambda: cl.kmeans_fit(
+            emb, "vec_id", "embedding", k=4, iters=2)),
+        "pq_fit": _count_jobs(spark, lambda: cl.pq_fit(
+            emb, "vec_id", "embedding", m=4, k_codes=4, iters=1)),
+        "ivf_build": _count_jobs(spark, lambda: ai.ivf_build(
+            emb, "vec_id", "embedding", path, n_centroids=4,
+            quantizer="det", iters=1, pq_m=4, pq_codes=4, pq_iters=1)),
+        "ivf_query_adc": _count_jobs(spark, lambda: ai.ivf_query_adc(
+            spark, path, q, k=5, nprobe=2).collect()),
+    }
+    assert counts == {"kmeans_fit": 5, "pq_fit": 3, "ivf_build": 8,
+                      "ivf_query_adc": 4}
