@@ -23,10 +23,17 @@ from pyspark.sql import functions as F
 
 
 def _aligned_counts(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
-    a = df_a.groupBy(F.col(col).cast("string").alias("value")).agg(
-        F.count(F.lit(1)).alias("cnt_a"))
-    b = df_b.groupBy(F.col(col).cast("string").alias("value")).agg(
-        F.count(F.lit(1)).alias("cnt_b"))
+    """Per-category (value, cnt_a, cnt_b), zero-filled. NULL is not a
+    category: the reference splits nulls out before column profiling
+    (clean_data_and_get_base_stats, profile_builder.py:536-676), and
+    null-rate drift is the diff's null stats. streaming/drift.py
+    applies the same rule."""
+    a = (df_a.where(F.col(col).isNotNull())
+         .groupBy(F.col(col).cast("string").alias("value"))
+         .agg(F.count(F.lit(1)).alias("cnt_a")))
+    b = (df_b.where(F.col(col).isNotNull())
+         .groupBy(F.col(col).cast("string").alias("value"))
+         .agg(F.count(F.lit(1)).alias("cnt_b")))
     return (
         a.join(b, "value", "full_outer")
         .select(
@@ -64,9 +71,9 @@ def oracle_categorical_psi_sql(table_a: str, table_b: str, col: str,
                                round_digits: int = 6) -> str:
     return f"""
 WITH a AS (SELECT CAST({col} AS VARCHAR) AS value, COUNT(*) AS cnt_a
-           FROM {table_a} GROUP BY 1),
+           FROM {table_a} WHERE {col} IS NOT NULL GROUP BY 1),
 b AS (SELECT CAST({col} AS VARCHAR) AS value, COUNT(*) AS cnt_b
-      FROM {table_b} GROUP BY 1),
+      FROM {table_b} WHERE {col} IS NOT NULL GROUP BY 1),
 j AS (SELECT COALESCE(a.value, b.value) AS value,
              COALESCE(cnt_a, 0) AS cnt_a, COALESCE(cnt_b, 0) AS cnt_b
       FROM a FULL OUTER JOIN b ON a.value = b.value),
@@ -111,9 +118,9 @@ def oracle_chi2_sql(table_a: str, table_b: str, col: str,
                     round_digits: int = 6) -> str:
     return f"""
 WITH a AS (SELECT CAST({col} AS VARCHAR) AS value, COUNT(*) AS cnt_a
-           FROM {table_a} GROUP BY 1),
+           FROM {table_a} WHERE {col} IS NOT NULL GROUP BY 1),
 b AS (SELECT CAST({col} AS VARCHAR) AS value, COUNT(*) AS cnt_b
-      FROM {table_b} GROUP BY 1),
+      FROM {table_b} WHERE {col} IS NOT NULL GROUP BY 1),
 j AS (SELECT COALESCE(a.value, b.value) AS value,
              COALESCE(cnt_a, 0) AS cnt_a, COALESCE(cnt_b, 0) AS cnt_b
       FROM a FULL OUTER JOIN b ON a.value = b.value),

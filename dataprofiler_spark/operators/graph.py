@@ -20,48 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataprofiler_spark.session import _checkpoint_tracking, _release_rdds
+
 SRC_KEYWORDS = ("source", "src", "from", "node_id_1", "start")
 DST_KEYWORDS = ("target", "destination", "dst", "to", "node_id_2", "end")
-
-
-def _persistent_rdd_ids(sc) -> set[int]:
-    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
-
-
-def _checkpoint_tracking(df: DataFrame, eager: bool = True
-                         ) -> tuple[DataFrame, set[int]]:
-    """localCheckpoint ``df``; also return the ids of the RDDs
-    the checkpoint persisted, so the caller can release them once the
-    snapshot is superseded. ``eager=False`` defers materialization to
-    the caller's NEXT action over the frame (the persistent-RDD id
-    registers at persist time, so the tracking works either way) — use
-    it when the loop already runs an action per round that reads the
-    frame, saving one full job per iteration (r13,
-    connected_components' convergence check).
-
-    localCheckpoint persists its materialized RDD and nothing ever
-    unpersists it — in an iterative loop that leaks one MEMORY_AND_DISK
-    snapshot of the full label frame PER ROUND until the JVM
-    ContextCleaner happens to collect them. On a long-lived session at
-    scale that is an unbounded storage-memory leak, so each round frees
-    the snapshot it supersedes (AFTER the last job that reads it — a
-    localCheckpoint's lineage is truncated, so unpersisting it while
-    still referenced loses the data, it cannot be recomputed); only the
-    FINAL checkpoint (which backs the returned frame) is left to the
-    ContextCleaner."""
-    sc = df.sparkSession.sparkContext
-    before = _persistent_rdd_ids(sc)
-    out = df.localCheckpoint(eager=eager)
-    added = _persistent_rdd_ids(sc) - before
-    return out, added
-
-
-def _release_rdds(sc, ids: set[int]) -> None:
-    jmap = sc._jsc.getPersistentRDDs()
-    for rid in ids:
-        jrdd = jmap.get(rid)
-        if jrdd is not None:
-            jrdd.unpersist(False)
 
 
 def detect_edge_columns(columns: list[str]) -> tuple[str, str] | None:

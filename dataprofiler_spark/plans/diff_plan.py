@@ -92,8 +92,12 @@ def profile_sides(df: DataFrame, side_col, options=None,
         group_rows = [first]
     else:
         from concurrent.futures import ThreadPoolExecutor
+
+        from dataprofiler_spark.session import submit_inheriting
         with ThreadPoolExecutor(min(len(groups) - 1, 8)) as ex:
-            group_rows = [first] + list(ex.map(run_group, groups[1:]))
+            futs = [submit_inheriting(ex, tagged.sparkSession, run_group, g)
+                    for g in groups[1:]]
+            group_rows = [first] + [f.result() for f in futs]
 
     by_side: dict = {}
     for rows in group_rows:

@@ -1,21 +1,32 @@
-"""The Profiler — full-dataset profile in TWO Spark jobs (two scans).
+"""The Profiler — full-dataset profile in TWO passes over the data.
 
 Reference lifecycle (profile_builder.py:2789-3040) runs per-column Python
 with multiprocessing pools; the Spark-first plan instead batches:
 
-  job 1  ONE wide df.agg(): per-column null counts (SQL NULL + null-regex
-         for strings), type-match counts, numeric power stats (count/min/
-         max/sum/var/skew/kurt → central moments for mergeable state),
-         zeros/negatives, text length stats, datetime min/max, approx
-         distinct per column, row-null stats, and approx unique-row count
-         (HLL over xxhash64) — all in one pass over the data.
-  job 2  ONE fused melted groupBy computing BOTH category counts of all
-         candidate columns (gated by job 1's approx distincts — the
-         reference's stop condition applied *before* spending the
-         shuffle) AND equal-width histogram buckets of all numeric
-         columns (bin edges from job 1's min/max; bin count via the
-         numpy-style estimators in operators/histogram.py). One scan,
-         one shuffle, for both operator families.
+  pass 1  ONE wide aggregate: per-column null counts (SQL NULL +
+          null-regex for strings), type-match counts, numeric power
+          stats (count/min/max/sum/var/skew/kurt → central moments for
+          mergeable state), zeros/negatives, text length stats,
+          datetime min/max, approx distinct per column, row-null stats,
+          and approx unique-row count (HLL over xxhash64). It is split
+          into bounded-width expression groups (_wide_agg_expr_groups),
+          each a column-pruned 1-row aggregate collected concurrently.
+  pass 2  ONE fused melted groupBy computing BOTH category counts of all
+          candidate columns (gated by pass 1's approx distincts — the
+          reference's stop condition applied *before* spending the
+          shuffle) AND equal-width histogram buckets of all numeric
+          columns (bin edges from pass 1's min/max; bin count via the
+          numpy-style estimators in operators/histogram.py). One scan,
+          one shuffle, for both operator families.
+
+Passes, actions and jobs are different counts. The two passes are one
+collect per wide-agg group plus one for the counts, and a 5-row sample
+action overlaps the counts pass. Spark turns these actions into more
+jobs: AQE runs every shuffle map stage as its own job, and an
+under-partitioned local input is checkpointed once (one more job) so
+all passes share its partitioning. The lineitem profile at sf0.001 is
+22 jobs, a 4-column table 17; tests/test_plans.py
+(test_profile_engine_job_budgets) pins both.
 
 Per-column work never spawns per-column jobs (SURVEY §4 anti-pattern
 note): expressions fuse into whole-stage codegen; partial aggregation
@@ -37,6 +48,7 @@ from __future__ import annotations
 
 import math
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -46,6 +58,9 @@ from pyspark.sql.types import (ArrayType, DateType, NumericType, StringType,
 from dataprofiler_spark.functions.nulls import DEFAULT_NULL_SPEC, NullSpec
 from dataprofiler_spark.functions.types import DATETIME_FORMATS
 from dataprofiler_spark.operators.histogram import auto_bin_count
+from dataprofiler_spark.session import (_checkpoint_tracking,
+                                        _release_rdds, ensure_parallelism,
+                                        submit_inheriting)
 from dataprofiler_spark.state import (CategoricalState, ColumnState,
                                       DatasetState, DatetimeState,
                                       NumericState, TextState, VectorState)
@@ -357,8 +372,8 @@ class Profiler:
             if target < n:
                 df = df.sample(sampling_meta["fraction"],
                                seed=opt.sample_seed)
-        from dataprofiler_spark.session import ensure_parallelism
         ens = ensure_parallelism(df)
+        ckpt_ids: set[int] = set()
         if ens is not df:
             # Under-partitioned LOCAL input (one small parquet split):
             # materialize the round-robin exchange once so every
@@ -366,10 +381,19 @@ class Profiler:
             # partitioning instead of each re-running a full-width
             # exchange (lineitem sf0.1 cold min-of-3: 5.8 s → 4.8 s).
             # At real scale ensure_parallelism is a no-op and nothing
-            # is ever materialized.
-            ens = ens.localCheckpoint(eager=True)
-        df = ens
+            # is ever materialized. The snapshot is released once the
+            # last pass over it is done.
+            ens, ckpt_ids = _checkpoint_tracking(ens, eager=True)
+        try:
+            return self._profile_passes(ens, sampling_meta)
+        finally:
+            _release_rdds(ens.sparkSession.sparkContext, ckpt_ids)
 
+    def _profile_passes(self, df: DataFrame,
+                        sampling_meta: dict) -> DatasetState:
+        """Every Spark pass of one profile over the (sampled,
+        parallelized) input ``df``."""
+        opt = self.options
         fields = df.schema.fields
         numeric_cols = [f.name for f in fields if isinstance(f.dataType, NumericType)]
         string_cols = [f.name for f in fields if isinstance(f.dataType, StringType)]
@@ -393,10 +417,11 @@ class Profiler:
             # semantics are unchanged — each group is a plain global agg
             # over the SAME (possibly sampled) DataFrame lineage, so all
             # groups see identical rows.
-            from concurrent.futures import ThreadPoolExecutor
             with ThreadPoolExecutor(min(len(groups), 8)) as ex:
-                rows = list(ex.map(
-                    lambda g: df.agg(*g).collect()[0], groups))
+                futs = [submit_inheriting(
+                    ex, df.sparkSession,
+                    lambda g: df.agg(*g).collect()[0], g) for g in groups]
+                rows = [f.result() for f in futs]
             merged: dict = {}
             for r in rows:
                 merged.update(r.asDict())
@@ -409,7 +434,7 @@ class Profiler:
         state.sampling = sampling_meta
         t_assemble = time.perf_counter() - t0
 
-        # job 2: ONE fused melted pass for BOTH category counts (gated
+        # pass 2: ONE fused melted pass for BOTH category counts (gated
         # candidates) AND histogram buckets (all numeric columns). Each is
         # a (tag, column, key) → count aggregation; fusing them halves the
         # number of full-data scans (2 total instead of 3) — at 100 TB the
@@ -432,12 +457,12 @@ class Profiler:
         # the 5-row sample job overlaps the counts shuffle (independent
         # jobs; Spark's scheduler runs them concurrently) — it otherwise
         # serializes ~1 job-launch latency onto the critical path
-        from concurrent.futures import ThreadPoolExecutor
         t_s0 = time.perf_counter()
         want_samples = "samples" not in opt.disabled_stats
         t_counts = 0.0
         with ThreadPoolExecutor(1) as sample_ex:
-            sample_rows = sample_ex.submit(
+            sample_rows = submit_inheriting(
+                sample_ex, df.sparkSession,
                 lambda: df.limit(5).collect()) if want_samples else None
             if candidates or hist_specs:
                 t_c0 = time.perf_counter()
@@ -478,7 +503,7 @@ class Profiler:
         # the counts pass was disabled)
         state.times["samples"] = max(0.0, t_samples_wall - t_counts)
 
-        # opt-in job 4: order detection over an explicit ordering (Spark
+        # opt-in pass: order detection over an explicit ordering (Spark
         # DataFrames are unordered — SURVEY §7.4 risk 2; ONE window sort
         # classifies every column)
         if opt.order_by:
@@ -486,7 +511,7 @@ class Profiler:
             self._order_pass(df, state, opt.order_by)
             state.times["order"] = time.perf_counter() - t0
 
-        # opt-in job 5: per-format match counts for string columns that
+        # opt-in pass: per-format match counts for string columns that
         # inferred as datetime (datetime_column_profile.py:245-345)
         if opt.detect_datetime_formats:
             dt_strings = [c for c in string_cols

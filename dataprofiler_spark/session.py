@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
 
 # Tuned for correctness at any scale; sizes that are cluster-dependent are
 # left overridable via normal Spark conf mechanisms.
@@ -30,6 +31,15 @@ _SCALE_DEFAULTS: dict[str, str] = {
     "spark.sql.files.maxPartitionBytes": "134217728",
     # Ensure timestamp semantics are stable across engines.
     "spark.sql.session.timeZone": "UTC",
+    # Compiled generated-code classes kept per JVM (Spark default 100,
+    # LRU). One pass of the profile plan, snapshot diff and streaming
+    # monitors needs ~182 distinct classes and one pass of the corpus
+    # operators ~224, so at 100 every class is evicted before its next
+    # use and each warm call recompiles (Janino + JIT) what it compiled
+    # last time. 1000 holds > 4x the larger working set. Static conf:
+    # read once per JVM at the first codegen, so it must be set before
+    # getOrCreate (a caller-built session keeps Spark's 100).
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -170,3 +180,52 @@ def unpersist_plan(df, blocking: bool = False) -> int:
     if frames:
         df._dps_persisted = []
     return len(frames)
+
+
+def submit_inheriting(ex, spark: SparkSession, fn, *args):
+    """``ex.submit(fn, *args)`` with the calling thread's Spark local
+    properties (job group, description, job tags, scheduler pool)
+    copied into the pool thread, so a caller's ``setJobGroup`` /
+    ``cancelJobGroup`` / ``addJobTag`` covers the jobs a plan runs
+    concurrently on its behalf. Wraps per submission: each call gets
+    its own copy, because Spark SQL writes its execution id into the
+    running thread's properties."""
+    return ex.submit(inheritable_thread_target(spark)(fn), *args)
+
+
+def _persistent_rdd_ids(sc) -> set[int]:
+    return {int(k) for k in sc._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _checkpoint_tracking(df: DataFrame, eager: bool = True
+                         ) -> tuple[DataFrame, set[int]]:
+    """localCheckpoint ``df``; also return the ids of the RDDs
+    the checkpoint persisted, so the caller can release them once the
+    snapshot is no longer read. ``eager=False`` defers materialization
+    to the caller's NEXT action over the frame (the persistent-RDD id
+    registers at persist time, so the tracking works either way) — use
+    it when a loop already runs an action per round that reads the
+    frame, saving one full job per iteration (connected_components'
+    convergence check).
+
+    localCheckpoint persists its materialized RDD and nothing ever
+    unpersists it — every call leaks one MEMORY_AND_DISK snapshot until
+    the JVM ContextCleaner happens to collect it. On a long-lived
+    session (an iterative loop, a profile per micro-batch) that is an
+    unbounded storage-memory leak, so callers free each snapshot with
+    :func:`_release_rdds` AFTER the last job that reads it — a
+    localCheckpoint's lineage is truncated, so unpersisting it while
+    still referenced loses the data, it cannot be recomputed."""
+    sc = df.sparkSession.sparkContext
+    before = _persistent_rdd_ids(sc)
+    out = df.localCheckpoint(eager=eager)
+    added = _persistent_rdd_ids(sc) - before
+    return out, added
+
+
+def _release_rdds(sc, ids: set[int]) -> None:
+    jmap = sc._jsc.getPersistentRDDs()
+    for rid in ids:
+        jrdd = jmap.get(rid)
+        if jrdd is not None:
+            jrdd.unpersist(False)

@@ -13,8 +13,10 @@ O(categories) driver state, no growing state store.
 
 Semantics match operators/drift.py exactly where the framing allows:
   * categorical: identical smoothing ((c+1)/(n+k), k = aligned category
-    count) — a micro-batch's PSI equals drift.categorical_psi(baseline,
-    batch) run in batch mode (pinned by tests/test_streaming_drift.py).
+    count) and the same NULL rule (NULL is not a category; null-rate
+    drift is the profile diff's null stats) — a micro-batch's PSI
+    equals drift.categorical_psi(baseline, batch) run in batch mode
+    (pinned by tests/test_streaming_drift.py).
   * numeric: bin edges are FROZEN from the baseline — a monitor cannot
     re-derive edges from data it hasn't seen yet; out-of-range batch
     values clamp into the edge bins (the standard monitoring
@@ -41,6 +43,15 @@ comparable to post-r5 values for the same data:
 If you alert on absolute PSI thresholds against historical logs,
 re-freeze the baseline and re-record the expected PSI level once after
 upgrading rather than comparing across the seam.
+
+COMPATIBILITY — categorical NULLs: NULL cells no longer form a
+category, in the baseline or in a batch. A monitored categorical column
+that holds NULLs therefore reports a different PSI than before for the
+same data (the old monitor counted NULL as one more key; the batch
+operator, whose full outer join never matched NULL keys, counted it as
+two). Columns without NULLs report the same PSI as before. Re-record
+alert thresholds for NULL-bearing columns, and watch their null rate
+with diff_profiles' null stats.
 """
 
 from __future__ import annotations
@@ -77,7 +88,7 @@ class StreamingDriftMonitor:
         self.sink_path = sink_path
         self.round_digits = round_digits
         self.log: list[dict] = []
-        self._cat_counts: dict[str, list[tuple[str | None, int]]] = {}
+        self._cat_counts: dict[str, list[tuple[str, int]]] = {}
         # col -> (edges, bin-count list); edges are the frozen interior
         # cut points, bucket = #edges strictly below x (clamped by
         # construction to 0..len(edges)).
@@ -93,7 +104,7 @@ class StreamingDriftMonitor:
         # limit(max_categories+1) guard must bound the driver transfer
         # BEFORE a high-cardinality key ships its whole value set
         for col in cat_cols:
-            rows = (baseline_df
+            rows = (baseline_df.where(F.col(col).isNotNull())
                     .groupBy(F.col(col).cast("string").alias("value"))
                     .agg(F.count(F.lit(1)).alias("cnt"))
                     .limit(max_categories + 1).collect())
@@ -177,17 +188,20 @@ class StreamingDriftMonitor:
     # column name can collide
     _ROWS_KEY = "\x00rows"
 
-    def _psi_categorical(self, batch: dict[str | None, int],
+    def _psi_categorical(self, batch: dict[str, int],
                          col: str) -> float | None:
         """PSI over the full outer union of baseline/batch keys, +1
         smoothing on both sides (same formula the r12 per-column Spark
         aggregate computed; moved to the driver over the single-pass
         melted counts — bounded by max_categories, and float-sum order
-        differences land below the round_digits rounding)."""
+        differences land below the round_digits rounding). NULL is not
+        a key; with no key on either side there is no PSI (None, the
+        batch operator's NULL)."""
         base = dict(self._cat_counts[col])
-        keys = sorted((set(base) | set(batch)),
-                      key=lambda v: (v is not None, v))
+        keys = sorted(set(base) | set(batch))
         k = len(keys)
+        if k == 0:
+            return None
         na = sum(base.values())
         nb = sum(batch.values())
         psi = 0.0
@@ -233,7 +247,7 @@ class StreamingDriftMonitor:
                 entries.append(F.struct(
                     F.lit(col).alias("column"),
                     F.col(col).cast("string").alias("key"),
-                    F.lit(True).alias("keep")))
+                    F.col(col).isNotNull().alias("keep")))
             else:
                 edges = self._num_state[col][0]
                 entries.append(F.struct(

@@ -485,9 +485,11 @@ def test_flat_report_consistent_with_deterministic_slice(spark):
 
 
 def _count_jobs(spark, fn) -> int:
-    """Spark jobs ``fn()`` runs on this thread, counted through a job
-    group (PySpark pins Python threads to JVM threads, so the group's
-    local property reaches every job the call submits)."""
+    """Spark jobs ``fn()`` runs, counted through a job group. The group
+    is a local property of this thread; the plans' thread pools submit
+    through ``session.submit_inheriting``, which copies it into their
+    threads, so it reaches every job the call submits
+    (test_count_jobs_sees_pool_jobs)."""
     import uuid
 
     sc = spark.sparkContext
@@ -527,3 +529,125 @@ def test_vector_ops_job_budgets(spark, sf_dir, tmp_path):
     }
     assert counts == {"kmeans_fit": 5, "pq_fit": 3, "ivf_build": 8,
                       "ivf_query_adc": 4}
+
+
+def _next_job_id(spark) -> int:
+    """The scheduler's global job counter: every job the session ran,
+    from any thread."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_count_jobs_sees_pool_jobs(spark, sf_dir):
+    """The profile plan runs its wide-agg groups and its sample job on
+    pool threads; each must carry the caller's job group, or
+    ``sc.cancelJobGroup`` misses them and a budget undercounts."""
+    from dataprofiler_spark import Profiler
+
+    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    j0 = _next_job_id(spark)
+    n = _count_jobs(spark, lambda: Profiler(li).profile())
+    assert n == _next_job_id(spark) - j0
+
+
+def test_profile_releases_input_checkpoint(spark, sf_dir):
+    """The profile plan localCheckpoints an under-partitioned input and
+    frees that snapshot once its passes are done: a profile, or a run
+    of micro-batch updates, leaves no persisted RDD behind."""
+    from dataprofiler_spark import Profiler, StreamingProfiler
+    from dataprofiler_spark.queries import T
+    from dataprofiler_spark.session import ensure_parallelism
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                   .toArray())
+
+    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    assert ensure_parallelism(li) is not li   # the checkpointed path
+    before = persisted()
+    Profiler(li).profile()
+    assert persisted() - before == set()
+    ev = T(spark, sf_dir, "events")
+    sp = StreamingProfiler()
+    for i in range(3):
+        sp.update(ev.where(F.col("event_id") % 3 == i))
+    assert persisted() - before == set()
+
+
+def test_profile_engine_job_budgets(spark, sf_dir):
+    """Per-operator job budgets for the profile engine, counted as the
+    scheduler's global job counter counts them. A profile is one job
+    per wide-agg group, the fused counts pass and its AQE stage jobs,
+    the sample job and the input checkpoint; the diff adds the bounds
+    and side split; each monitor update is one melted pass; the chain's
+    components take one round per hop."""
+    from dataprofiler_spark import Profiler, StreamingDriftMonitor
+    from dataprofiler_spark.operators.graph import connected_components
+    from dataprofiler_spark.plans.diff_plan import diff_snapshots
+    from dataprofiler_spark.queries import T
+    from dataprofiler_spark.streaming.markov import StreamingMarkov
+
+    nation = spark.read.parquet(os.path.join(sf_dir, "nation.parquet"))
+    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    ev = T(spark, sf_dir, "events")
+    batch = ev.where(F.col("event_id") % 4 == 0)
+    mon = StreamingDriftMonitor(ev, {"event_type": "categorical",
+                                     "value": "numeric"})
+    chain = spark.createDataFrame([(i, i + 1) for i in range(5)],
+                                  "src long, dst long")
+    counts = {
+        "profile_small": _count_jobs(
+            spark, lambda: Profiler(nation).profile()),
+        "profile_lineitem": _count_jobs(
+            spark, lambda: Profiler(li).profile()),
+        "diff_snapshots": _count_jobs(
+            spark, lambda: diff_snapshots(ev, "ts")),
+        "drift_update": _count_jobs(spark, lambda: mon.update(batch)),
+        "markov_update": _count_jobs(
+            spark, lambda: StreamingMarkov().update(batch)),
+        "connected_components": _count_jobs(
+            spark, lambda: connected_components(
+                chain, "src", "dst").collect()),
+    }
+    assert counts == {"profile_small": 17, "profile_lineitem": 22,
+                      "diff_snapshots": 21, "drift_update": 2,
+                      "markov_update": 5, "connected_components": 46}
+
+
+def test_warm_calls_reuse_generated_code(spark, sf_dir):
+    """A warm call must not recompile generated code. One pass of the
+    profile / diff / streaming sequence below needs more distinct
+    generated classes than Spark's default codegen cache (100) holds,
+    so at that size the LRU evicts every class before its next use and
+    the second pass recompiles them all. get_spark sizes the cache to
+    the engine's working set, so the second pass compiles nothing."""
+    from dataprofiler_spark import (Profiler, StreamingDriftMonitor,
+                                    StreamingProfiler)
+    from dataprofiler_spark.plans.diff_plan import diff_snapshots
+    from dataprofiler_spark.queries import T
+    from dataprofiler_spark.streaming.markov import StreamingMarkov
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source \
+        .CodegenMetrics
+
+    def compilations() -> int:
+        return metrics.METRIC_COMPILATION_TIME().getCount()
+
+    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    ev = T(spark, sf_dir, "events")
+    batch = ev.where(F.col("event_id") % 4 == 0)
+    mon = StreamingDriftMonitor(ev, {"event_type": "categorical",
+                                     "value": "numeric"})
+
+    def run():
+        Profiler(li).profile()
+        diff_snapshots(ev, "ts")
+        StreamingProfiler().update(batch)
+        mon.update(batch)
+        StreamingMarkov().update(batch)
+
+    c0 = compilations()
+    run()
+    first = compilations() - c0
+    c0 = compilations()
+    run()
+    assert compilations() - c0 == 0, f"warm pass recompiled ({first} cold)"

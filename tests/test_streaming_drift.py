@@ -5,6 +5,7 @@ loudly."""
 
 from __future__ import annotations
 
+import math
 import os
 
 import pytest
@@ -14,11 +15,23 @@ from dataprofiler_spark.operators import drift
 from dataprofiler_spark.streaming.drift import StreamingDriftMonitor
 
 
+# A NULL-bearing categorical column: o_orderstatus, NULL on every
+# URGENT order and on every 5th order key, so the shifted batch is
+# mostly NULL. The same CASE builds it on the DuckDB side.
+_STATUS_OR_NULL = ("CASE WHEN o_orderpriority <> '1-URGENT' "
+                   "AND o_orderkey % 5 <> 0 THEN o_orderstatus END")
+
+
+def _orders(spark, sf_dir):
+    return spark.read.parquet(os.path.join(sf_dir, "orders.parquet")) \
+        .withColumn("status_or_null", F.expr(_STATUS_OR_NULL))
+
+
 @pytest.fixture()
 def split_orders(tmp_path, spark, sf_dir):
     """orders split into two parquet batch files: b0 ~ the baseline
     distribution, b1 deliberately shifted (only URGENT priority)."""
-    src = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    src = _orders(spark, sf_dir)
     flat = str(tmp_path / "stream")
     os.makedirs(flat)
     (src.where(F.col("o_orderkey") % 2 == 0).coalesce(1)
@@ -36,9 +49,10 @@ def split_orders(tmp_path, spark, sf_dir):
 
 
 def test_streaming_psi_matches_batch_operator(spark, sf_dir, split_orders):
-    baseline = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    baseline = _orders(spark, sf_dir)
     mon = StreamingDriftMonitor(
         baseline, {"o_orderpriority": "categorical",
+                   "status_or_null": "categorical",
                    "o_totalprice": "numeric"},
         alert_threshold=0.2)
     schema = baseline.schema
@@ -67,9 +81,70 @@ def test_streaming_psi_matches_batch_operator(spark, sf_dir, split_orders):
         baseline, b1, "o_orderpriority").collect()[0]["psi"]
     assert cat1 == pytest.approx(expected, abs=2e-6)
 
+    # NULL is not a category in either engine, nor in the oracle: the
+    # NULL-bearing column agrees on both batches
+    import duckdb
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW base AS SELECT *, {_STATUS_OR_NULL} AS "
+            f"status_or_null FROM '{os.path.join(sf_dir, 'orders.parquet')}'")
+    con.sql("CREATE VIEW b0 AS SELECT * FROM base WHERE o_orderkey % 2 = 0")
+    con.sql("CREATE VIEW b1 AS SELECT * FROM base "
+            "WHERE o_orderpriority = '1-URGENT'")
+    for entry, view, frame in (
+            (e0, "b0", baseline.where(F.col("o_orderkey") % 2 == 0)),
+            (e1, "b1", b1)):
+        got = entry["psi"]["status_or_null"]
+        batch_op = drift.categorical_psi(
+            baseline, frame, "status_or_null").collect()[0]["psi"]
+        oracle = con.sql(drift.oracle_categorical_psi_sql(
+            "base", view, "status_or_null")).fetchone()[0]
+        assert got == pytest.approx(batch_op, abs=2e-6)
+        assert got == pytest.approx(oracle, abs=2e-6)
+    con.close()
+
     # numeric: same-distribution batch scores near zero with frozen edges
     num0 = e0["psi"]["o_totalprice"]
     assert num0 is not None and abs(num0) < 0.05
+
+
+def test_categorical_nulls_are_not_categories(spark):
+    """Baseline 50 a / 30 b / 20 NULL, batch 10 a / 5 b / 25 NULL: the
+    monitor, the batch PSI and chi² operators and their DuckDB oracles
+    all score the (a, b) distributions only. Before the shared rule the
+    batch operator gave 3.07378 (NULL keys never match in its full
+    outer join, so NULL counted as two categories) and the monitor
+    0.717826 (NULL as one)."""
+    import duckdb
+
+    def frame(n_a, n_b, n_null):
+        return [("a",)] * n_a + [("b",)] * n_b + [(None,)] * n_null
+
+    base_rows, batch_rows = frame(50, 30, 20), frame(10, 5, 25)
+    base = spark.createDataFrame(base_rows, "c string")
+    batch = spark.createDataFrame(batch_rows, "c string")
+    con = duckdb.connect()
+    for name, rows in (("base", base_rows), ("batch", batch_rows)):
+        con.sql(f"CREATE TABLE {name} (c VARCHAR)")
+        con.executemany(f"INSERT INTO {name} VALUES (?)", rows)
+
+    mon = StreamingDriftMonitor(base, {"c": "categorical"})
+    got = mon.update(batch)["psi"]["c"]
+    psi = drift.categorical_psi(base, batch, "c").collect()[0]
+    oracle_psi = con.sql(drift.oracle_categorical_psi_sql(
+        "base", "batch", "c")).fetchone()
+    # the (a, b) counts alone: 50/30 vs 10/5, k = 2
+    pa, pb = (51 / 82, 31 / 82), (11 / 17, 6 / 17)
+    want = round(sum((q - p) * math.log(q / p) for p, q in zip(pa, pb)), 6)
+    for value in (got, psi["psi"], oracle_psi[0]):
+        assert value == pytest.approx(want, abs=2e-6)
+    assert psi["n_categories"] == oracle_psi[1] == 2
+
+    chi2 = drift.chi2_homogeneity(base, batch, "c").collect()[0]
+    oracle_chi2 = con.sql(drift.oracle_chi2_sql(
+        "base", "batch", "c")).fetchone()
+    assert (chi2["chi2"], chi2["dof"]) == tuple(oracle_chi2)
+    assert chi2["dof"] == 1
+    con.close()
 
 
 def test_baseline_cardinality_cap(spark, sf_dir):
