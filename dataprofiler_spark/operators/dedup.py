@@ -615,7 +615,9 @@ def neardup_clusters(df: DataFrame, id_col: str, text_col: str,
     propagation (operators/graph.py) — O(component diameter) rounds of
     two joins + a groupBy, lineage truncated per round via
     localCheckpoint. Near-dup graphs have tiny diameters (clusters are
-    cliques-ish by construction), so rounds ≈ 3-5 in practice; the
+    cliques-ish by construction), so rounds ≈ 3-5 in practice; a pair
+    graph that has not converged after ``max_iter`` rounds raises
+    ``RuntimeError`` (see ``connected_components``). The
     size/canonical assembly is one groupBy + one shuffle join on
     cluster_id."""
     from dataprofiler_spark.operators.graph import connected_components

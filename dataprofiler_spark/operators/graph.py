@@ -76,7 +76,10 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     label changes. Each iteration is two joins + one groupBy; the loop
     runs on the driver but all data stays distributed. localCheckpoint
     truncates the growing lineage (essential at scale — without it the
-    plan doubles every round).
+    plan doubles every round). A round moves a label one hop, so a graph
+    whose diameter is at least ``max_iter`` does not converge: the last
+    round still changes a label and this raises ``RuntimeError`` rather
+    than return unconverged labels.
 
     NULL is not a node: an edge with a NULL endpoint contributes its
     non-NULL side as an isolated node and no edge — otherwise the NULL
@@ -121,6 +124,13 @@ def connected_components(edges: DataFrame, src: str, dst: str,
             labels = new_labels
             if changed == 0:
                 break
+        else:
+            _release_rdds(labels.sparkSession.sparkContext, ckpt_ids)
+            raise RuntimeError(
+                f"connected_components: labels still changing after "
+                f"max_iter={max_iter} rounds; raise max_iter (each round "
+                f"moves a label one hop, so it must exceed the graph's "
+                f"diameter)")
     finally:
         e.unpersist()
     return labels

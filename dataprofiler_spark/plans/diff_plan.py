@@ -6,16 +6,15 @@ reference's ``profiler.diff(other)`` shape, profiler_utils.py:417-667)
 reads the table once per slice plus once for the midpoint bounds. At
 100 TB a user diffing two time-slices of the SAME table wants the scan
 paid once: this plan tags each row with its slice and runs the
-profiler's own wide-aggregate expression set ``groupBy(side)`` instead
-of globally — the exact FILTER-split conditional-aggregation shape the
-diff's SQL oracle uses (report.py ``oracle_profile_diff_sql``). One
-shuffle of two rows; every per-column statistic the wide agg carries
-(nulls, type counts, min/max, all four moments — so the Welch t-test
-too) lands side-split, and the SAME ``diff_profiles`` consumes the two
-states.
+profiler's own wide-agg runner ``groupBy(side)`` instead of globally —
+the exact FILTER-split conditional-aggregation shape the diff's SQL
+oracle uses (report.py ``oracle_profile_diff_sql``). One shuffle of two
+rows; every per-column statistic the wide agg carries (nulls, type
+counts, min/max, all four moments — so the Welch t-test too) lands
+side-split, and the SAME ``diff_profiles`` consumes the two states.
 
-With ``with_distributions`` (default) a SECOND side-split scan — the
-profiler's own fused category/histogram melt over per-side aliases
+A SECOND side-split scan — the profiler's own distribution specs and
+fused category/histogram melt over per-side aliases
 (``_distribution_pass``) — adds the category maps and histograms, so
 the fused diff carries PSI / KS / chi² too: FULL-fidelity at 3 scans
 vs the composed path's ~5. The deterministic diff slice (row-count
@@ -27,15 +26,13 @@ equality against the composed path.
 ``profile_sides`` generalizes beyond two sides — ``Profiler.
 profile_by`` (per-segment profiles) and ``profile_timeline``
 (per-time-bucket profiles, the hypertable-rollup shape) are one
-grouped scan each.
+grouped scan each and carry the wide-agg statistics only.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (ArrayType, DateType, NumericType, StringType,
-                               TimestampNTZType, TimestampType)
 
 _SIDE = "__side"
 
@@ -49,67 +46,21 @@ def profile_sides(df: DataFrame, side_col, options=None,
     wide-agg expression groups run ``groupBy(side)``; each group job
     scans only its pruned columns (same plan shape as the global
     profile, one extra n_groups-row shuffle). Returns {side_value:
-    DatasetState}. Sides absent from the data assemble from an empty
-    LocalRelation (no scan).
+    DatasetState} with the wide-agg statistics only. Sides absent from
+    the data have no entry.
 
     The collected state is O(groups × columns × stats) — bounded by
     ``max_groups`` (an unbounded group column is a spec bug: profile a
-    bucketed expression instead). The first expression group runs
-    alone to trip the guard before the wide concurrent collects."""
-    from dataprofiler_spark.plans.profile_plan import Profiler
+    bucketed expression instead)."""
+    from dataprofiler_spark.plans.profile_plan import Profiler, _column_kinds
     from dataprofiler_spark.session import ensure_parallelism
 
     tagged = df.withColumn(_SIDE, side_col) if not isinstance(
         side_col, str) else df.withColumnRenamed(side_col, _SIDE)
     tagged = ensure_parallelism(tagged)
-
-    p = Profiler(df, options)   # borrowed expression/assembly machinery
-    fields = [f for f in tagged.schema.fields if f.name != _SIDE]
-    numeric_cols = [f.name for f in fields
-                    if isinstance(f.dataType, NumericType)]
-    string_cols = [f.name for f in fields
-                   if isinstance(f.dataType, StringType)]
-    dt_cols = [f.name for f in fields if isinstance(
-        f.dataType, (TimestampType, TimestampNTZType, DateType))]
-    vec_cols = [f.name for f in fields
-                if isinstance(f.dataType, ArrayType)
-                and isinstance(f.dataType.elementType, NumericType)]
-    all_cols = [f.name for f in fields]
-    simple_types = {f.name: f.dataType.simpleString() for f in fields}
-
-    groups = p._wide_agg_expr_groups(all_cols, numeric_cols, string_cols,
-                                     dt_cols, vec_cols)
-
-    def run_group(g):
-        return tagged.groupBy(_SIDE).agg(*g).collect()
-
-    first = run_group(groups[0])
-    if len(first) > max_groups:
-        raise ValueError(
-            f"profile_sides: more than {max_groups} distinct groups in "
-            f"the side column — profile a bucketed expression instead")
-    if len(groups) == 1:
-        group_rows = [first]
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        from dataprofiler_spark.session import submit_inheriting
-        with ThreadPoolExecutor(min(len(groups) - 1, 8)) as ex:
-            futs = [submit_inheriting(ex, tagged.sparkSession, run_group, g)
-                    for g in groups[1:]]
-            group_rows = [first] + [f.result() for f in futs]
-
-    by_side: dict = {}
-    for rows in group_rows:
-        for r in rows:
-            d = r.asDict()
-            side = d.pop(_SIDE)
-            by_side.setdefault(side, {}).update(d)
-
-    states = {
-        side: p._assemble(merged, all_cols, numeric_cols, string_cols,
-                          dt_cols, simple_types, vec_cols)
-        for side, merged in by_side.items()}
+    states, _ = Profiler(df, options)._wide_agg(
+        tagged, _column_kinds(tagged.schema, exclude=_SIDE), key=_SIDE,
+        max_groups=max_groups)
     return states
 
 
@@ -122,30 +73,15 @@ def _distribution_pass(tagged: DataFrame, states: dict, options=None
     other-side rows, and a facade state maps every alias onto the REAL
     per-side ColumnState, so category maps and histograms land in
     place with the exact per-slice semantics of the composed path
-    (identical bin specs: _histogram_specs reads only wide-agg stats,
+    (identical specs: _distribution_specs reads only wide-agg stats,
     which profile_sides already split)."""
     from dataprofiler_spark.plans.profile_plan import Profiler
-    from dataprofiler_spark.state import CategoricalState, DatasetState
+    from dataprofiler_spark.state import DatasetState
 
     p = Profiler(tagged, options)
-    opt = p.options
-    all_cols = [f.name for f in tagged.schema.fields if f.name != _SIDE]
-
     proj, cat_aliases, specs, facade_cols = [], [], [], {}
     for s, st in states.items():
-        n = max(st.row_count, 1)
-        candidates = []
-        if "categorical" not in opt.disabled_stats:
-            for c in all_cols:
-                ad = st.columns[c].approx_distinct
-                if opt.categorical_max_unique is not None and \
-                        ad > opt.categorical_max_unique * 1.2:
-                    continue
-                if ad / n <= opt.categorical_stop_ratio or ad <= 10:
-                    candidates.append(c)
-        side_specs = [] if "histogram" in opt.disabled_stats else \
-            p._histogram_specs(st, [
-                c for c in all_cols if st.columns[c].numeric is not None])
+        candidates, side_specs = p._distribution_specs(st)
         used = set(candidates) | {c for c, *_ in side_specs}
         for c in used:
             alias = f"__d{s}__{c}"
@@ -155,10 +91,6 @@ def _distribution_pass(tagged: DataFrame, states: dict, options=None
         cat_aliases += [f"__d{s}__{c}" for c in candidates]
         specs += [(f"__d{s}__{c}", lo, hi, bins)
                   for c, lo, hi, bins in side_specs]
-        for c in all_cols:
-            if c not in candidates:
-                st.columns[c].categorical = CategoricalState(
-                    categories={}, active=False)
 
     if not proj:
         return
@@ -178,8 +110,21 @@ def _empty_state(spark, schema, options=None):
     return Profiler(empty, options).profile()
 
 
-def diff_frames(df_a: DataFrame, df_b: DataFrame, options=None,
-                with_distributions: bool = True, mode: str = "auto"):
+def _diff_sides(tagged: DataFrame, schema, options=None):
+    """Side 0 vs side 1 of ``tagged``: the side-split profile, its
+    distribution pass, and ``diff_profiles``. A side with no rows
+    profiles as an empty frame of ``schema``."""
+    from dataprofiler_spark.report import diff_profiles
+
+    states = profile_sides(tagged, _SIDE, options)
+    _distribution_pass(tagged, states, options)
+    spark = tagged.sparkSession
+    sa = states.get(0) or _empty_state(spark, schema, options)
+    sb = states.get(1) or _empty_state(spark, schema, options)
+    return diff_profiles(sa, sb), sa, sb
+
+
+def diff_frames(df_a: DataFrame, df_b: DataFrame, options=None):
     """The default ``.diff()`` between two DataFrames (VERDICT r9 item
     8): when the schemas align, run the FUSED side-split plan — tag the
     sides 0/1, union, and push both profiles through one
@@ -187,55 +132,42 @@ def diff_frames(df_a: DataFrame, df_b: DataFrame, options=None,
     for PSI/KS/chi²) — the diff_snapshots shape generalized to two
     arbitrary frames. Same-source slices (two filters of one table)
     collapse to single branch scans; cross-source frames still halve
-    the job count vs composing two full profiles. ``mode="composed"``
-    forces the two-independent-profiles path (also the automatic
-    fallback when schemas differ — a union would be ill-typed).
+    the job count vs composing two full profiles. When the schemas
+    differ a union would be ill-typed, so the two frames are profiled
+    independently and the profiles diffed.
 
     Returns (diff_dict, state_a, state_b), like :func:`diff_snapshots`.
-    Plan equivalence of the two modes is pinned in test_diff_plan.py;
+    Equality with the composed path is pinned in test_diff_plan.py;
     both shapes are driver-oracled (profile_diff_events composed,
     profile_diff_fused_events fused — same oracle SQL)."""
     from dataprofiler_spark.plans.profile_plan import Profiler
     from dataprofiler_spark.report import diff_profiles
 
-    if mode not in ("auto", "fused", "composed"):
-        raise ValueError(f"diff_frames: unknown mode {mode!r}")
     schema_a = [(f.name, f.dataType) for f in df_a.schema.fields]
     schema_b = [(f.name, f.dataType) for f in df_b.schema.fields]
-    if mode == "fused" and schema_a != schema_b:
-        raise ValueError("diff_frames: fused mode needs matching schemas")
-    if mode == "composed" or (mode == "auto" and schema_a != schema_b):
+    if schema_a != schema_b:
         sa = Profiler(df_a, options).profile()
         sb = Profiler(df_b, options).profile()
         return diff_profiles(sa, sb), sa, sb
     tagged = (df_a.withColumn(_SIDE, F.lit(0))
               .unionByName(df_b.withColumn(_SIDE, F.lit(1))))
-    states = profile_sides(tagged, _SIDE, options)
-    if with_distributions and states:
-        _distribution_pass(tagged, states, options)
-    sa = states.get(0) or _empty_state(df_a.sparkSession, df_a.schema,
-                                       options)
-    sb = states.get(1) or _empty_state(df_b.sparkSession, df_b.schema,
-                                       options)
-    return diff_profiles(sa, sb), sa, sb
+    return _diff_sides(tagged, df_a.schema, options)
 
 
 def diff_snapshots(df: DataFrame, ts_col: str, mid: int | None = None,
-                   options=None, with_distributions: bool = True):
+                   options=None):
     """Fused time-slice diff: snapshot A is rows with
     ``unix_micros(ts) < mid`` (mid defaults to the midpoint of the
     observed range; NULL-ts rows belong to neither snapshot), snapshot
     B the rest. ONE bounds aggregate + ONE side-split profile scan
-    (+ ONE side-split counts scan when ``with_distributions``, which
-    adds the category maps and histograms the diff's PSI / KS / chi²
-    read) feed the same ``diff_profiles`` the composed path uses — 3
-    scans for the FULL-fidelity diff vs the composed path's ~5.
+    + ONE side-split counts scan (the category maps and histograms the
+    diff's PSI / KS / chi² read) feed the same ``diff_profiles`` the
+    composed path uses — 3 scans for the FULL-fidelity diff vs the
+    composed path's ~5.
 
     Returns (diff_dict, state_a, state_b). Raises on an empty /
     all-null-ts input — a time-slice of nothing has no midpoint.
     """
-    from dataprofiler_spark.report import diff_profiles
-
     base = df.where(F.col(ts_col).isNotNull())
     if mid is None:
         b = base.agg(F.min(F.unix_micros(ts_col)).alias("mn"),
@@ -247,26 +179,19 @@ def diff_snapshots(df: DataFrame, ts_col: str, mid: int | None = None,
         mid = (b["mn"] + b["mx"]) // 2
     side = F.when(F.unix_micros(F.col(ts_col)) < F.lit(mid),
                   F.lit(0)).otherwise(F.lit(1))
-    tagged = base.withColumn(_SIDE, side)
-    states = profile_sides(tagged, _SIDE, options)
-    if with_distributions and states:
-        _distribution_pass(tagged, states, options)
-    sa = states.get(0) or _empty_state(df.sparkSession, base.schema,
-                                       options)
-    sb = states.get(1) or _empty_state(df.sparkSession, base.schema,
-                                       options)
-    return diff_profiles(sa, sb), sa, sb
+    return _diff_sides(base.withColumn(_SIDE, side), base.schema, options)
 
 
 def profile_timeline(df: DataFrame, ts_col: str, unit: str = "week",
                      options=None, max_groups: int = MAX_GROUPS) -> dict:
-    """Per-time-bucket full profiles from ONE grouped scan — the
+    """Per-time-bucket profiles from ONE grouped scan — the
     hypertable-rollup shape: ``profile_sides`` over
     ``date_trunc(unit, ts)`` gives a profile timeline (per day / week /
     month) at one scan instead of n_buckets scans; consecutive buckets
     feed ``diff_profiles`` for a drift timeline. NULL-ts rows belong to
-    no bucket. Returns {bucket_start_timestamp: DatasetState}, the
-    bucket column itself not profiled."""
+    no bucket. Returns {bucket_start_timestamp: DatasetState} with the
+    wide-agg statistics only (see ``profile_sides``), the bucket column
+    itself not profiled."""
     base = df.where(F.col(ts_col).isNotNull())
     return profile_sides(
         base.withColumn(_SIDE, F.date_trunc(unit, F.col(ts_col))),

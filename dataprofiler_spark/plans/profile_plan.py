@@ -10,14 +10,24 @@ with multiprocessing pools; the Spark-first plan instead batches:
           datetime min/max, approx distinct per column, row-null stats,
           and approx unique-row count (HLL over xxhash64). It is split
           into bounded-width expression groups (_wide_agg_expr_groups),
-          each a column-pruned 1-row aggregate collected concurrently.
-  pass 2  ONE fused melted groupBy computing BOTH category counts of all
-          candidate columns (gated by pass 1's approx distincts — the
-          reference's stop condition applied *before* spending the
-          shuffle) AND equal-width histogram buckets of all numeric
-          columns (bin edges from pass 1's min/max; bin count via the
-          numpy-style estimators in operators/histogram.py). One scan,
-          one shuffle, for both operator families.
+          each a column-pruned aggregate collected concurrently
+          (Profiler._wide_agg).
+  pass 2  ONE fused melted groupBy (_fused_counts_pass) computing BOTH
+          category counts of all candidate columns (gated by pass 1's
+          approx distincts — the reference's stop condition applied
+          *before* spending the shuffle) AND equal-width histogram
+          buckets of all numeric columns (bin edges from pass 1's
+          min/max; bin count via the numpy-style estimators in
+          operators/histogram.py; both chosen by
+          Profiler._distribution_specs). One scan, one shuffle, for
+          both operator families.
+
+The whole-table profile and the side-split profiles of
+plans/diff_plan.py (``profile_by``, ``diff_snapshots``, ``diff_frames``,
+``profile_timeline``) are the same pipeline: one column typing
+(_column_kinds), one wide-agg runner — unkeyed for the whole table,
+``groupBy(side)`` for the sides — and the same distribution specs and
+counts pass.
 
 Passes, actions and jobs are different counts. The two passes are one
 collect per wide-agg group plus one for the counts, and a 5-row sample
@@ -49,11 +59,12 @@ from __future__ import annotations
 import math
 import time
 from concurrent.futures import ThreadPoolExecutor
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (ArrayType, DateType, NumericType, StringType,
-                               TimestampNTZType, TimestampType)
+                               StructType, TimestampNTZType, TimestampType)
 
 from dataprofiler_spark.functions.nulls import DEFAULT_NULL_SPEC, NullSpec
 from dataprofiler_spark.functions.types import DATETIME_FORMATS
@@ -66,6 +77,45 @@ from dataprofiler_spark.state import (CategoricalState, ColumnState,
                                       NumericState, TextState, VectorState)
 
 ISO = "yyyy-MM-dd HH:mm:ss"
+
+# Wide-agg expressions are chunked into independently-collected groups of
+# at most this many aggregates (codegen compile cost is superlinear in
+# aggregate count; groups overlap across the collect thread pool). 24
+# measured best END-TO-END from a cold JVM (lineitem sf0.1 min-of-3:
+# width 40 → 7.2 s, width 24 + shared exchange → 4.8 s); much narrower
+# loses its warm-run gains to per-group codegen compilation.
+WIDE_AGG_GROUP_WIDTH = 24
+
+
+class ColumnKinds(NamedTuple):
+    """The profiled columns of a schema, split by the statistics
+    battery each one gets, plus every column's Spark simple type."""
+    all: list[str]
+    numeric: list[str]
+    string: list[str]
+    datetime: list[str]
+    vector: list[str]
+    simple_types: dict[str, str]
+
+
+def _column_kinds(schema: StructType, exclude: str | None = None
+                  ) -> ColumnKinds:
+    """Type the columns of ``schema``, leaving out ``exclude`` (the side
+    column of a side-split profile)."""
+    fields = [f for f in schema.fields if f.name != exclude]
+
+    def names(*types) -> list[str]:
+        return [f.name for f in fields if isinstance(f.dataType, types)]
+
+    return ColumnKinds(
+        all=[f.name for f in fields],
+        numeric=names(NumericType),
+        string=names(StringType),
+        datetime=names(TimestampType, TimestampNTZType, DateType),
+        vector=[f.name for f in fields
+                if isinstance(f.dataType, ArrayType)
+                and isinstance(f.dataType.elementType, NumericType)],
+        simple_types={f.name: f.dataType.simpleString() for f in fields})
 
 
 def _hist_iqr(counts: list[int], edges: list[float]) -> float:
@@ -147,22 +197,6 @@ class ProfilerOptions:
         # columns) purely for diagnostics — stat values still come from
         # the fused plan. Keys land in DatasetState.times as "stat:<name>".
         detailed_timing: bool = False,
-        # Wide-agg expressions are chunked into independently-collected
-        # groups of at most this many aggregates (codegen compile cost
-        # is superlinear in aggregate count; groups overlap across the
-        # collect thread pool). 24 measured best END-TO-END from a cold
-        # JVM (lineitem sf0.1 min-of-3: width 40 → 7.2 s, width 24 +
-        # shared exchange → 4.8 s); much narrower loses its warm-run
-        # gains to per-group codegen compilation.
-        wide_agg_group_width: int = 24,
-        # Histogram counts compute as a map-side conditional-sum agg
-        # (zero shuffle, no explode) when the total bin count across
-        # columns stays at or under this cap; above it (e.g. explicit
-        # histogram_bins=1000 on a wide table) the bins fall back into
-        # the melted groupBy, whose shuffle width is bounded by bins
-        # regardless. 512 keeps the generated aggregate inside one
-        # comfortable codegen unit.
-        histogram_agg_max_bins: int = 512,
     ):
         self.null_spec = null_spec
         if column_null_values:
@@ -195,8 +229,6 @@ class ProfilerOptions:
         self.detect_datetime_formats = detect_datetime_formats
         self.min_true_samples = min_true_samples
         self.detailed_timing = detailed_timing
-        self.wide_agg_group_width = wide_agg_group_width
-        self.histogram_agg_max_bins = histogram_agg_max_bins
         unknown = set(disabled_stats) - {"histogram", "categorical",
                                          "samples"}
         if unknown:
@@ -332,9 +364,13 @@ class Profiler:
         """Per-group profiles from ONE grouped scan (beyond the
         reference, which would loop whole profiles per segment): the
         same wide-agg expression set runs ``groupBy(group_col)`` and
-        each result row assembles into a full DatasetState — segmented
+        each result row assembles into a DatasetState — segmented
         data-quality reporting (per returnflag, per source, per day) at
-        one scan instead of n_groups scans. ``group_col`` may be a
+        one scan instead of n_groups scans. Each state carries the
+        wide-agg statistics only (counts, nulls, types, moments,
+        extrema, approx distincts): no category maps, histograms or
+        samples, which would cost a second scan. ``diff_frames`` adds
+        the distributions for a two-way split. ``group_col`` may be a
         column name or an expression (e.g. a date bucket). Returns
         {group_value: DatasetState}; the group column itself is not
         profiled. Bounded by ``max_groups`` (plans/diff_plan.py)."""
@@ -394,65 +430,18 @@ class Profiler:
         """Every Spark pass of one profile over the (sampled,
         parallelized) input ``df``."""
         opt = self.options
-        fields = df.schema.fields
-        numeric_cols = [f.name for f in fields if isinstance(f.dataType, NumericType)]
-        string_cols = [f.name for f in fields if isinstance(f.dataType, StringType)]
-        dt_cols = [f.name for f in fields if isinstance(
-            f.dataType, (TimestampType, TimestampNTZType, DateType))]
-        vec_cols = [f.name for f in fields
-                    if isinstance(f.dataType, ArrayType)
-                    and isinstance(f.dataType.elementType, NumericType)]
-        all_cols = [f.name for f in fields]
-        simple_types = {f.name: f.dataType.simpleString() for f in fields}
-
-        t0 = time.perf_counter()
-        groups = self._wide_agg_expr_groups(
-            all_cols, numeric_cols, string_cols, dt_cols, vec_cols)
-        if len(groups) == 1:
-            row = df.agg(*groups[0]).collect()[0]
-        else:
-            # Bounded-width aggregates collected concurrently: compile
-            # cost stays small per group (see _wide_agg_expr_groups) and
-            # the scheduler overlaps the column-pruned scans. Row-level
-            # semantics are unchanged — each group is a plain global agg
-            # over the SAME (possibly sampled) DataFrame lineage, so all
-            # groups see identical rows.
-            with ThreadPoolExecutor(min(len(groups), 8)) as ex:
-                futs = [submit_inheriting(
-                    ex, df.sparkSession,
-                    lambda g: df.agg(*g).collect()[0], g) for g in groups]
-                rows = [f.result() for f in futs]
-            merged: dict = {}
-            for r in rows:
-                merged.update(r.asDict())
-            row = merged
-        t_agg = time.perf_counter() - t0
-
-        t0 = time.perf_counter()
-        state = self._assemble(row, all_cols, numeric_cols, string_cols,
-                               dt_cols, simple_types, vec_cols)
+        kinds = _column_kinds(df.schema)
+        states, times = self._wide_agg(df, kinds)
+        state = states[None]
         state.sampling = sampling_meta
-        t_assemble = time.perf_counter() - t0
 
         # pass 2: ONE fused melted pass for BOTH category counts (gated
         # candidates) AND histogram buckets (all numeric columns). Each is
         # a (tag, column, key) → count aggregation; fusing them halves the
         # number of full-data scans (2 total instead of 3) — at 100 TB the
         # scan IS the cost, so this is a 33% IO cut for the whole profile.
-        t0 = time.perf_counter()
-        n = max(state.row_count, 1)
-        candidates = []
-        if "categorical" not in opt.disabled_stats:
-            for c in all_cols:
-                ad = state.columns[c].approx_distinct
-                if opt.categorical_max_unique is not None and \
-                        ad > opt.categorical_max_unique * 1.2:
-                    continue
-                if ad / n <= opt.categorical_stop_ratio or ad <= 10:
-                    candidates.append(c)
         t_b0 = time.perf_counter()
-        hist_specs = [] if "histogram" in opt.disabled_stats \
-            else self._histogram_specs(state, numeric_cols)
+        candidates, hist_specs = self._distribution_specs(state)
         t_bins = time.perf_counter() - t_b0
         # the 5-row sample job overlaps the counts shuffle (independent
         # jobs; Spark's scheduler runs them concurrently) — it otherwise
@@ -470,23 +459,12 @@ class Profiler:
                 t_counts = time.perf_counter() - t_c0
             sample_rows = sample_rows.result() if want_samples else []
         t_samples_wall = time.perf_counter() - t_s0
-        for c in all_cols:
-            if c not in candidates:
-                state.columns[c].categorical = CategoricalState(
-                    categories={}, active=False)
 
         # Per-phase telemetry (reference wraps each calc in _timeit,
         # base_column_profilers.py:68-81; one wide agg fuses the per-stat
         # work, so the honest granularity here is per phase, with the
         # driver-side finalize steps broken out separately).
-        # wide_agg_groups: how many independently-collected aggregate
-        # groups the wide agg split into (VERDICT r9 watch item — each
-        # group is its own column-pruned scan; ~free on columnar
-        # storage, a re-read on row-oriented sources, so bench
-        # telemetry should see the multiplier).
-        state.times = {"wide_agg": t_agg, "assemble": t_assemble,
-                       "wide_agg_groups": float(len(groups)),
-                       "bin_selection": t_bins,
+        state.times = {**times, "bin_selection": t_bins,
                        "counts_pass": t_counts}
 
         # sample values for the report (reference keeps 5 random samples
@@ -494,7 +472,7 @@ class Profiler:
         # overlapped with the counts pass
         for row_s in sample_rows:
             d = row_s.asDict()
-            for c in all_cols:
+            for c in kinds.all:
                 v = d.get(c)
                 if v is not None and len(state.columns[c].samples) < 5:
                     state.columns[c].samples.append(str(v))
@@ -514,7 +492,7 @@ class Profiler:
         # opt-in pass: per-format match counts for string columns that
         # inferred as datetime (datetime_column_profile.py:245-345)
         if opt.detect_datetime_formats:
-            dt_strings = [c for c in string_cols
+            dt_strings = [c for c in kinds.string
                           if state.columns[c].inferred_type == "datetime"]
             if dt_strings:
                 t0 = time.perf_counter()
@@ -525,8 +503,8 @@ class Profiler:
         # (base_column_profilers.py:68-81) via one timed job per stat
         # family — see ProfilerOptions.detailed_timing.
         if opt.detailed_timing:
-            self._detailed_timing_pass(df, state, numeric_cols, string_cols,
-                                       dt_cols)
+            self._detailed_timing_pass(df, state, kinds.numeric,
+                                       kinds.string, kinds.datetime)
         return state
 
     def _detailed_timing_pass(self, df: DataFrame, state: DatasetState,
@@ -622,8 +600,61 @@ class Profiler:
             if state.columns[c].datetime is not None:
                 state.columns[c].datetime.formats = fmts
 
-    def _wide_agg_expr_groups(self, all_cols, numeric_cols, string_cols,
-                              dt_cols, vec_cols=()):
+    def _wide_agg(self, df: DataFrame, kinds: ColumnKinds,
+                  key: str | None = None, max_groups: int | None = None
+                  ) -> tuple[dict, dict]:
+        """Pass 1: collect every wide-agg expression group over ``df``,
+        grouped by the ``key`` column (none: one global row), and
+        assemble one DatasetState per key value. Returns ({key value
+        (None when unkeyed): state}, wide-agg telemetry).
+
+        The bounded-width groups are collected concurrently: compile
+        cost stays small per group (see _wide_agg_expr_groups) and the
+        scheduler overlaps the column-pruned scans. Every group
+        aggregates the SAME (possibly sampled) DataFrame lineage, so
+        all groups see identical rows. A keyed result is
+        O(key values × columns × stats) on the driver, so a keyed call
+        collects group 0 alone first and raises past ``max_groups``
+        before the wide concurrent collects."""
+        groups = self._wide_agg_expr_groups(kinds)
+        n_groups = len(groups)
+        keys = [key] if key else []
+
+        def collect(g):
+            return df.groupBy(*keys).agg(*g).collect()
+
+        t0 = time.perf_counter()
+        results = []
+        if key:
+            results.append(collect(groups.pop(0)))
+            if len(results[0]) > max_groups:
+                raise ValueError(
+                    f"profile_sides: more than {max_groups} distinct groups "
+                    f"in the side column — profile a bucketed expression "
+                    f"instead")
+        with ThreadPoolExecutor(8) as ex:
+            futs = [submit_inheriting(ex, df.sparkSession, collect, g)
+                    for g in groups]
+            results += [f.result() for f in futs]
+        merged: dict = {}
+        for rows in results:
+            for r in rows:
+                d = r.asDict()
+                merged.setdefault(d.pop(key) if key else None, {}).update(d)
+        t_agg = time.perf_counter() - t0
+
+        t0 = time.perf_counter()
+        states = {k: self._assemble(row, kinds) for k, row in merged.items()}
+        # wide_agg_groups: how many independently-collected aggregate
+        # groups the wide agg split into (VERDICT r9 watch item — each
+        # group is its own column-pruned scan; ~free on columnar
+        # storage, a re-read on row-oriented sources, so bench
+        # telemetry should see the multiplier).
+        return states, {"wide_agg": t_agg,
+                        "assemble": time.perf_counter() - t0,
+                        "wide_agg_groups": float(n_groups)}
+
+    def _wide_agg_expr_groups(self, kinds: ColumnKinds) -> list[list]:
         """The wide-agg expressions, split into independently-aggregable
         groups of bounded width.
 
@@ -635,6 +666,7 @@ class Profiler:
         row-level stats (they need every column); per-type groups chunk
         by column."""
         opt = self.options
+        all_cols = kinds.all
         exprs = [F.count(F.lit(1)).alias("__row_count")]
 
         nulls_in_row = F.lit(0)
@@ -644,7 +676,7 @@ class Profiler:
             if override is not None:
                 is_null = override.is_null(col)
             else:
-                is_null = (opt.null_spec.is_null(col) if c in string_cols
+                is_null = (opt.null_spec.is_null(col) if c in kinds.string
                            else col.isNull())
             nulls_in_row = nulls_in_row + F.when(is_null, 1).otherwise(0)
             exprs.append(F.sum(F.when(is_null, 1).otherwise(0)).alias(f"{c}__nulls"))
@@ -662,7 +694,6 @@ class Profiler:
                          .alias("__uniq"))
 
         groups = [exprs]
-        _MAX_AGGS = self.options.wide_agg_group_width
         cur: list = []
 
         def flush():
@@ -673,26 +704,20 @@ class Profiler:
 
         def add(col_exprs: list):
             nonlocal cur
-            if cur and len(cur) + len(col_exprs) > _MAX_AGGS:
+            if cur and len(cur) + len(col_exprs) > WIDE_AGG_GROUP_WIDTH:
                 flush()
             cur.extend(col_exprs)
 
-        for c in numeric_cols:
+        for c in kinds.numeric:
             add(self._numeric_col_exprs(c))
-        for c in string_cols:
+        for c in kinds.string:
             add(self._string_col_exprs(c))
-        for c in dt_cols:
+        for c in kinds.datetime:
             add(self._dt_col_exprs(c))
-        for c in vec_cols:
+        for c in kinds.vector:
             add(self._vector_col_exprs(c))
         flush()
         return groups
-
-    def _wide_agg_exprs(self, all_cols, numeric_cols, string_cols, dt_cols):
-        """Flat variant of the grouped expressions (plan-shape tests and
-        callers that want the monolithic single-scan aggregate)."""
-        return [e for g in self._wide_agg_expr_groups(
-            all_cols, numeric_cols, string_cols, dt_cols) for e in g]
 
     def _vector_col_exprs(self, c):
         """array<numeric> (embedding) column battery: dimension range +
@@ -779,24 +804,22 @@ class Profiler:
             F.date_format(F.max(col), ISO).alias(f"{c}__dtmax"),
         ]
 
-    def _assemble(self, row, all_cols, numeric_cols, string_cols, dt_cols,
-                  simple_types, vec_cols=()) -> DatasetState:
-        r = row if isinstance(row, dict) else row.asDict()
+    def _assemble(self, r: dict, kinds: ColumnKinds) -> DatasetState:
         n_rows = r["__row_count"]
         state = DatasetState(
             row_count=n_rows,
-            column_order=list(all_cols),
+            column_order=list(kinds.all),
             unique_row_count=r.get("__uniq"),
             rows_with_null=r["__rows_with_null"] or 0,
             rows_all_null=r["__rows_all_null"] or 0,
         )
-        for c in all_cols:
+        for c in kinds.all:
             col = ColumnState(
                 name=c, sample_size=n_rows, null_count=r[f"{c}__nulls"] or 0,
                 approx_distinct=r[f"{c}__approx"] or 0,
             )
             matched = n_rows - col.null_count
-            if c in numeric_cols:
+            if c in kinds.numeric:
                 n = r[f"{c}__n"]
                 varp = r[f"{c}__varp"] or 0.0
                 skew = r[f"{c}__skew"]
@@ -812,12 +835,12 @@ class Profiler:
                     num_zeros=r[f"{c}__zeros"] or 0,
                     num_negatives=r[f"{c}__negs"] or 0,
                 )
-                t = simple_types[c]
+                t = kinds.simple_types[c]
                 kind = "int" if t in ("tinyint", "smallint", "int", "bigint") \
                     else "float"
                 col.type_counts = {kind: n, "float": n} if kind == "int" \
                     else {"float": n}
-            elif c in string_cols:
+            elif c in kinds.string:
                 n = r[f"{c}__n"]
                 lvarp = r[f"{c}__lvarp"] or 0.0
                 col.text = TextState(lengths=NumericState(
@@ -835,12 +858,12 @@ class Profiler:
                         col.datetime = DatetimeState(
                             n=col.type_counts["datetime"],
                             min_ts=r[f"{c}__dtmin"], max_ts=r[f"{c}__dtmax"])
-            elif c in dt_cols:
+            elif c in kinds.datetime:
                 n = r[f"{c}__n"]
                 col.datetime = DatetimeState(
                     n=n, min_ts=r[f"{c}__dtmin"], max_ts=r[f"{c}__dtmax"])
                 col.type_counts = {"datetime": n}
-            elif c in vec_cols:
+            elif c in kinds.vector:
                 col.vector = VectorState(
                     n=r[f"{c}__vn"] or 0,
                     dim_min=r[f"{c}__vdmin"], dim_max=r[f"{c}__vdmax"],
@@ -853,11 +876,35 @@ class Profiler:
             state.columns[c] = col
         return state
 
-    def _histogram_specs(self, state: DatasetState, numeric_cols: list[str]
-                         ) -> list[tuple[str, float, float, int]]:
+    def _distribution_specs(self, state: DatasetState
+                            ) -> tuple[list[str], list[tuple]]:
+        """What the counts pass computes for one assembled state:
+        (categorical candidate columns, histogram specs (column, lo, hi,
+        bins)). Both read only wide-agg statistics. Candidates follow
+        the reference's stop condition on the approx distinct count,
+        applied before the counts shuffle is spent; every other column's
+        categorical state is marked inactive here. Bin edges come from
+        the column's min/max, the bin count from the numpy-style
+        estimators in operators/histogram.py."""
         opt = self.options
+        n = max(state.row_count, 1)
+        candidates = []
+        if "categorical" not in opt.disabled_stats:
+            for c in state.column_order:
+                ad = state.columns[c].approx_distinct
+                if opt.categorical_max_unique is not None and \
+                        ad > opt.categorical_max_unique * 1.2:
+                    continue
+                if ad / n <= opt.categorical_stop_ratio or ad <= 10:
+                    candidates.append(c)
+        for c in state.column_order:
+            if c not in candidates:
+                state.columns[c].categorical = CategoricalState(
+                    categories={}, active=False)
         specs = []
-        for c in numeric_cols:
+        if "histogram" in opt.disabled_stats:
+            return candidates, specs
+        for c in state.column_order:
             ns = state.columns[c].numeric
             if ns is None or ns.n == 0 or ns.min is None or ns.min == ns.max:
                 continue
@@ -869,7 +916,7 @@ class Profiler:
                                    clamp=(1, opt.max_histogram_bins)),
                     opt.max_histogram_bins)
             specs.append((c, ns.min, ns.max, bins))
-        return specs
+        return candidates, specs
 
     @staticmethod
     def _hist_bucket_expr(c: str, lo: float, hi: float, bins: int) -> Column:
@@ -884,48 +931,12 @@ class Profiler:
                            cat_cols: list[str],
                            hist_specs: list[tuple[str, float, float, int]]
                            ) -> None:
-        """Category values and histogram buckets melt into one
-        (column, key) stream → ONE groupBy shuffle for both operator
-        families — the scan-minimal plan whenever categorical candidates
-        exist (the "hist:"/"cat:" column tag disambiguates keys).
-
-        When there are NO categorical candidates, melting would spend an
-        explode + shuffle on keys whose space is KNOWN up front (bins per
-        column) — so the histograms compute instead as ONE map-side
-        conditional-sum aggregation: same single scan, zero shuffled
-        rows, no explode fan-out. Gated by ``histogram_agg_max_bins``
-        (an explicit histogram_bins=1000 on a wide table would generate
-        an uncompilable aggregate; the melt's shuffle width is bounded
-        by bins regardless). Never used BESIDE the melt: that would read
-        the data twice where the fused melt reads it once."""
-        total_bins = sum(b for _, _, _, b in hist_specs)
-        use_hist_agg = (hist_specs and not cat_cols and
-                        total_bins <= self.options.histogram_agg_max_bins)
-        self._hist_counts_path = "agg" if use_hist_agg else (
-            "melt" if hist_specs else "none")
-
-        hist_acc: dict[str, dict[int, int]] = {}
-        if use_hist_agg:
-            # one projection pins each bucket expression to a single
-            # evaluation (NULL column value → NULL bucket → uncounted),
-            # then bins·columns conditional sums partial-aggregate
-            # map-side: the histogram of 100 TB is one scan, zero
-            # shuffled rows.
-            proj, aggs = [], []
-            for j, (c, lo, hi, bins) in enumerate(hist_specs):
-                bc = f"__b{j}"
-                proj.append(F.when(F.col(c).isNotNull(),
-                                   self._hist_bucket_expr(c, lo, hi, bins))
-                            .alias(bc))
-                for i in range(bins):
-                    aggs.append(F.sum((F.col(bc) == i).cast("long"))
-                                .alias(f"{j}|{i}"))
-            row = df.select(*proj).agg(*aggs).collect()[0]
-            for j, (c, _, _, bins) in enumerate(hist_specs):
-                hist_acc[c] = {i: row[f"{j}|{i}"] or 0 for i in range(bins)}
-            self._finalize_histograms(state, hist_specs, hist_acc)
-            return
-
+        """Pass 2: category values of the candidate columns and
+        histogram buckets melt into one (column, key) stream → ONE
+        groupBy shuffle for both operator families, one scan (the
+        "hist:"/"cat:" column tag disambiguates keys). Writes only the
+        candidate columns' categorical states and the histogram
+        columns' numeric histograms."""
         entries = []
         for c in cat_cols:
             entries.append(F.when(
@@ -984,6 +995,7 @@ class Profiler:
         finally:
             counts_df.unpersist()
 
+        hist_acc: dict[str, dict[int, int]] = {}
         kept_per_col: dict[str, tuple[int, int]] = {}
         for r in counts:
             tag, c = r["column"].split(":", 1)

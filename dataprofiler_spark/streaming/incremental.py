@@ -4,9 +4,10 @@ The reference's "streaming" is batch-incremental update + merge
 (update_profile, profile_builder.py:939-997) — there are no watermark
 semantics to replicate (SURVEY §2.6). On Spark this maps naturally onto
 Structured Streaming's ``foreachBatch``: each micro-batch is profiled with
-the SAME three-job plan (plans/profile_plan.py) and folded into the
-running ``DatasetState`` with the state algebra (state.py) — the identical
-``+`` used by the public profile1+profile2 API.
+the SAME two-scan plan as a batch profile (plans/profile_plan.py; its job
+counts are pinned by tests/test_plans.py::test_profile_engine_job_budgets)
+and folded into the running ``DatasetState`` with the state algebra
+(state.py) — the identical ``+`` used by the public profile1+profile2 API.
 
 For true continuous aggregation (e.g. the time-bucket rollup,
 operators/datetimes.time_bucket_rollup) the same groupBy runs under

@@ -67,17 +67,18 @@ def test_fused_equals_composed_deterministic_slice(spark):
 
 def test_diff_frames_default_fused(spark):
     """diff_frames (the default .diff() entry, VERDICT r9 item 8):
-    auto mode fuses two same-schema frames into one side-split plan
-    and matches the composed mode exactly; schema drift falls back to
-    composed; fused mode on mismatched schemas refuses."""
+    two same-schema frames fuse into one side-split plan that matches
+    the composed path (two profiles + diff_profiles) exactly; schema
+    drift falls back to the composed path."""
     from dataprofiler_spark.plans.diff_plan import diff_frames
 
     df = _events(spark).where(F.col("ts").isNotNull())
     a = df.where(F.col("event_id") % 2 == 0)
     b = df.where(F.col("event_id") % 2 == 1)
 
-    diff_f, fa, fb = diff_frames(a, b)                    # auto → fused
-    diff_c, ca, cb = diff_frames(a, b, mode="composed")
+    diff_f, fa, fb = diff_frames(a, b)
+    ca, cb = Profiler(a).profile(), Profiler(b).profile()
+    diff_c = diff_profiles(ca, cb)
     assert sorted(deterministic_diff_rows(diff_f, fa, fb)) == \
         sorted(deterministic_diff_rows(diff_c, ca, cb))
     for col_f, col_c in zip(
@@ -89,12 +90,10 @@ def test_diff_frames_default_fused(spark):
             if isinstance(vf, float) and isinstance(vc, float):
                 assert vf == pytest.approx(vc, rel=1e-9, nan_ok=True)
 
-    # cross-schema: auto falls back to composed (columns differ)
+    # cross-schema: falls back to composed (columns differ)
     b2 = b.withColumnRenamed("value", "val2")
     d, sa, sb = diff_frames(a, b2)
     assert d["global_stats"]["profile_schema"][0].get("value") is not None
-    with pytest.raises(ValueError, match="matching schemas"):
-        diff_frames(a, b2, mode="fused")
     # one side empty: states still assemble (LocalRelation, no scan)
     d3, s3a, s3b = diff_frames(a.where(F.lit(False)), b)
     assert s3a.row_count == 0 and s3b.row_count == b.count()

@@ -88,19 +88,11 @@ def test_profile_wide_agg_plan_shape(spark, sf_dir):
     nodes. (At profile width the agg exceeds spark.sql.codegen.maxFields
     so Spark correctly falls back from whole-stage codegen — the 64KB
     method limit — which is why we assert shape, not codegen.)"""
-    from dataprofiler_spark.plans.profile_plan import Profiler
+    from dataprofiler_spark.plans.profile_plan import Profiler, _column_kinds
 
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    p = Profiler(li)
-    fields = li.schema.fields
-    from pyspark.sql.types import (DateType, NumericType, StringType,
-                                   TimestampNTZType, TimestampType)
-    numeric = [f.name for f in fields if isinstance(f.dataType, NumericType)]
-    strings = [f.name for f in fields if isinstance(f.dataType, StringType)]
-    dts = [f.name for f in fields if isinstance(
-        f.dataType, (TimestampType, TimestampNTZType, DateType))]
-    agg = li.agg(*p._wide_agg_exprs([f.name for f in fields],
-                                    numeric, strings, dts))
+    groups = Profiler(li)._wide_agg_expr_groups(_column_kinds(li.schema))
+    agg = li.agg(*[e for g in groups for e in g])
     plan = _simple(agg)
     assert "partial_" in plan                       # map-side combine
     assert plan.count("Exchange") == 1              # one row/partition shuffle
@@ -188,27 +180,25 @@ def test_no_unpartitioned_window_over_data(spark, sf_dir):
 def test_wide_agg_groups_bounded(spark, sf_dir):
     """Codegen-compile guard: every wide-agg group stays under the
     bounded width (superlinear Janino cost past ~40 aggregates), and the
-    groups together cover exactly the monolithic expression list."""
+    per-type groups together carry every column's battery exactly once."""
     import os
-    from dataprofiler_spark.plans.profile_plan import Profiler
+    from dataprofiler_spark.plans.profile_plan import (WIDE_AGG_GROUP_WIDTH,
+                                                       Profiler,
+                                                       _column_kinds)
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     p = Profiler(li)
-    from pyspark.sql.types import (DateType, NumericType, StringType,
-                                   TimestampNTZType, TimestampType)
-    fields = li.schema.fields
-    num = [f.name for f in fields if isinstance(f.dataType, NumericType)]
-    st = [f.name for f in fields if isinstance(f.dataType, StringType)]
-    dt = [f.name for f in fields if isinstance(
-        f.dataType, (TimestampType, TimestampNTZType, DateType))]
-    allc = [f.name for f in fields]
-    groups = p._wide_agg_expr_groups(allc, num, st, dt)
+    kinds = _column_kinds(li.schema)
+    groups = p._wide_agg_expr_groups(kinds)
     assert len(groups) >= 2
     # group 0 (row-level) width scales with column count; per-type groups
-    # are hard-bounded by the configured width
+    # are hard-bounded by the group width
     for g in groups[1:]:
-        assert len(g) <= p.options.wide_agg_group_width
-    flat = p._wide_agg_exprs(allc, num, st, dt)
-    assert sum(len(g) for g in groups) == len(flat)
+        assert len(g) <= WIDE_AGG_GROUP_WIDTH
+    # every per-column battery lands in exactly one group, whole
+    battery = [e for c in kinds.numeric for e in p._numeric_col_exprs(c)] \
+        + [e for c in kinds.string for e in p._string_col_exprs(c)] \
+        + [e for c in kinds.datetime for e in p._dt_col_exprs(c)]
+    assert sum(len(g) for g in groups[1:]) == len(battery)
 
 
 def test_text_fanout_tokenizes_once(spark, sf_dir):
@@ -611,6 +601,20 @@ def test_profile_engine_job_budgets(spark, sf_dir):
     assert counts == {"profile_small": 17, "profile_lineitem": 22,
                       "diff_snapshots": 21, "drift_update": 2,
                       "markov_update": 5, "connected_components": 46}
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    """A chain needs one round per hop: capped below its diameter the
+    propagation is still changing labels, which must raise instead of
+    returning a split component; uncapped it converges to one."""
+    from dataprofiler_spark.operators.graph import connected_components
+
+    chain = spark.createDataFrame([(i, i + 1) for i in range(5)],
+                                  "src long, dst long")
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(chain, "src", "dst", max_iter=2)
+    rows = connected_components(chain, "src", "dst").collect()
+    assert len(rows) == 6 and {r["component"] for r in rows} == {0}
 
 
 def test_warm_calls_reuse_generated_code(spark, sf_dir):

@@ -725,31 +725,30 @@ def test_diff_reports_schema_mismatch(spark, sf_dir):
     assert all(v == "unchanged" for v in same[1].values())
 
 
-def test_histogram_agg_path_numeric_only_frame(spark, sf_dir):
-    """With no categorical candidates the histogram computes as the
-    shuffle-free conditional-sum aggregation (path 'agg'), bit-equal to
-    the melted fallback; with categorical candidates present the fused
-    melt stays (one scan for both families beats a second read)."""
+def test_histogram_numeric_only_frame(spark, sf_dir):
+    """A frame with no categorical candidate still gets its histogram
+    from the counts melt, on the global path and on the side-split
+    path: the l_extendedprice-only profile's histogram equals that
+    column's histogram in the full lineitem profile and in both side
+    states of a self-diff."""
     import os
 
-    from dataprofiler_spark import Profiler, ProfilerOptions
+    from dataprofiler_spark import Profiler
+    from dataprofiler_spark.plans.diff_plan import diff_frames
 
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    p_full = Profiler(li)
-    p_full.profile()
-    assert p_full._hist_counts_path == "melt"
-
     num = li.select("l_extendedprice")
-    p_agg = Profiler(num)
-    s_agg = p_agg.profile()
-    assert p_agg._hist_counts_path == "agg"
-    p_melt = Profiler(num, ProfilerOptions(histogram_agg_max_bins=0))
-    s_melt = p_melt.profile()
-    assert p_melt._hist_counts_path == "melt"
-    h_a = s_agg.columns["l_extendedprice"].numeric.histogram
-    h_m = s_melt.columns["l_extendedprice"].numeric.histogram
-    assert h_a["bin_counts"] == h_m["bin_counts"]
-    assert h_a["bin_edges"] == h_m["bin_edges"]
+    alone = Profiler(num).profile()
+    assert not alone.columns["l_extendedprice"].categorical.active
+    full = Profiler(li).profile()
+    _, sa, sb = diff_frames(num, num)
+
+    def hist(state):
+        h = state.columns["l_extendedprice"].numeric.histogram
+        return h["bin_edges"], h["bin_counts"]
+
+    assert sum(hist(alone)[1]) == alone.columns["l_extendedprice"].numeric.n
+    assert hist(alone) == hist(full) == hist(sa) == hist(sb)
 
 
 def test_vector_column_profile(spark, sf_dir):
