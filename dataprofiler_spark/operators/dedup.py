@@ -612,12 +612,13 @@ def neardup_clusters(df: DataFrame, id_col: str, text_col: str,
 
     Scale shape: pair generation is the banded-LSH plan of
     :func:`minhash_lsh_pairs`; components are iterative min-label
-    propagation (operators/graph.py) — O(component diameter) rounds of
-    two joins + a groupBy, lineage truncated per round via
-    localCheckpoint. Near-dup graphs have tiny diameters (clusters are
-    cliques-ish by construction), so rounds ≈ 3-5 in practice; a pair
-    graph that has not converged after ``max_iter`` rounds raises
-    ``RuntimeError`` (see ``connected_components``). The
+    propagation (operators/graph.py) — the pair plan is evaluated once,
+    then O(component diameter) rounds of one join + one groupBy, whose
+    aggregate also answers the convergence check; lineage truncated per
+    round via localCheckpoint. Near-dup graphs have tiny diameters
+    (clusters are cliques-ish by construction), so rounds ≈ 3-5 in
+    practice; a pair graph that has not converged after ``max_iter``
+    rounds raises ``RuntimeError`` (see ``connected_components``). The
     size/canonical assembly is one groupBy + one shuffle join on
     cluster_id."""
     from dataprofiler_spark.operators.graph import connected_components

@@ -8,8 +8,10 @@ list whose source/destination columns are detected by name substring
 
 Spark design: degree stats are one union + groupBy (GraphFrames' degree
 pattern without the dependency). Connected components use iterative
-min-label propagation — each round is one join + groupBy, converging in
-O(diameter) rounds; this is the standard large-graph pattern
+min-label propagation over one persisted read of the edge input — each
+round is one join + groupBy whose aggregate also carries the previous
+label for the convergence check, converging in O(diameter) rounds; this
+is the standard large-graph pattern
 (GraphFrames' connectedComponents does the same with alternating large/
 small-star optimizations). Distribution fitting samples attribute values
 to the driver (bounded) — same as the reference.
@@ -73,55 +75,62 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     """(node, component) with component = min node id reachable.
 
     Iterative min-label propagation: labels flow across edges until no
-    label changes. Each iteration is two joins + one groupBy; the loop
-    runs on the driver but all data stays distributed. localCheckpoint
-    truncates the growing lineage (essential at scale — without it the
-    plan doubles every round). A round moves a label one hop, so a graph
-    whose diameter is at least ``max_iter`` does not converge: the last
-    round still changes a label and this raises ``RuntimeError`` rather
-    than return unconverged labels.
+    label changes. The edge input is read once, into one persisted
+    symmetric frame ``sym(a, b)`` (both directions of every edge) that
+    supplies both the initial nodes and the propagation edges. Each
+    round is one join + one groupBy; the groupBy also carries each
+    node's previous label, so the round's only action — a count of
+    nodes whose label changed — reads the round's own aggregate, with
+    no second join. The loop runs on the driver but all data stays
+    distributed. localCheckpoint truncates the growing lineage
+    (essential at scale — without it the plan doubles every round). A
+    round moves a label one hop, so a graph whose diameter is at least
+    ``max_iter`` does not converge: the last round still changes a
+    label and this raises ``RuntimeError`` rather than return
+    unconverged labels.
 
     NULL is not a node: an edge with a NULL endpoint contributes its
     non-NULL side as an isolated node and no edge — otherwise the NULL
     "node" becomes its own phantom component and, worse, equality joins
     silently stop propagating through it, so the two engines disagree
     on the component count (found by the adversarial parity suite)."""
-    raw_nodes = (edges.select(F.col(src).alias("node"))
-                 .unionAll(edges.select(F.col(dst).alias("node")))
-                 .where(F.col("node").isNotNull()).distinct())
-    both = edges.where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-    e = (both.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-         .unionAll(both.select(F.col(dst).alias("a"),
-                               F.col(src).alias("b")))
-         .distinct().persist())
-    labels = raw_nodes.withColumn("component", F.col("node"))
+    both_ways = F.explode(F.array(
+        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+        F.struct(F.col(dst).alias("a"), F.col(src).alias("b"))))
+    sym = (edges.select(both_ways.alias("ab")).select("ab.a", "ab.b")
+           .where(F.col("a").isNotNull()).distinct().persist())
+    e = sym.where(F.col("b").isNotNull())
+    no_label = F.lit(None).cast(sym.schema["a"].dataType)
+    labels = (sym.select(F.col("a").alias("node")).distinct()
+              .withColumn("component", F.col("node")))
     ckpt_ids: set[int] = set()
-    # try/finally so a failed iteration can't leak e's MEMORY_AND_DISK
+    # try/finally so a failed iteration can't leak sym's MEMORY_AND_DISK
     # state into the session (the returned labels frame is a
-    # localCheckpoint and no longer depends on e).
+    # localCheckpoint and no longer depends on sym).
     try:
         for _ in range(max_iter):
             prop = (e.join(labels, e.a == labels.node)
                     .select(F.col("b").alias("node"),
-                            F.col("component").alias("cand")))
+                            F.col("component").alias("cand"),
+                            no_label.alias("old")))
             new_labels = (labels.select("node",
-                                        F.col("component").alias("cand"))
+                                        F.col("component").alias("cand"),
+                                        F.col("component").alias("old"))
                           .unionAll(prop)
                           .groupBy("node")
-                          .agg(F.min("cand").alias("component")))
-            # LAZY checkpoint (r13): the convergence check below is the
+                          .agg(F.min("cand").alias("component"),
+                               F.max("old").alias("old")))
+            # LAZY checkpoint: the changed count below is the
             # materializing action — an eager checkpoint spent a whole
             # extra job per round storing blocks the very next job
             # re-read. Lineage is truncated either way.
             new_labels, added = _checkpoint_tracking(new_labels,
                                                      eager=False)
-            changed = (new_labels.alias("n")
-                       .join(labels.alias("o"), "node")
-                       .where(F.col("n.component") != F.col("o.component"))
+            changed = (new_labels.where(F.col("component") != F.col("old"))
                        .limit(1).count())
             _release_rdds(new_labels.sparkSession.sparkContext, ckpt_ids)
             ckpt_ids = added
-            labels = new_labels
+            labels = new_labels.select("node", "component")
             if changed == 0:
                 break
         else:
@@ -132,7 +141,7 @@ def connected_components(edges: DataFrame, src: str, dst: str,
                 f"moves a label one hop, so it must exceed the graph's "
                 f"diameter)")
     finally:
-        e.unpersist()
+        sym.unpersist()
     return labels
 
 
@@ -171,36 +180,43 @@ def pagerank(edges: DataFrame, src: str, dst: str, iters: int = 3,
     both engines, and dangling-node mass is dropped (documented).
 
     Output: (node, rank) with rank = rank9 / 1e9, rounded."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")) \
-             .where(F.col(src).isNotNull() & F.col(dst).isNotNull())
-    nodes = (e.select(F.col("src").alias("node"))
-             .unionAll(e.select(F.col("dst").alias("node")))
-             .distinct())
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank: empty graph")
-    r0 = 10**9 // n
-    base = (10**9 * (damp_den - damp_num)) // (damp_den * n)
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    ranks = nodes.withColumn("r", F.lit(r0).cast("long"))
-    ckpt_ids: set[int] = set()
-    for _ in range(iters):
-        shares = (e.join(ranks, e.src == ranks.node)
-                  .join(outdeg, "src")
-                  .select(F.col("dst").alias("node"),
-                          F.expr("r div od").alias("share")))
-        contrib = shares.groupBy("node").agg(F.sum("share").alias("s"))
-        ranks = (nodes.join(contrib, "node", "left")
-                 .select("node",
-                         (F.lit(base)
-                          + F.expr(f"({damp_num} * coalesce(s, 0))"
-                                   f" div {damp_den}"))
-                         .cast("long").alias("r")))
-        # truncate growing lineage; the eager checkpoint is the last job
-        # that reads the previous round's snapshot, so it can be freed
-        ranks, added = _checkpoint_tracking(ranks)
-        _release_rdds(ranks.sparkSession.sparkContext, ckpt_ids)
-        ckpt_ids = added
+    e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+         .persist())
+    # try/finally: every round reads e; the last eager checkpoint is the
+    # last job that does, so e is freed once the loop is done
+    try:
+        nodes = (e.select(F.col("src").alias("node"))
+                 .unionAll(e.select(F.col("dst").alias("node")))
+                 .distinct())
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("pagerank: empty graph")
+        r0 = 10**9 // n
+        base = (10**9 * (damp_den - damp_num)) // (damp_den * n)
+        outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
+        ranks = nodes.withColumn("r", F.lit(r0).cast("long"))
+        ckpt_ids: set[int] = set()
+        for _ in range(iters):
+            shares = (e.join(ranks, e.src == ranks.node)
+                      .join(outdeg, "src")
+                      .select(F.col("dst").alias("node"),
+                              F.expr("r div od").alias("share")))
+            contrib = shares.groupBy("node").agg(F.sum("share").alias("s"))
+            ranks = (nodes.join(contrib, "node", "left")
+                     .select("node",
+                             (F.lit(base)
+                              + F.expr(f"({damp_num} * coalesce(s, 0))"
+                                       f" div {damp_den}"))
+                             .cast("long").alias("r")))
+            # truncate growing lineage; the eager checkpoint is the last
+            # job that reads the previous round's snapshot, so it can be
+            # freed
+            ranks, added = _checkpoint_tracking(ranks)
+            _release_rdds(ranks.sparkSession.sparkContext, ckpt_ids)
+            ckpt_ids = added
+    finally:
+        e.unpersist()
     return ranks.select("node",
                         F.round(F.col("r") / F.lit(1e9), round_digits)
                         .alias("rank"))

@@ -404,11 +404,12 @@ def embedding_neardup_clusters(df: DataFrame, id_col: str, vec_col: str,
     canonical = min-id member).
 
     Scale shape: per-(band, bucket) pair joins with the optional
-    ``max_bucket_size`` skew guard (never all-pairs) + O(cluster
-    diameter) label-propagation rounds — near-dup graphs are cliques-ish
-    so rounds stay small; a pair graph that has not converged after
-    ``max_iter`` rounds raises ``RuntimeError`` (see
-    ``graph.connected_components``)."""
+    ``max_bucket_size`` skew guard (never all-pairs), evaluated once +
+    O(cluster diameter) label-propagation rounds of one join + one
+    groupBy each — near-dup graphs are cliques-ish so rounds stay small
+    (a low ``threshold`` on random vectors can chain them); a pair
+    graph that has not converged after ``max_iter`` rounds raises
+    ``RuntimeError`` (see ``graph.connected_components``)."""
     from dataprofiler_spark.operators.graph import connected_components
 
     pairs = embedding_neardup_pairs(df, id_col, vec_col,

@@ -82,8 +82,11 @@ def _distribution_pass(tagged: DataFrame, states: dict, options=None
     proj, cat_aliases, specs, facade_cols = [], [], [], {}
     for s, st in states.items():
         candidates, side_specs = p._distribution_specs(st)
-        used = set(candidates) | {c for c, *_ in side_specs}
-        for c in used:
+        # both lists are in column order; a fixed projection order keeps
+        # the counts-pass plan (and its generated code) the same from
+        # one process to the next
+        hist_only = [c for c, *_ in side_specs if c not in candidates]
+        for c in candidates + hist_only:
             alias = f"__d{s}__{c}"
             proj.append(F.when(F.col(_SIDE) == s, tagged[c])
                         .alias(alias))

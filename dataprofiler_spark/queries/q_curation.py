@@ -437,10 +437,14 @@ def embedding_neardup_clusters(spark, sf_dir):
     """Embedding-cosine near-dup clusters over the banded LSH pairs
     (threshold tuned so the synthetic corpus yields non-trivial
     components; the 0.95 production default gives all-singletons on
-    random vectors). max_bucket_size oracle-mirrored."""
+    random vectors). max_bucket_size oracle-mirrored. At this threshold
+    the pair graph is path-like: a node lies 20 hops from its
+    component's min id at sf0.001 (18 at sf0.01, 8 at sf0.1), so
+    propagation needs 21 rounds, over the default cap of 20."""
     return sim.embedding_neardup_clusters(
         T(spark, sf_dir, "embeddings"), "vec_id", "embedding",
-        threshold=0.3, bands=4, planes_per_band=4, max_bucket_size=150)
+        threshold=0.3, bands=4, planes_per_band=4, max_bucket_size=150,
+        max_iter=30)
 
 
 @register("markup_signals_documents",

@@ -206,7 +206,7 @@ def _checkpoint_tracking(df: DataFrame, eager: bool = True
     registers at persist time, so the tracking works either way) — use
     it when a loop already runs an action per round that reads the
     frame, saving one full job per iteration (connected_components'
-    convergence check).
+    changed-label count, which reads the round's own aggregate).
 
     localCheckpoint persists its materialized RDD and nothing ever
     unpersists it — every call leaks one MEMORY_AND_DISK snapshot until

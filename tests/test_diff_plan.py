@@ -65,6 +65,28 @@ def test_fused_equals_composed_deterministic_slice(spark):
                     col_f["column_name"], stat)
 
 
+def test_distribution_pass_projection_order(spark, monkeypatch):
+    """The side-split counts pass projects each side's categorical
+    candidates, then its histogram-only columns, both in column order:
+    the plan must not follow the process's string-hash seed."""
+    from dataprofiler_spark.plans.profile_plan import Profiler
+
+    seen = []
+    real = Profiler._fused_counts_pass
+
+    def capture(self, df, *args):
+        seen.append(df.columns)
+        return real(self, df, *args)
+
+    monkeypatch.setattr(Profiler, "_fused_counts_pass", capture)
+    diff_snapshots(_events(spark), "ts")
+    (cols,) = seen
+    for s in (0, 1):
+        prefix = f"__d{s}__"
+        assert [c[len(prefix):] for c in cols if c.startswith(prefix)] == [
+            "user_id", "event_type", "event_id", "value"]
+
+
 def test_diff_frames_default_fused(spark):
     """diff_frames (the default .diff() entry, VERDICT r9 item 8):
     two same-schema frames fuse into one side-split plan that matches

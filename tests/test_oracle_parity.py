@@ -32,6 +32,14 @@ VECTOR_FAMILY = [
     "ann_index_pq_query_embeddings", "semantic_dedup_embeddings",
 ]
 
+# The graph family replays in the default gate: component stats,
+# pagerank and both near-dup cluster operators share one connected
+# components / pagerank implementation (operators/graph.py).
+GRAPH_FAMILY = [
+    "graph_components_nation", "pagerank_nation",
+    "neardup_clusters_documents", "embedding_neardup_clusters",
+]
+
 
 @pytest.mark.nightly
 @pytest.mark.parametrize("name", sorted(SPARK_QUERIES))
@@ -41,6 +49,12 @@ def test_query_matches_oracle(name, spark, duck, sf_dir):
 
 @pytest.mark.parametrize("name", VECTOR_FAMILY)
 def test_vector_family_matches_oracle(name, spark, duck, sf_dir):
+    assert name in ORACLE_SQL
+    _assert_matches_oracle(name, spark, duck, sf_dir)
+
+
+@pytest.mark.parametrize("name", GRAPH_FAMILY)
+def test_graph_family_matches_oracle(name, spark, duck, sf_dir):
     assert name in ORACLE_SQL
     _assert_matches_oracle(name, spark, duck, sf_dir)
 

@@ -569,9 +569,12 @@ def test_profile_engine_job_budgets(spark, sf_dir):
     per wide-agg group, the fused counts pass and its AQE stage jobs,
     the sample job and the input checkpoint; the diff adds the bounds
     and side split; each monitor update is one melted pass; the chain's
-    components take one round per hop."""
+    components take one round per hop, one action each; pagerank is
+    the node count and one eager checkpoint per round, each split into
+    AQE stage jobs."""
     from dataprofiler_spark import Profiler, StreamingDriftMonitor
-    from dataprofiler_spark.operators.graph import connected_components
+    from dataprofiler_spark.operators.graph import (connected_components,
+                                                    pagerank)
     from dataprofiler_spark.plans.diff_plan import diff_snapshots
     from dataprofiler_spark.queries import T
     from dataprofiler_spark.streaming.markov import StreamingMarkov
@@ -597,10 +600,13 @@ def test_profile_engine_job_budgets(spark, sf_dir):
         "connected_components": _count_jobs(
             spark, lambda: connected_components(
                 chain, "src", "dst").collect()),
+        "pagerank": _count_jobs(
+            spark, lambda: pagerank(chain, "src", "dst", iters=3).collect()),
     }
     assert counts == {"profile_small": 17, "profile_lineitem": 22,
                       "diff_snapshots": 21, "drift_update": 2,
-                      "markov_update": 5, "connected_components": 46}
+                      "markov_update": 5, "connected_components": 31,
+                      "pagerank": 28}
 
 
 def test_connected_components_raises_when_not_converged(spark):
@@ -615,6 +621,43 @@ def test_connected_components_raises_when_not_converged(spark):
         connected_components(chain, "src", "dst", max_iter=2)
     rows = connected_components(chain, "src", "dst").collect()
     assert len(rows) == 6 and {r["component"] for r in rows} == {0}
+
+
+def test_graph_ops_read_input_once(spark):
+    """Each graph operator evaluates its edge input once: a caller's
+    edge plan (in the near-dup clusters, the whole MinHash-LSH pair
+    plan) is not recomputed per branch or per round. The input is
+    tapped with a non-deterministic Python UDF that counts the rows it
+    evaluates. A string-id graph with NULL endpoints and a self-loop
+    keeps its components: a NULL endpoint leaves the other side an
+    isolated node, a self-loop is a singleton."""
+    from dataprofiler_spark.operators.graph import (connected_components,
+                                                    pagerank)
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def tap(x):
+        evaluated.add(1)
+        return x
+
+    tap_udf = F.udf(tap, "long").asNondeterministic()
+    raw = spark.createDataFrame([(0, i) for i in range(1, 21)],
+                                "src long, dst long")
+    edges = raw.select(tap_udf("src").alias("src"), "dst")
+    rows = connected_components(edges, "src", "dst").collect()
+    assert len(rows) == 21 and {r["component"] for r in rows} == {0}
+    assert evaluated.value == 20
+    evaluated.value = 0
+    assert len(pagerank(edges, "src", "dst", iters=3).collect()) == 21
+    assert evaluated.value == 20
+
+    g = spark.createDataFrame(
+        [("a", "b"), ("c", "c"), (None, "d"), ("e", "f"), ("g", "f"),
+         (None, None)], "src string, dst string")
+    comps = dict(tuple(r) for r in
+                 connected_components(g, "src", "dst").collect())
+    assert comps == {"a": "a", "b": "a", "c": "c", "d": "d",
+                     "e": "e", "f": "e", "g": "e"}
 
 
 def test_warm_calls_reuse_generated_code(spark, sf_dir):
