@@ -228,6 +228,10 @@ class CnnHeadTuner:
 
     @classmethod
     def load_from_disk(cls, dirpath: str) -> "CnnHeadTuner":
+        """Reload a saved head on the base ``head_params.json`` records:
+        the user model at ``model_path``, or else the packaged model —
+        the packaged weights are needed only when no ``model_path`` was
+        saved."""
         with open(os.path.join(dirpath, "head_params.json")) as fp:
             params = json.load(fp)
         out = cls(model_path=params.get("model_path"),

@@ -365,9 +365,17 @@ class TrainableDataLabeler:
 
     @classmethod
     def load_from_disk(cls, dirpath: str) -> "TrainableDataLabeler":
+        """Reload a ``save_to_disk`` artifact. A CNN head artifact
+        (``head_params.json``) reloads on the base that file records:
+        the user model at its ``model_path``, or else the packaged
+        model — so the packaged weights are needed only when no
+        ``model_path`` was saved. Otherwise the n-gram labeler loads
+        from ``labeler.json``."""
         if os.path.exists(os.path.join(dirpath, "head_params.json")):
             from dataprofiler_spark.labeler.head_tuning import CnnHeadTuner
-            m = cls(model="cnn")
+            # built headless: the only base CNN loaded is the recorded one
+            m = cls()
+            m.model = "cnn"
             m._head = CnnHeadTuner.load_from_disk(dirpath)
             m.label_mapping = dict(m._head.label_mapping)
             return m

@@ -53,71 +53,64 @@ from dataprofiler_spark.queries.q_labeling import _trained_labeler_votes  # noqa
 # stays registered and is hash-checked by tests/test_oracle_parity.py.
 # ---------------------------------------------------------------------------
 
-# Round-13 rotation (period-4 schedule, see the SLA test): (a) the
-# full r9-stale cohort — every oracled row whose latest driver check
-# is r9 and that r12 did not pull forward (46 rows; ivf_topk and
-# numeric_profile_lineitem were advanced into the r12 window).
-# (b) the flagship end-to-end re-check (every round). (c) rows whose
-# implementation changed this round (counts_cdf hardened+adaptive,
-# r13) — results are bit-identical by construction and test-pinned,
-# but the driver re-proves them. r14 = the r10 cohort, r15 = r11.
+# Round-14 rotation (period-4 schedule, see the SLA test): (a) the
+# full r10 cohort — every oracled row whose latest driver check is r10
+# (49 rows; grouped_quantiles, graph_components and winnow ride in it).
+# (b) the flagship end-to-end re-check (every round). r15 = the r11
+# cohort, r16 = the r12 cohort.
 _DRIVER_WINDOW = [
-    # ---- (a) the full r9-stale cohort: 46 ----
-    "ann_index_query_embeddings",
-    "asof_last_purchase_events",
-    "clean_sample_documents",
-    "cluster_sample_embeddings",
-    "datetime_profile_orders",
-    "decontaminate_by_benchmark_documents",
-    "distinct_counts_lineitem",
-    "embedding_covariance_embeddings",
-    "embedding_dim_stats",
-    "embedding_group_cosines",
-    "embedding_outliers_embeddings",
-    "expectations_orders",
-    "fuzzy_pairs_customer",
-    "hard_negatives_embeddings",
-    "hashed_cosine_topk_documents",
-    "hashed_doc_vectors_documents",
-    "hot_keys_events",
-    "ivf_pq_topk_embeddings",
-    "ivf_recall_embeddings",
-    "key_skew_lineitem",
-    "label_centroid_audit_embeddings",
-    "labeler_f1_customer",
-    "lsh_bucket_profile_documents",
-    "minhash_lsh_pairs_bottomk",
-    "nb_source_confusion_documents",
-    "ner_redact_orders",
-    "null_replication_orders",
-    "nullspec_customer",
-    "numeric_profile_orders",
-    "pack_manifest_documents",
-    "pagerank_nation",
-    "pii_redact_customer",
-    "pq_audit_embeddings",
-    "precision_stats_lineitem",
-    "profile_by_returnflag_lineitem",
-    "profile_diff_fused_events",
-    "profile_timeline_events_week",
-    "psi_numeric_totalprice",
-    "quantize_int8_embeddings",
-    "referential_integrity_lineitem_orders",
-    "retention_cohorts_events",
-    "rolling_avg_events",
-    "sessionize_events",
-    "simhash_neardup_documents",
-    "stratified_sample_orders",
-    "validate_lineitem",
+    # ---- (a) the full r10 cohort: 49 ----
+    "active_users_events",
+    "ann_index_pq_query_embeddings",
+    "benford_lineitem",
+    "bigram_logprob_documents",
+    "bm25_topk_documents",
+    "bpe_token_summary_documents",
+    "canonical_sample_documents",
+    "chunk_summary_documents",
+    "cnn_labeler_customer",
+    "cohens_kappa_lineitem",
+    "collocations_pmi_documents",
+    "corpus_semantic_curation_documents",
+    "cross_source_dup_matrix_documents",
+    "crossdoc_ngram_dup_documents",
+    "crosstab_lineitem",
+    "data_mixture_documents",
+    "decontaminate_documents",
+    "domain_rollup_documents",
+    "embedding_shift_embeddings",
+    "entity_counts_events_props",
+    "funnel_events",
+    "funnel_gap_events",
+    "graph_components_nation",
+    "grouped_quantiles_lineitem",
+    "hash_sample_orders",
+    "hybrid_rrf_topk_documents",
+    "imported_profile_diff_lineitem",
+    "interval_join_events",
+    "ivf_pq_residual_topk_embeddings",
+    "json_props_events",
+    "kmeans_assign_embeddings",
+    "language_id_documents",
+    "markup_signals_documents",
+    "media_profile_documents",
+    "minhash_lsh_autocap_documents",
+    "nullspec_per_column_customer",
+    "numeric_profile_by_returnflag",
+    "query_cosine_topk_documents",
+    "repetition_signals_documents",
+    "rollup_events_type_day",
+    "semantic_dedup_embeddings",
+    "skew_join_lineitem_orders",
+    "spearman_lineitem",
+    "split_manifest_documents",
+    "substring_dup_documents",
+    "tfidf_top_terms_documents",
+    "topk_events_per_user",
+    "winnow_fingerprints_documents",
+    "zipf_vocab_documents",
     # ---- (b) flagship end-to-end re-check (every round) ----
     "full_profile_lineitem",
-    # ---- (c) changed this round (counts_cdf r13 rewrite: frozen-pid
-    # checkpoint + adaptive small arm), re-proven under the driver;
-    # grouped_quantiles shares roc_auc's small arm and stays covered
-    # by tests/test_oracle_parity.py ----
-    "roc_auc_lineitem",
-    "robust_stats_lineitem",
-    "decile_stats_extendedprice",
 ]
 
 

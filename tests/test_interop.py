@@ -17,6 +17,13 @@ from dataprofiler_spark.report import deterministic_report_rows, diff_profiles
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURE = os.path.join(REPO, "fixtures", "ref_profile_lineitem_sf0001.json.gz")
 SF0001 = "/root/testdata/sf0.001"
+REFERENCE_LIB = "/root/reference/dataprofiler"
+
+# the tests that run the reference library itself (in a subprocess);
+# everything else here reads the committed fixture and always runs
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(REFERENCE_LIB),
+    reason=f"reference library checkout not present at {REFERENCE_LIB}")
 
 
 @pytest.fixture(scope="module")
@@ -160,6 +167,7 @@ def test_export_round_trips_through_import(spark, tmp_path):
         save_reference_profile(Profiler(vdf).profile(), str(tmp_path / "v.json"))
 
 
+@needs_reference
 def test_export_loads_in_reference(spark, tmp_path):
     """THE migration contract, outbound direction: the REFERENCE
     library itself (run in-container via baseline_harness's dependency
@@ -241,6 +249,7 @@ def test_unstructured_rejected(tmp_path):
         load_reference_profile({"class": "SomethingElse", "data": {}})
 
 
+@needs_reference
 def test_import_null_bearing_reference_profile(tmp_path):
     """Import parity on a NULL-bearing profile (the committed lineitem
     fixture has zero nulls): the reference profiles a frame with
@@ -399,6 +408,7 @@ def test_export_import_generative_roundtrip():
                 assert b.order.order == a.order.order, name
 
 
+@needs_reference
 def test_import_kurtosis_disabled_merge_keeps_unavailable(tmp_path, spark):
     """VERDICT r11 item 6: a reference profile saved with kurtosis
     DISABLED imports with m4=None (not a fabricated 0.0 fourth moment),
