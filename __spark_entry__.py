@@ -22,8 +22,8 @@ from dataprofiler_spark.queries import ORACLE_SQL, SPARK_QUERIES
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: exact numeric profile of sf0.001 lineitem."""
     df = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
-    return _num.numeric_profile(
-        df, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"], mode="exact"
+    return _num.numeric_profile_exact(
+        df, ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     )
 
 

@@ -1,6 +1,6 @@
 """Persisted IVF (inverted-file) ANN index over an embedding column.
 
-The in-memory IVF path (operators/mllib_ops.ivf_topk) re-fits and
+The in-memory IVF path (operators/clustering.ivf_topk_det) re-fits and
 re-assigns per query; this module makes the index a durable artifact —
 the shape a 100 TB similarity-search deployment actually uses:
 
@@ -16,18 +16,15 @@ table and reads ONLY the ``nprobe`` matching partition directories:
 Spark partition pruning turns the recall/IO trade into a file-listing
 decision (asserted in tests/test_plans.py).
 
-Quantizer (VERDICT r4 item 5): default ``"det"`` — this package's
-deterministic distributed k-means (operators/clustering.kmeans_fit),
-whose fixed-point algebra a DuckDB oracle reproduces bit-for-bit, so
-build → persist → query is oracle-checkable END TO END
-(queries.ann_index_query_embeddings). ``"mllib"`` keeps the MLlib KMeans
-path (kmeans|| init — statistically better centers on hard corpora, but
-its sampled init is not cross-engine reproducible, so no oracle).
-``fit_fraction`` under "det" is an md5-hash sample (same rule as
+Quantizer: ``"det"``, the only one — this package's deterministic
+distributed k-means (operators/clustering.kmeans_fit), whose fixed-point
+algebra a DuckDB oracle reproduces bit-for-bit, so build → persist →
+query is oracle-checkable END TO END (queries.ann_index_query_embeddings).
+``fit_fraction`` is an md5-hash sample (same rule as
 operators/sampling.hash_sample) — deterministic and oracle-mirrorable,
 unlike Spark's partition-order-dependent ``DataFrame.sample``.
 
-Distance: cosine. Deterministic given the seed (both quantizers).
+Distance: cosine. Deterministic: the same input builds the same index.
 """
 
 from __future__ import annotations
@@ -46,67 +43,44 @@ def ivf_build(df: DataFrame, id_col: str, vec_col: str, path: str,
               pq_codes: int = 16, pq_iters: int = 1) -> dict:
     """Fit + assign + write the index; returns the metadata dict.
 
-    ``pq_m`` (det quantizer only) additionally fits ``pq_m`` product-
-    quantization codebooks (clustering.pq_fit) and stores each vector's
-    m codes in the vectors table plus the codebooks in
-    ``_pq_codebooks.json`` — the durable IVF-PQ layout ivf_query_adc
-    serves from without ever reading the vector column."""
+    ``quantizer`` must be ``"det"`` (clustering.kmeans_fit, the only
+    k-means); it and ``seed`` are recorded in the metadata. ``pq_m``
+    additionally fits ``pq_m`` product-quantization codebooks
+    (clustering.pq_fit) and stores each vector's m codes in the vectors
+    table plus the codebooks in ``_pq_codebooks.json`` — the durable
+    IVF-PQ layout ivf_query_adc serves from without ever reading the
+    vector column."""
+    if quantizer != "det":
+        raise ValueError(f"unknown quantizer {quantizer!r} (expected 'det')")
+    from dataprofiler_spark.operators import clustering as cl
+    from dataprofiler_spark.operators.sampling import hash_sample
+
     pq_books = None
-    if quantizer == "det":
-        from dataprofiler_spark.operators import clustering as cl
-        from dataprofiler_spark.operators.sampling import hash_sample
-
-        # NULL vectors have no cell — same rule as the clustering ops
-        df = df.where(F.col(vec_col).isNotNull())
-        fit_on = (hash_sample(df, id_col, fit_fraction)
-                  if fit_fraction else df)
-        centers_list = cl.kmeans_fit(fit_on, id_col, vec_col,
-                                     k=n_centroids, iters=iters)
-        # ONE assignment scan (clustering._assign_multi_cols) encodes
-        # the centroid and, with pq_m, the m PQ codes as m+1 specs of
-        # the same vector; vectors not exactly dim wide raise. Above
-        # ASSIGN_EXPR_MAX_K codes it runs as the vectorized NumPy
-        # kernel (bit-identical), so a deployment-sized n_centroids
-        # does not pay the O(k·dim) interpreted expression per row.
-        dim = len(centers_list[0])
-        specs = [(0, dim, centers_list)]
-        if pq_m is not None:
-            sub = dim // pq_m
-            pq_books = cl.pq_fit(fit_on, id_col, vec_col, m=pq_m,
-                                 k_codes=pq_codes, iters=pq_iters,
-                                 dim=dim)
-            specs += [(j * sub, sub, b) for j, b in enumerate(pq_books)]
-        assigned = cl._assign_multi_cols(
-            df.select(F.col(id_col).alias("id"),
-                      F.col(vec_col).alias("v")), specs, dim).select(
-            "id", F.col("v").alias("embedding"),
-            F.col("__cl0").alias("centroid"),
-            *[F.col(f"__cl{j + 1}").alias(f"code{j}")
-              for j in range(len(specs) - 1)])
-    elif quantizer == "mllib":
-        if pq_m is not None:
-            raise ValueError("pq_m requires quantizer='det' (the PQ "
-                             "codebooks reuse the deterministic k-means)")
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
-
-        vecs = df.select(F.col(id_col).alias("id"),
-                         F.col(vec_col).alias("embedding"),
-                         array_to_vector(F.col(vec_col)
-                                         .cast("array<double>"))
-                         .alias("__features"))
-        fit_on = (vecs.sample(fit_fraction, seed=seed)
-                  if fit_fraction else vecs)
-        km = KMeans(k=n_centroids, seed=seed, featuresCol="__features",
-                    predictionCol="centroid")
-        model = km.fit(fit_on)
-        assigned = model.transform(vecs).select("id", "embedding",
-                                                "centroid")
-        centers_list = [[float(x) for x in c]
-                        for c in model.clusterCenters()]
-    else:
-        raise ValueError(f"unknown quantizer {quantizer!r}"
-                         " (expected 'det' or 'mllib')")
+    # NULL vectors have no cell — same rule as the clustering ops
+    df = df.where(F.col(vec_col).isNotNull())
+    fit_on = hash_sample(df, id_col, fit_fraction) if fit_fraction else df
+    centers_list = cl.kmeans_fit(fit_on, id_col, vec_col,
+                                 k=n_centroids, iters=iters)
+    # ONE assignment scan (clustering._assign_multi_cols) encodes the
+    # centroid and, with pq_m, the m PQ codes as m+1 specs of the
+    # same vector; vectors not exactly dim wide raise. Above
+    # ASSIGN_EXPR_MAX_K codes it runs as the vectorized NumPy kernel
+    # (bit-identical), so a deployment-sized n_centroids does not pay
+    # the O(k·dim) interpreted expression per row.
+    dim = len(centers_list[0])
+    specs = [(0, dim, centers_list)]
+    if pq_m is not None:
+        sub = dim // pq_m
+        pq_books = cl.pq_fit(fit_on, id_col, vec_col, m=pq_m,
+                             k_codes=pq_codes, iters=pq_iters, dim=dim)
+        specs += [(j * sub, sub, b) for j, b in enumerate(pq_books)]
+    assigned = cl._assign_multi_cols(
+        df.select(F.col(id_col).alias("id"),
+                  F.col(vec_col).alias("v")), specs, dim).select(
+        "id", F.col("v").alias("embedding"),
+        F.col("__cl0").alias("centroid"),
+        *[F.col(f"__cl{j + 1}").alias(f"code{j}")
+          for j in range(len(specs) - 1)])
     (assigned.write.mode("overwrite").partitionBy("centroid")
      .parquet(os.path.join(path, "vectors")))
 
@@ -116,7 +90,6 @@ def ivf_build(df: DataFrame, id_col: str, vec_col: str, path: str,
      .coalesce(1).write.mode("overwrite")
      .parquet(os.path.join(path, "centroids")))
 
-    dim = len(centers[0][1]) if centers else 0
     meta = {"n_centroids": n_centroids, "dim": dim, "metric": "cosine",
             "seed": seed, "fit_fraction": fit_fraction,
             "quantizer": quantizer, "iters": iters,

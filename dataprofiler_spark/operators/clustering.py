@@ -521,9 +521,8 @@ def ivf_topk_det(df: DataFrame, id_col: str, vec_col: str,
                  n_queries: int = 5, k: int = 5,
                  round_digits: int = 6) -> DataFrame:
     """IVF (inverted-file) approximate nearest-neighbour search with a
-    fully deterministic coarse quantizer — the oracle-checkable twin of
-    the MLlib-backed paths (operators/mllib_ops.ivf_topk, persisted
-    operators/ann_index): same plan shape, but the cells come from this
+    fully deterministic coarse quantizer — the in-memory form of the
+    persisted index (operators/ann_index): the cells come from this
     module's cross-engine-exact k-means, so a SQL engine reproduces every
     ranked neighbour bit-for-bit.
 

@@ -10,10 +10,9 @@ Spark design: all k(k−1)/2 correlation pairs in ONE wide agg of scaled-
 integer power/cross sums — corr = (n·Sxy − Sx·Sy) /
 √((n·Sxx − Sx²)(n·Syy − Sy²)), exact integer arithmetic until a single
 double conversion, so the matrix is engine-reproducible (same approach as
-operators/numeric.py exact mode). MLlib's Correlation.corr is the
-one-liner alternative; this formulation exists because it is both exact
-and one pass. Chi² contingency tables are one groupBy per pair (tiny
-output); the statistic is closed-form from the counts.
+operators/numeric.py exact mode). Chi² contingency tables are one
+groupBy per pair (tiny output); the statistic is closed-form from the
+counts.
 """
 
 from __future__ import annotations
@@ -26,26 +25,6 @@ S = 1000.0
 
 def _xi(c: str):
     return F.round(F.col(c).cast("double") * S, 0).cast("decimal(19,0)")
-
-
-def correlation_matrix_native(df: DataFrame, cols: list[str],
-                              round_digits: int = 6) -> DataFrame:
-    """(col1, col2, corr) for all unordered pairs via the built-in
-    ``F.corr`` — one whole-stage-codegen pass over doubles. This is the
-    cluster fast path (matches exact mode to ~1e-12 but not bit-exactly,
-    so the DuckDB-oracled query uses :func:`correlation_matrix`)."""
-    exprs = []
-    for i, a in enumerate(cols):
-        for b in cols[i + 1:]:
-            exprs.append(F.corr(F.col(a).cast("double"),
-                                F.col(b).cast("double")).alias(f"c_{a}__{b}"))
-    row = df.agg(*exprs)
-    structs = [
-        F.struct(F.lit(a).alias("col1"), F.lit(b).alias("col2"),
-                 F.round(F.col(f"c_{a}__{b}"), round_digits).alias("corr"))
-        for i, a in enumerate(cols) for b in cols[i + 1:]
-    ]
-    return row.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
 
 
 def correlation_matrix(df: DataFrame, cols: list[str],

@@ -620,24 +620,29 @@ def neardup_clusters(df: DataFrame, id_col: str, text_col: str,
     practice; a pair graph that has not converged after ``max_iter``
     rounds raises ``RuntimeError`` (see ``connected_components``). The
     size/canonical assembly is one groupBy + one shuffle join on
-    cluster_id."""
+    cluster_id. Release the pairs' caches and the components' snapshot
+    with ``session.unpersist_plan(result)`` after the last action."""
     from dataprofiler_spark.operators.graph import connected_components
 
     pairs = minhash_lsh_pairs(df, id_col, text_col, k=k,
                               num_hashes=num_hashes, bands=bands,
                               threshold=threshold, round_digits=round_digits,
                               max_bucket_size=max_bucket_size)
-    comps = (connected_components(pairs, "id1", "id2", max_iter=max_iter)
-             .withColumnRenamed("node", "id"))
+    labels = connected_components(pairs, "id1", "id2", max_iter=max_iter)
+    comps = labels.withColumnRenamed("node", "id")
     docs = df.select(F.col(id_col).alias("id"))
     lab = (docs.join(comps, "id", "left")
            .select("id",
                    F.coalesce("component", F.col("id")).alias("cluster_id")))
     sizes = lab.groupBy("cluster_id").agg(
         F.count(F.lit(1)).alias("cluster_size"))
-    return (lab.join(sizes, "cluster_id")
-            .select("id", "cluster_id", "cluster_size",
-                    (F.col("id") == F.col("cluster_id")).alias("is_canonical")))
+    out = (lab.join(sizes, "cluster_id")
+           .select("id", "cluster_id", "cluster_size",
+                   (F.col("id") == F.col("cluster_id")).alias("is_canonical")))
+    # carry the pairs stage's caches and the components' snapshot
+    from dataprofiler_spark.session import register_persisted
+    return register_persisted(out, *getattr(pairs, "_dps_persisted", []),
+                              *labels._dps_persisted)
 
 
 def neardup_comp_ctes(table: str, id_col: str, text_col: str,

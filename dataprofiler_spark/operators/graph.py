@@ -22,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dataprofiler_spark.session import _checkpoint_tracking, _release_rdds
+from dataprofiler_spark.session import (_checkpoint_tracking, _release_rdds,
+                                        register_persisted)
 
 SRC_KEYWORDS = ("source", "src", "from", "node_id_1", "start")
 DST_KEYWORDS = ("target", "destination", "dst", "to", "node_id_2", "end")
@@ -89,6 +90,10 @@ def connected_components(edges: DataFrame, src: str, dst: str,
     label and this raises ``RuntimeError`` rather than return
     unconverged labels.
 
+    The returned labels are the last round's snapshot, registered on
+    the result: the caller owns it and frees it with
+    ``session.unpersist_plan(result)`` after its last action over it.
+
     NULL is not a node: an edge with a NULL endpoint contributes its
     non-NULL side as an isolated node and no edge — otherwise the NULL
     "node" becomes its own phantom component and, worse, equality joins
@@ -142,18 +147,20 @@ def connected_components(edges: DataFrame, src: str, dst: str,
                 f"diameter)")
     finally:
         sym.unpersist()
-    return labels
+    return register_persisted(labels, *ckpt_ids)
 
 
 def component_summary(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """(num_components, max_component_size) — the reference's 'max
-    connected component' stat (graph_profiler.py:333-366)."""
+    connected component' stat (graph_profiler.py:333-366). Carries the
+    components' snapshot: release it with ``unpersist_plan(result)``."""
     comps = connected_components(edges, src, dst)
     sizes = comps.groupBy("component").agg(F.count(F.lit(1)).alias("size"))
-    return sizes.agg(
+    out = sizes.agg(
         F.count(F.lit(1)).alias("num_components"),
         F.max("size").alias("max_component_size"),
     )
+    return register_persisted(out, *comps._dps_persisted)
 
 
 def pagerank(edges: DataFrame, src: str, dst: str, iters: int = 3,
@@ -179,7 +186,9 @@ def pagerank(edges: DataFrame, src: str, dst: str, iters: int = 3,
     mass loss (the classic integer-PageRank trade) is identical on
     both engines, and dangling-node mass is dropped (documented).
 
-    Output: (node, rank) with rank = rank9 / 1e9, rounded."""
+    Output: (node, rank) with rank = rank9 / 1e9, rounded. The ranks
+    are the last round's snapshot, registered on the result: release it
+    with ``session.unpersist_plan(result)`` after the last action."""
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
          .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
          .persist())
@@ -217,9 +226,10 @@ def pagerank(edges: DataFrame, src: str, dst: str, iters: int = 3,
             ckpt_ids = added
     finally:
         e.unpersist()
-    return ranks.select("node",
-                        F.round(F.col("r") / F.lit(1e9), round_digits)
-                        .alias("rank"))
+    out = ranks.select("node",
+                       F.round(F.col("r") / F.lit(1e9), round_digits)
+                       .alias("rank"))
+    return register_persisted(out, *ckpt_ids)
 
 
 def oracle_pagerank_sql(table: str, src: str, dst: str, iters: int = 3,

@@ -11,18 +11,15 @@ multiprocessing-per-column model is an anti-pattern under Catalyst; a
 single wide aggregate is partially aggregated map-side, shuffles one row
 per partition, and whole-stage-codegens the entire expression battery).
 
-Two modes:
+One implementation, ``numeric_profile_exact``: decimal-typed power sums
+for count/sum/mean/variance (exact, associative, engine-independent)
+plus mean-centered double sums for skewness/kurtosis (catastrophic-
+cancellation-free, deterministic to ~1e-13 relative). It is the oracle-
+matched path: the same formulas in ANSI SQL produce hash-identical
+results on DuckDB. (The Profiler's whole-table battery is its own wide
+agg in plans/profile_plan.py.)
 
-* ``native`` — pure built-in Catalyst aggregates (F.min/max/sum/avg/
-  var_samp/skewness/kurtosis + correction factors). Fastest; float results
-  depend on summation order (fine for profiling, not bit-reproducible).
-* ``exact`` — decimal-typed power sums for count/sum/mean/variance (exact,
-  associative, engine-independent) plus mean-centered double sums for
-  skewness/kurtosis (catastrophic-cancellation-free, deterministic to
-  ~1e-13 relative). This is the oracle-matched path: the same formulas in
-  ANSI SQL produce hash-identical results on DuckDB.
-
-Both melt to one row per column:
+It melts to one row per column:
 (column, sample_size, null_count, match_count, min, max, sum, mean,
  variance, stddev, skewness, kurtosis, num_zeros, num_negatives)
 """
@@ -73,57 +70,6 @@ def _melt_stats(stats_row: DataFrame, cols: list[str]) -> DataFrame:
         for c in cols
     ]
     return stats_row.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
-
-
-# ---------------------------------------------------------------------------
-# native mode — built-in Catalyst aggregates
-# ---------------------------------------------------------------------------
-
-def native_stat_exprs(c: str) -> list[Column]:
-    col = F.col(c)
-    n = F.count(col)
-    g1 = F.skewness(col)
-    g2 = F.kurtosis(col)
-    return [
-        F.count(F.lit(1)).alias(f"{c}__sample_size"),
-        F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"{c}__null_count"),
-        n.alias(f"{c}__match_count"),
-        F.min(col).cast("double").alias(f"{c}__min"),
-        F.max(col).cast("double").alias(f"{c}__max"),
-        F.sum(col).cast("double").alias(f"{c}__sum"),
-        F.avg(col).cast("double").alias(f"{c}__mean"),
-        F.var_samp(col).alias(f"{c}__variance"),
-        F.stddev_samp(col).alias(f"{c}__stddev"),
-        _corrected_skew(n, g1).alias(f"{c}__skewness"),
-        _corrected_kurt(n, g2).alias(f"{c}__kurtosis"),
-        F.sum(F.when(col == 0, 1).otherwise(0)).alias(f"{c}__num_zeros"),
-        F.sum(F.when(col < 0, 1).otherwise(0)).alias(f"{c}__num_negatives"),
-    ]
-
-
-def numeric_profile_native(df: DataFrame, cols: list[str] | None = None,
-                           chunk_cols: int = 3) -> DataFrame:
-    """One-pass-per-chunk numeric battery.
-
-    Catalyst codegen compile time grows superlinearly with aggregate
-    count (measured on this machine: 8 cols × 13 aggs ≈ 4.8 s to
-    compile vs 0.7 s for 4 cols), so columns are aggregated in chunks
-    of ``chunk_cols`` and the 1-row results cross-joined. Each chunk's
-    parquet scan is column-pruned to its own columns, so total bytes
-    read equal the monolithic plan, and the independent agg stages run
-    concurrently under the DAG scheduler."""
-    cols = cols or numeric_columns(df)
-    chunks = [cols[i:i + chunk_cols] for i in range(0, len(cols), chunk_cols)]
-    outs = []
-    for part in chunks:
-        exprs: list[Column] = []
-        for c in part:
-            exprs.extend(native_stat_exprs(c))
-        outs.append(df.agg(*exprs))
-    joined = outs[0]
-    for o in outs[1:]:
-        joined = joined.join(o, how="cross")  # 1-row × 1-row
-    return _melt_stats(joined, cols)
 
 
 # ---------------------------------------------------------------------------
@@ -237,16 +183,6 @@ def numeric_profile_exact(
             F.col(f"{c}__negs").alias(f"{c}__num_negatives"),
         ])
     return _melt_stats(joined.select(*out_cols), cols)
-
-
-def numeric_profile(
-    df: DataFrame, cols: list[str] | None = None, mode: str = "native"
-) -> DataFrame:
-    if mode == "native":
-        return numeric_profile_native(df, cols)
-    if mode == "exact":
-        return numeric_profile_exact(df, cols)
-    raise ValueError(f"unknown mode {mode!r}")
 
 
 def numeric_profile_by_group(df: DataFrame, group_col: str, value_col: str,

@@ -417,8 +417,8 @@ def embedding_neardup_clusters(df: DataFrame, id_col: str, vec_col: str,
                                     planes_per_band=planes_per_band,
                                     dim=dim, round_digits=round_digits,
                                     max_bucket_size=max_bucket_size)
-    comps = (connected_components(pairs, "id1", "id2", max_iter=max_iter)
-             .withColumnRenamed("node", "id"))
+    labels = connected_components(pairs, "id1", "id2", max_iter=max_iter)
+    comps = labels.withColumnRenamed("node", "id")
     ids = df.select(F.col(id_col).alias("id"))
     lab = (ids.join(comps, "id", "left")
            .select("id",
@@ -428,10 +428,10 @@ def embedding_neardup_clusters(df: DataFrame, id_col: str, vec_col: str,
     out = (lab.join(sizes, "cluster_id")
            .select("id", "cluster_id", "cluster_size",
                    (F.col("id") == F.col("cluster_id")).alias("is_canonical")))
-    # propagate the pairs stage's cache handle (r12 contract)
+    # carry the pairs stage's cache and the components' snapshot
     from dataprofiler_spark.session import register_persisted
-    register_persisted(out, *getattr(pairs, "_dps_persisted", []))
-    return out
+    return register_persisted(out, *getattr(pairs, "_dps_persisted", []),
+                              *labels._dps_persisted)
 
 
 def oracle_embedding_neardup_clusters_sql(table: str, id_col: str,

@@ -130,8 +130,11 @@ class GraphProfiler:
         from dataprofiler_spark.operators.graph import (component_summary,
                                                         degree_stats,
                                                         edge_attribute_profile)
+        from dataprofiler_spark.session import unpersist_plan
         deg = degree_stats(self.edges, self.src, self.dst).collect()[0]
-        comp = component_summary(self.edges, self.src, self.dst).collect()[0]
+        summary = component_summary(self.edges, self.src, self.dst)
+        comp = summary.collect()[0]
+        unpersist_plan(summary)
         attrs = [c for c in self.edges.columns if c not in (self.src, self.dst)]
         return {
             "num_nodes": deg["num_nodes"],

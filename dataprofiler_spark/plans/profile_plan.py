@@ -68,7 +68,7 @@ from pyspark.sql.types import (ArrayType, DateType, NumericType, StringType,
 
 from dataprofiler_spark.functions.nulls import DEFAULT_NULL_SPEC, NullSpec
 from dataprofiler_spark.functions.types import DATETIME_FORMATS
-from dataprofiler_spark.operators.histogram import auto_bin_count
+from dataprofiler_spark.operators.histogram import auto_bin_count, bucket_expr
 from dataprofiler_spark.session import (_checkpoint_tracking,
                                         _release_rdds, ensure_parallelism,
                                         submit_inheriting)
@@ -918,15 +918,6 @@ class Profiler:
             specs.append((c, ns.min, ns.max, bins))
         return candidates, specs
 
-    @staticmethod
-    def _hist_bucket_expr(c: str, lo: float, hi: float, bins: int) -> Column:
-        w = (hi - lo) / bins
-        return F.least(
-            F.greatest(
-                F.floor((F.col(c).cast("double") - F.lit(lo)) / F.lit(w))
-                .cast("int"), F.lit(0)),
-            F.lit(bins - 1))
-
     def _fused_counts_pass(self, df: DataFrame, state: DatasetState,
                            cat_cols: list[str],
                            hist_specs: list[tuple[str, float, float, int]]
@@ -947,7 +938,7 @@ class Profiler:
             entries.append(F.when(
                 F.col(c).isNotNull(),
                 F.struct(F.lit("hist:" + c).alias("column"),
-                         self._hist_bucket_expr(c, lo, hi, bins)
+                         bucket_expr(F.col(c), float(lo), float(hi), bins)
                          .cast("string").alias("key"))))
         if not entries:
             return

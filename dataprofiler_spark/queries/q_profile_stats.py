@@ -42,7 +42,7 @@ def outlier_counts_lineitem(spark, sf_dir):
 )
 def numeric_profile_lineitem(spark, sf_dir):
     df = T(spark, sf_dir, "lineitem")
-    return num.numeric_profile(df, _LINEITEM_NUM, mode="exact")
+    return num.numeric_profile_exact(df, _LINEITEM_NUM)
 
 
 _ORDERS_NUM = ["o_totalprice"]
@@ -54,7 +54,7 @@ _ORDERS_NUM = ["o_totalprice"]
 )
 def numeric_profile_orders(spark, sf_dir):
     df = T(spark, sf_dir, "orders")
-    return num.numeric_profile(df, _ORDERS_NUM, mode="exact")
+    return num.numeric_profile_exact(df, _ORDERS_NUM)
 
 
 # ---------------------------------------------------------------------------

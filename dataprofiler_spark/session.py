@@ -147,9 +147,12 @@ def load_tables(spark: SparkSession, sf_dir: str, tables: list[str] | None = Non
     return out
 
 
-def register_persisted(out, *frames):
-    """Attach persisted dependency frames to a returned plan so callers
-    can release the cache once done: ``unpersist_plan(result)``.
+def register_persisted(out, *handles):
+    """Attach what a returned plan pinned so callers can release it
+    once done: ``unpersist_plan(result)``. A handle is a persisted
+    DataFrame or the id of a persisted RDD — a localCheckpoint snapshot
+    from :func:`_checkpoint_tracking`, which iterative operators
+    (connected_components, pagerank) return.
 
     Operators with a ``cache=True`` contract (minhash_lsh_pairs,
     semantic_dedup, winnow_neardup_pairs, curate_corpus_semantic, ...)
@@ -157,29 +160,34 @@ def register_persisted(out, *frames):
     persisted frame is NOT the returned frame, so callers had no handle
     to unpersist it short of ``spark.catalog.clearCache()`` — a session
     running many corpora accumulated pinned cache entries (ADVICE r11).
-    Frames already registered on an input plan are propagated, so the
+    Handles already registered on an input plan are propagated, so the
     composed funnel releases its stages' caches too. The attribute is
     plain Python state on the DataFrame wrapper: it survives returns
     and assignments, but NOT further transformations (``df.select(...)``
     builds a new wrapper) — release at the operator-output level.
     """
     existing = list(getattr(out, "_dps_persisted", []))
-    out._dps_persisted = existing + list(frames)
+    out._dps_persisted = existing + list(handles)
     return out
 
 
 def unpersist_plan(df, blocking: bool = False) -> int:
-    """Release every cache a ``cache=True`` operator pinned under this
+    """Release every cache and snapshot an operator pinned under this
     returned plan (see :func:`register_persisted`). Safe to call on any
     DataFrame (no-op when nothing is registered); returns the number of
-    frames released. Call AFTER the final action over the result —
-    unpersisting earlier just recomputes."""
-    frames = list(getattr(df, "_dps_persisted", []))
-    for f in frames:
-        f.unpersist(blocking)
-    if frames:
+    handles released. Call AFTER the final action over the result —
+    unpersisting a cache earlier just recomputes, and a released
+    snapshot cannot be recomputed at all (its lineage is truncated)."""
+    handles = list(getattr(df, "_dps_persisted", []))
+    rdd_ids = {h for h in handles if isinstance(h, int)}
+    for h in handles:
+        if not isinstance(h, int):
+            h.unpersist(blocking)
+    if rdd_ids:
+        _release_rdds(df.sparkSession.sparkContext, rdd_ids)
+    if handles:
         df._dps_persisted = []
-    return len(frames)
+    return len(handles)
 
 
 def submit_inheriting(ex, spark: SparkSession, fn, *args):
@@ -215,7 +223,10 @@ def _checkpoint_tracking(df: DataFrame, eager: bool = True
     unbounded storage-memory leak, so callers free each snapshot with
     :func:`_release_rdds` AFTER the last job that reads it — a
     localCheckpoint's lineage is truncated, so unpersisting it while
-    still referenced loses the data, it cannot be recomputed."""
+    still referenced loses the data, it cannot be recomputed. A snapshot
+    that IS the returned result is registered on it instead
+    (:func:`register_persisted`), for the caller's
+    :func:`unpersist_plan`."""
     sc = df.sparkSession.sparkContext
     before = _persistent_rdd_ids(sc)
     out = df.localCheckpoint(eager=eager)

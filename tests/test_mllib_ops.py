@@ -1,5 +1,7 @@
-"""MLlib-variant operators: behavior tests (recall vs exact operators,
-shape/contract), not hash tests — MLlib results are seed-dependent."""
+"""Dedup and vector operators: behavior tests (bucket caps, persisted
+IVF / IVF-PQ index recall, pruning and determinism, decontamination,
+int8 quantization, embedding covariance, winnowing) — shape and
+contract checks beside the oracle-parity rows."""
 
 from __future__ import annotations
 
@@ -7,81 +9,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-
-from dataprofiler_spark.operators import mllib_ops as ml
-
-
-@pytest.fixture(scope="module")
-def docs(spark, sf_dir):
-    return spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-
-
-@pytest.fixture(scope="module")
-def emb(spark, sf_dir):
-    return spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-
-
-def test_minhash_lsh_ml_finds_real_neardups(spark, docs):
-    from dataprofiler_spark.operators.dedup import ngram_jaccard_adjacent
-
-    pairs = ml.minhash_lsh_pairs_ml(docs, "doc_id", "text",
-                                    jaccard_threshold=0.55)
-    got = {(r["id1"], r["id2"]) for r in pairs.collect()}
-    truth = {(r["id1"], r["id2"])
-             for r in ngram_jaccard_adjacent(docs, "doc_id", "text").collect()
-             if r["jaccard"] >= 0.6}
-    if truth:  # recall on comfortably-above-threshold adjacent pairs
-        recall = len(got & truth) / len(truth)
-        assert recall >= 0.8, (recall, len(truth))
-
-
-def test_ann_topk_ml_contract(spark, emb):
-    nn = ml.ann_topk_ml(emb, "vec_id", "embedding", 0, k=5).collect()
-    assert len(nn) == 5
-    assert all(r["vec_id"] != 0 for r in nn)
-    dists = [r["dist"] for r in nn]
-    assert dists == sorted(dists)
-
-
-def test_ivf_topk_recall(spark, emb):
-    from dataprofiler_spark.operators.similarity import cosine_topk
-
-    exact = [r["vec_id"] for r in
-             cosine_topk(emb, "vec_id", "embedding", 0, 10).collect()]
-    approx = [r["vec_id"] for r in
-              ml.ivf_topk(emb, "vec_id", "embedding", 0, k=10,
-                          n_centroids=8, nprobe=4).collect()]
-    # probing half the centroids should recover most of the true top-10
-    assert len(set(exact) & set(approx)) >= 5
-
-
-def test_correlation_ml_close_to_exact(spark, sf_dir):
-    from dataprofiler_spark.operators.correlation import correlation_matrix
-
-    df = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    exact = {(r["col1"], r["col2"]): r["corr"]
-             for r in correlation_matrix(df, cols).collect()}
-    m = ml.correlation_matrix_ml(df, cols)
-    for i, a in enumerate(cols):
-        for j, b in enumerate(cols):
-            if i < j:
-                assert m[i][j] == pytest.approx(exact[(a, b)], abs=1e-6)
-
-
-def test_correlation_native_close_to_exact(spark, sf_dir):
-    from dataprofiler_spark.operators.correlation import (
-        correlation_matrix, correlation_matrix_native)
-
-    df = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    exact = {(r["col1"], r["col2"]): r["corr"]
-             for r in correlation_matrix(df, cols).collect()}
-    native = {(r["col1"], r["col2"]): r["corr"]
-              for r in correlation_matrix_native(df, cols).collect()}
-    assert set(native) == set(exact)
-    for key, v in exact.items():
-        assert native[key] == pytest.approx(v, abs=1e-9)
 
 
 def test_minhash_bucket_cap_drops_degenerate_bucket(spark):
@@ -153,9 +80,7 @@ def test_ivf_query_deterministic_across_builds(spark, sf_dir, tmp_path):
 def test_ivf_build_quantizer_variants(spark, sf_dir, tmp_path):
     """'det' (default) must agree with clustering.kmeans_assign cell for
     cell (that is what makes the artifact oracle-checkable end-to-end);
-    'mllib' still builds and queries; unknown quantizers raise."""
-    import pytest
-
+    any other quantizer raises."""
     from dataprofiler_spark.operators import ann_index as ai
     from dataprofiler_spark.operators import clustering as cl
 
@@ -170,17 +95,10 @@ def test_ivf_build_quantizer_variants(spark, sf_dir, tmp_path):
         emb, "vec_id", "embedding", k=4, iters=2).collect()}
     assert stored == expect
 
-    ml_path = str(tmp_path / "ml")
-    ai.ivf_build(emb, "vec_id", "embedding", ml_path, n_centroids=4,
-                 quantizer="mllib")
-    q = [float(x) for x in
-         emb.where(F.col("vec_id") == 0).head()["embedding"]]
-    assert len(ai.ivf_query(spark, ml_path, q, k=3, nprobe=2)
-               .collect()) == 3
-
-    with pytest.raises(ValueError, match="quantizer"):
-        ai.ivf_build(emb, "vec_id", "embedding", str(tmp_path / "x"),
-                     quantizer="hnsw")
+    for bad in ("mllib", "hnsw"):
+        with pytest.raises(ValueError, match="quantizer"):
+            ai.ivf_build(emb, "vec_id", "embedding", str(tmp_path / bad),
+                         quantizer=bad)
 
 
 @pytest.mark.parametrize("pq_codes", [4, 24])
