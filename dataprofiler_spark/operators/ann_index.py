@@ -38,16 +38,15 @@ from pyspark.sql import functions as F
 
 def ivf_build(df: DataFrame, id_col: str, vec_col: str, path: str,
               n_centroids: int = 16, fit_fraction: float | None = None,
-              seed: int = 42, quantizer: str = "det",
-              iters: int = 2, pq_m: int | None = None,
+              quantizer: str = "det", iters: int = 2, pq_m: int | None = None,
               pq_codes: int = 16, pq_iters: int = 1) -> dict:
     """Fit + assign + write the index; returns the metadata dict.
 
     ``quantizer`` must be ``"det"`` (clustering.kmeans_fit, the only
-    k-means); it and ``seed`` are recorded in the metadata. ``pq_m``
-    additionally fits ``pq_m`` product-quantization codebooks
-    (clustering.pq_fit) and stores each vector's m codes in the vectors
-    table plus the codebooks in ``_pq_codebooks.json`` — the durable
+    k-means) and is recorded in the metadata. ``pq_m`` additionally
+    fits ``pq_m`` product-quantization codebooks (clustering.pq_fit)
+    and stores each vector's m codes in the vectors table plus the
+    codebooks in ``_pq_codebooks.json`` — the durable
     IVF-PQ layout ivf_query_adc serves from without ever reading the
     vector column."""
     if quantizer != "det":
@@ -91,8 +90,8 @@ def ivf_build(df: DataFrame, id_col: str, vec_col: str, path: str,
      .parquet(os.path.join(path, "centroids")))
 
     meta = {"n_centroids": n_centroids, "dim": dim, "metric": "cosine",
-            "seed": seed, "fit_fraction": fit_fraction,
-            "quantizer": quantizer, "iters": iters,
+            "fit_fraction": fit_fraction, "quantizer": quantizer,
+            "iters": iters,
             "pq_m": pq_m, "pq_codes": pq_codes if pq_m else None,
             "pq_iters": pq_iters if pq_m else None}
     with open(os.path.join(path, "_ivf_meta.json"), "w") as f:

@@ -10,7 +10,7 @@ Spark design: all k(k−1)/2 correlation pairs in ONE wide agg of scaled-
 integer power/cross sums — corr = (n·Sxy − Sx·Sy) /
 √((n·Sxx − Sx²)(n·Syy − Sy²)), exact integer arithmetic until a single
 double conversion, so the matrix is engine-reproducible (same approach as
-operators/numeric.py exact mode). Chi² contingency tables are one
+operators/numeric.numeric_profile_exact). Chi² contingency tables are one
 groupBy per pair (tiny output); the statistic is closed-form from the
 counts.
 """
@@ -34,7 +34,7 @@ def correlation_matrix(df: DataFrame, cols: list[str],
     NOTE reference semantics impute nulls with the column mean; with no
     nulls (the common parquet case) plain pairwise sums are identical and
     one pass. The imputation variant adds a first pass for means and
-    fills — same plan shape as numeric exact mode.
+    fills — same plan shape as numeric.numeric_profile_exact.
 
     Overflow safety: Pearson sums are shift-invariant, so every scaled
     integer is pivoted by its column's min (one tiny pre-agg, embedded

@@ -883,12 +883,15 @@ def canonical_sample(df: DataFrame, id_col: str, text_col: str,
     at any scale, under any partitioning."""
     from dataprofiler_spark.operators.sampling import hash_fraction_expr
 
+    from dataprofiler_spark.session import register_persisted
+
     clusters = neardup_clusters(df, id_col, text_col, k=k,
                                 num_hashes=num_hashes, bands=bands,
                                 threshold=threshold)
-    return (clusters.where(F.col("is_canonical"))
-            .where(hash_fraction_expr(F.col("id"), seed) < fraction)
-            .select("id", "cluster_id", "cluster_size"))
+    out = (clusters.where(F.col("is_canonical"))
+           .where(hash_fraction_expr(F.col("id"), seed) < fraction)
+           .select("id", "cluster_id", "cluster_size"))
+    return register_persisted(out, *clusters._dps_persisted)
 
 
 def oracle_canonical_sample_sql(table: str, id_col: str, text_col: str,

@@ -432,6 +432,7 @@ def leakage_free_split(df: DataFrame, id_col: str, text_col: str,
     into a lower-id one (inherent to any cluster-consistent rule).
     """
     from dataprofiler_spark.operators.dedup import neardup_clusters
+    from dataprofiler_spark.session import register_persisted
 
     fractions = fractions or {"train": 0.8, "val": 0.1, "test": 0.1}
     _validate_split_fractions(fractions)
@@ -439,9 +440,10 @@ def leakage_free_split(df: DataFrame, id_col: str, text_col: str,
                                 num_hashes=num_hashes, bands=bands,
                                 threshold=threshold,
                                 max_bucket_size=max_bucket_size)
-    return clusters.select(
+    out = clusters.select(
         "id", "cluster_id",
         _split_expr(F.col("cluster_id"), fractions, seed).alias("split"))
+    return register_persisted(out, *clusters._dps_persisted)
 
 
 def leakage_free_split_manifest(df: DataFrame, id_col: str, text_col: str,
@@ -453,13 +455,16 @@ def leakage_free_split_manifest(df: DataFrame, id_col: str, text_col: str,
                                 ) -> DataFrame:
     """(split, n_docs, n_clusters) rollup of :func:`leakage_free_split`
     — one extra groupBy over the assignment."""
+    from dataprofiler_spark.session import register_persisted
+
     assign = leakage_free_split(df, id_col, text_col, fractions, seed, k,
                                 num_hashes, bands, threshold,
                                 max_bucket_size)
-    return (assign.groupBy("split")
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.countDistinct("cluster_id").alias("n_clusters"))
-            .orderBy("split"))
+    out = (assign.groupBy("split")
+           .agg(F.count(F.lit(1)).alias("n_docs"),
+                F.countDistinct("cluster_id").alias("n_clusters"))
+           .orderBy("split"))
+    return register_persisted(out, *assign._dps_persisted)
 
 
 def oracle_leakage_free_split_sql(table: str, id_col: str, text_col: str,

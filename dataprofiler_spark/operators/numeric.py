@@ -73,7 +73,7 @@ def _melt_stats(stats_row: DataFrame, cols: list[str]) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# exact mode — decimal power sums + centered higher moments (oracle path)
+# decimal power sums + centered higher moments (the oracle-checked battery)
 # ---------------------------------------------------------------------------
 
 def numeric_profile_exact(
@@ -197,7 +197,7 @@ def numeric_profile_by_group(df: DataFrame, group_col: str, value_col: str,
     drill-downs the second-moment battery is the standard ask, and the
     full battery remains available per segment via a filter +
     :func:`numeric_profile_exact`. Decimal power sums keep results
-    engine-exact (same formulation as exact mode)."""
+    engine-exact (same formulation as numeric_profile_exact)."""
     r = round_digits
     col = F.col(value_col)
     xi = F.round(col.cast("double") * _S, 0).cast("decimal(19,0)")

@@ -110,7 +110,7 @@ class Expectation:
 
 
 # scaled-integer decimal sum: engine-exact mean (same trick as
-# operators/numeric.py exact mode — a plain double sum is summation-
+# operators/numeric.numeric_profile_exact — a plain double sum is summation-
 # order-dependent and would make pass/fail nondeterministic at the
 # boundary)
 _MEAN_SCALE = 1000

@@ -136,9 +136,9 @@ def embedding_outliers_embeddings(spark, sf_dir):
 def ivf_topk_embeddings(spark, sf_dir):
     """IVF ANN search under the deterministic coarse quantizer: the 5
     smallest-id queries each probe their 2 nearest of 8 k-means cells,
-    exact cosine ranks the inverted lists — the oracle-checkable twin of
-    the MLlib/persisted IVF paths (same plan shape, reproducible
-    cells)."""
+    exact cosine ranks the inverted lists — the in-memory counterpart of
+    the persisted IVF index (operators/ann_index; both fit with
+    clustering.kmeans_fit)."""
     return clus.ivf_topk_det(T(spark, sf_dir, "embeddings"),
                              "vec_id", "embedding", k_clusters=8,
                              iters=2, nprobe=2, n_queries=5, k=5)

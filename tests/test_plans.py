@@ -668,11 +668,16 @@ def test_graph_outputs_release_through_unpersist_plan(spark, sf_dir):
     built on the components carry it forward with their own caches. So
     after the final action, unpersist_plan on each output leaves the
     session's persisted RDDs as they were (compared as id sets: earlier
-    tests' snapshots may be collected meanwhile)."""
-    from dataprofiler_spark.operators.dedup import neardup_clusters
+    tests' snapshots may be collected meanwhile). canonical_sample and
+    the leakage-free splits are built on neardup_clusters and carry its
+    handles too."""
+    from dataprofiler_spark.operators.dedup import (canonical_sample,
+                                                    neardup_clusters)
     from dataprofiler_spark.operators.graph import (component_summary,
                                                     connected_components,
                                                     pagerank)
+    from dataprofiler_spark.operators.mixture import (
+        leakage_free_split, leakage_free_split_manifest)
     from dataprofiler_spark.operators.similarity import (
         embedding_neardup_clusters)
     from dataprofiler_spark.session import unpersist_plan
@@ -693,6 +698,12 @@ def test_graph_outputs_release_through_unpersist_plan(spark, sf_dir):
         "neardup_clusters": lambda: neardup_clusters(docs, "doc_id", "text"),
         "embedding_neardup_clusters": lambda: embedding_neardup_clusters(
             emb, "vec_id", "embedding", threshold=0.9),
+        "canonical_sample": lambda: canonical_sample(
+            docs, "doc_id", "text", fraction=0.5),
+        "leakage_free_split": lambda: leakage_free_split(
+            docs, "doc_id", "text"),
+        "leakage_free_split_manifest": lambda: leakage_free_split_manifest(
+            docs, "doc_id", "text"),
     }
     for name, build in outputs.items():
         before = persisted()

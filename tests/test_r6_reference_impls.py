@@ -272,7 +272,7 @@ def test_correlation_matrix_vs_numpy(spark, sf_dir):
     got = {(r["col1"], r["col2"]): r["corr"] for r in
            correlation_matrix(li, cols).collect()}
     pdf = li.select(cols).toPandas()
-    # the engine's exact mode works on 1e-3-scaled integers; mirror that
+    # the engine's exact formulation works on 1e-3-scaled integers; mirror that
     # rounding so numpy sees the same data
     arr = np.round(pdf.to_numpy(dtype=float) * 1000) / 1000
     cm = np.corrcoef(arr, rowvar=False)
