@@ -60,7 +60,3 @@ class NullSpec:
 
 
 DEFAULT_NULL_SPEC = NullSpec()
-
-
-def is_null_expr(col: str | Column, spec: NullSpec | None = None) -> Column:
-    return (spec or DEFAULT_NULL_SPEC).is_null(col)

@@ -1,21 +1,13 @@
-"""Type-inference predicates as Column expressions.
+"""The datetime format list of the reference's type inference.
 
-The reference profiles every column with all four primitive type profilers
-and picks the first of [datetime, int, float, text] whose match ratio is
-1.0 (reference: dataprofiler/profilers/column_profile_compilers.py:260-317).
-Cell-level tests are string-based: is_int via float(x) == int(float(x))
-(numerical_column_stats.py:2025-2044), is_float via float(x) parsing
-(:2004-2022), datetime via strptime against a fixed format list
-(datetime_column_profile.py:25-42).
-
-Here each test is a vectorized Column predicate, so all four ratios for all
-columns are computed in ONE df.agg() pass instead of per-column loops.
+The reference tests datetime cells with strptime against a fixed format
+list (datetime_column_profile.py:25-42). The profile plan matches every
+format as one ``try_to_timestamp`` per cell in its wide agg
+(plans/profile_plan.py ``_string_col_exprs`` and ``_format_pass``), and
+computes the int/float cell tests inline next to them.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 # Reference format list (datetime_column_profile.py:25-42), strptime form →
 # Spark (JDK DateTimeFormatter) form. Order matters: first match wins for
@@ -38,52 +30,3 @@ DATETIME_FORMATS: tuple[tuple[str, str], ...] = (
     ("%H:%M:%S", "HH:mm:ss"),
     ("%H:%M", "HH:mm"),
 )
-
-INT_REGEX = r"^[+-]?\d+$"
-FLOAT_REGEX = r"^[+-]?(\d+\.?\d*|\.\d+)([eE][+-]?\d+)?$"
-
-
-def as_string(col: str | Column) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("string")
-
-
-def is_float_cell(col: str | Column) -> Column:
-    """float(x) parses (numerical_column_stats.py:2004-2022)."""
-    return as_string(col).try_cast("double").isNotNull()
-
-
-def is_int_cell(col: str | Column) -> Column:
-    """float(x) == int(float(x)) (numerical_column_stats.py:2025-2044).
-
-    Note '1.0' counts as int under reference semantics.
-    """
-    d = as_string(col).try_cast("double")
-    return d.isNotNull() & (d == F.floor(d))
-
-
-def is_int_cell_strict(col: str | Column) -> Column:
-    """Pure integer literal — the oracle-friendly strict form."""
-    return as_string(col).rlike(INT_REGEX)
-
-
-def parse_datetime(col: str | Column, formats=DATETIME_FORMATS) -> Column:
-    """First-matching-format parse → timestamp (NULL when no format hits)."""
-    s = as_string(col)
-    attempts = [F.try_to_timestamp(s, F.lit(spark_fmt)) for _, spark_fmt in formats]
-    return F.coalesce(*attempts)
-
-
-def is_datetime_cell(col: str | Column, formats=DATETIME_FORMATS) -> Column:
-    return parse_datetime(col, formats).isNotNull()
-
-
-def matched_formats_expr(col: str | Column, formats=DATETIME_FORMATS) -> list[Column]:
-    """Per-format matched-count aggregates (datetime_column_profile.py:245-345)."""
-    s = as_string(col)
-    return [
-        F.sum(
-            F.when(F.try_to_timestamp(s, F.lit(spark_fmt)).isNotNull(), 1).otherwise(0)
-        ).alias(f"fmt_{i}")
-        for i, (_, spark_fmt) in enumerate(formats)
-    ]

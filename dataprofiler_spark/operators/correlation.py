@@ -9,10 +9,12 @@ profiler_utils.py:723-788, default ON).
 Spark design: all k(k−1)/2 correlation pairs in ONE wide agg of scaled-
 integer power/cross sums — corr = (n·Sxy − Sx·Sy) /
 √((n·Sxx − Sx²)(n·Syy − Sy²)), exact integer arithmetic until a single
-double conversion, so the matrix is engine-reproducible (same approach as
-operators/numeric.numeric_profile_exact). Chi² contingency tables are one
-groupBy per pair (tiny output); the statistic is closed-form from the
-counts.
+double conversion, so the matrix is engine-reproducible. The scaled-
+integer encoding and the exact n·Sxy − Sx·Sy are numeric.scaled and
+numeric.exact_css, shared with numeric_profile_exact. Spearman is the
+same Pearson sums over doubled ranks, and the ranks come from
+histogram.counts_cdf. Chi² contingency tables are one groupBy per pair
+(tiny output); the statistic is closed-form from the counts.
 """
 
 from __future__ import annotations
@@ -20,11 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-S = 1000.0
-
-
-def _xi(c: str):
-    return F.round(F.col(c).cast("double") * S, 0).cast("decimal(19,0)")
+from dataprofiler_spark.operators.numeric import SCALE, exact_css, scaled
+from dataprofiler_spark.session import register_persisted
 
 
 def correlation_matrix(df: DataFrame, cols: list[str],
@@ -48,7 +47,7 @@ def correlation_matrix(df: DataFrame, cols: list[str],
     """
     pre = df.agg(
         F.count(F.lit(1)).alias("nn"),
-        *[F.min(_xi(c)).alias(f"mn_{c}") for c in cols],
+        *[F.min(scaled(c)).alias(f"mn_{c}") for c in cols],
         *[F.count(F.col(c)).alias(f"cnt_{c}") for c in cols],
     ).first()
     # Shift-invariance needs every row to carry the pivot; with nulls the
@@ -58,8 +57,8 @@ def correlation_matrix(df: DataFrame, cols: list[str],
 
     def yi(c):  # shifted scaled integer: xi − min(xi) ≥ 0, range-bounded
         if no_nulls and pre[f"mn_{c}"] is not None:
-            return _xi(c) - F.lit(int(pre[f"mn_{c}"])).cast("decimal(19,0)")
-        return _xi(c)
+            return scaled(c) - F.lit(int(pre[f"mn_{c}"])).cast("decimal(19,0)")
+        return scaled(c)
 
     def yd(c):  # the same shifted value in double, for the backstop sums
         return yi(c).cast("double")
@@ -85,11 +84,8 @@ def correlation_matrix(df: DataFrame, cols: list[str],
     n = F.col("n")
 
     def css(sab, sa, sb, sabd, sad, sbd):
-        return F.coalesce(
-            F.try_subtract(F.try_multiply(n.cast("decimal(38,0)"), sab),
-                           F.try_multiply(sa, sb)).cast("double"),
-            n.cast("double") * sabd - sad * sbd,
-        )
+        return exact_css(n, sab, sa, sb,
+                         fallback=n.cast("double") * sabd - sad * sbd)
 
     for i, a in enumerate(cols):
         for b in cols[i + 1:]:
@@ -112,6 +108,7 @@ def correlation_matrix(df: DataFrame, cols: list[str],
 
 def oracle_correlation_sql(table: str, cols: list[str],
                            round_digits: int = 6) -> str:
+    S = float(SCALE)
     xi = f"CAST(ROUND(CAST({{c}} AS DOUBLE) * {S}, 0) AS DECIMAL(19,0))"
     selects = []
     for i, a in enumerate(cols):
@@ -316,50 +313,7 @@ FROM mi, ha, hb
 """
 
 
-def _rank2_table(base: DataFrame, c: str, n_buckets: int) -> DataFrame:
-    """(v, r) for column ``c``: r = 2·avg_rank as an exact INTEGER
-    (avg ranks are half-integers under ties; doubling keeps the Pearson
-    machinery integer-exact, and Pearson is affine-invariant so the
-    doubled ranks give the same rho).
-
-    Distributed ranking with NO global window (the order.py range-bucket
-    pattern): distinct values bucket by width_bucket(v, lo, hi, B);
-    per-bucket totals collect to the driver (≤ B+1 rows, bounded) and
-    come back as broadcast exclusive offsets; the within-bucket running
-    count is a window partitioned by bucket. rank2 = 2·(rows below v)
-    + cnt(v) + 1."""
-    from pyspark.sql.window import Window
-
-    dv = (base.groupBy(F.col(c).alias("v"))
-          .agg(F.count(F.lit(1)).alias("cnt")))
-    mm = dv.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).first()
-    lo, hi = mm["lo"], mm["hi"]
-    if lo is None or lo == hi:
-        b = F.lit(1)
-    else:
-        b = F.expr(f"width_bucket(v, {lo!r}, {hi!r}, {n_buckets})")
-    dv = dv.withColumn("b", b)
-    tot = {r["b"]: r["t"] for r in
-           dv.groupBy("b").agg(F.sum("cnt").alias("t")).collect()}
-    offs, acc = [], 0
-    for bk in sorted(tot):
-        offs.append((int(bk), acc))
-        acc += int(tot[bk])
-    spark = base.sparkSession
-    off_df = F.broadcast(spark.createDataFrame(offs or [(1, 0)],
-                                               "ob int, off long"))
-    w = (Window.partitionBy("b").orderBy("v")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return (dv.join(off_df, dv["b"] == off_df["ob"], "left")
-            .select("v", "cnt",
-                    (F.coalesce("off", F.lit(0))
-                     + F.sum("cnt").over(w) - F.col("cnt")).alias("lt"))
-            .select("v", (F.lit(2) * F.col("lt") + F.col("cnt")
-                          + F.lit(1)).alias("r")))
-
-
 def spearman_matrix(df: DataFrame, cols: list[str],
-                    n_buckets: int = 1024,
                     round_digits: int = 6) -> DataFrame:
     """(col1, col2, rho) Spearman rank correlation for all unordered
     pairs — the monotone-dependence complement to the Pearson matrix
@@ -372,7 +326,17 @@ def spearman_matrix(df: DataFrame, cols: list[str],
     decimal (rank2 ≤ 2n+1, so Σr² ≤ 4n³ — inside decimal(38,0) to
     ~3·10¹¹ rows), making results independent of partitioning and
     bit-identical to the oracle. Ranks join back on value (rank is a
-    function of the value), so no row ids are needed."""
+    function of the value), so no row ids are needed.
+
+    Ranks come from the counts-CDF (histogram.counts_cdf) over each
+    column's per-value counts: rank2 = 2·c_start + cnt + 1, i.e.
+    2·avg_rank, an exact INTEGER (avg ranks are half-integers under
+    ties; Pearson is affine-invariant, so doubled ranks give the same
+    rho). No window sorts the full table in one partition. Each CDF's
+    snapshot is registered on the result: release them with
+    ``session.unpersist_plan(result)`` after the last action."""
+    from dataprofiler_spark.operators.histogram import counts_cdf
+
     dbl = [F.col(c).cast("double").alias(c) for c in cols]
     keep = None
     for c in cols:
@@ -380,8 +344,13 @@ def spearman_matrix(df: DataFrame, cols: list[str],
         keep = cond if keep is None else (keep & cond)
     base = df.select(*dbl).where(keep)
     ranked = base
+    handles = []
     for c in cols:
-        rt = _rank2_table(base, c, n_buckets)
+        cdf = counts_cdf(base.groupBy(F.col(c).alias("v"))
+                         .agg(F.count(F.lit(1)).alias("cnt")))
+        handles += cdf._dps_persisted
+        rt = cdf.select("v", (2 * F.col("c_start") + F.col("cnt") + 1)
+                        .alias("r"))
         ranked = (ranked.join(rt, ranked[c] == rt["v"])
                   .drop("v").withColumnRenamed("r", f"r_{c}"))
 
@@ -411,7 +380,9 @@ def spearman_matrix(df: DataFrame, cols: list[str],
                 F.round(F.when((da > 0) & (db > 0),
                                num / (F.sqrt(da) * F.sqrt(db))),
                         round_digits).alias("rho")))
-    return row.select(F.explode(F.array(*structs)).alias("s")).select("s.*")
+    return register_persisted(
+        row.select(F.explode(F.array(*structs)).alias("s")).select("s.*"),
+        *handles)
 
 
 def oracle_spearman_sql(table: str, cols: list[str],

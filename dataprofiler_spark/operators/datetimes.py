@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataprofiler_spark.operators.numeric import SCALE, scaled
+
 ISO = "yyyy-MM-dd HH:mm:ss"
 
 
@@ -70,16 +72,16 @@ def time_bucket_rollup(df: DataFrame, ts_col: str, value_col: str,
     canonical pre-aggregation pattern for event streams (and the same
     query shape runs under Structured Streaming with a watermark)."""
     b = F.date_trunc(granularity, F.col(ts_col))
-    xi = F.round(F.col(value_col).cast("double") * 1000, 0).cast("decimal(19,0)")
+    xi = scaled(value_col)
     return (
         df.groupBy(F.date_format(b, ISO).alias("bucket_ts"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.round(F.sum(xi.cast("decimal(38,0)")).cast("double") / 1000, 6)
+            F.round(F.sum(xi.cast("decimal(38,0)")).cast("double") / SCALE, 6)
              .alias("sum_value"),
             F.round(
                 F.sum(xi.cast("decimal(38,0)")).cast("double")
-                / F.count(F.lit(1)) / 1000, 6
+                / F.count(F.lit(1)) / SCALE, 6
             ).alias("avg_value"),
         )
     )

@@ -77,13 +77,6 @@ def shingles_expr(text_col: str, k: int = 3) -> Column:
     )
 
 
-def jaccard_expr(a: str, b: str) -> Column:
-    return (
-        F.size(F.array_intersect(F.col(a), F.col(b))).cast("double")
-        / F.size(F.array_union(F.col(a), F.col(b)))
-    )
-
-
 def ngram_jaccard_adjacent(df: DataFrame, id_col: str, text_col: str,
                            k: int = 3, round_digits: int = 6) -> DataFrame:
     """(id1, id2, jaccard) for consecutive ids — the linear-cost variant

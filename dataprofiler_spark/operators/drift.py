@@ -18,8 +18,13 @@ statistic).
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from dataprofiler_spark.operators.numeric import SCALE, exact_css, scaled
+from dataprofiler_spark.session import register_persisted
 
 
 def _aligned_counts(df_a: DataFrame, df_b: DataFrame, col: str) -> DataFrame:
@@ -143,10 +148,10 @@ def welch_t(df_a: DataFrame, df_b: DataFrame, col: str,
     """One-row (t_stat, welch_dof): Welch's t statistic + degrees of
     freedom (numerical_column_stats.py:604-665). Uses the exact-mode
     integer power sums so the statistic is engine-reproducible."""
-    S = 1000.0
+    S = float(SCALE)
 
     def side(df, tag):
-        xi = F.round(F.col(col).cast("double") * S, 0).cast("decimal(19,0)")
+        xi = scaled(col)
         # min-pivot the squared sums (css is shift-invariant in exact
         # integer arithmetic → bit-identical to the unshifted oracle, but
         # products bounded by range²·S²·n² instead of mean²·S²·n², so the
@@ -176,12 +181,10 @@ def welch_t(df_a: DataFrame, df_b: DataFrame, col: str,
         sy = F.col(f"sy_{tag}")
         syy = F.col(f"syy_{tag}")
         mean = s1.cast("double") / n / S
-        css = F.coalesce(
-            F.try_subtract(F.try_multiply(n.cast("decimal(38,0)"), syy),
-                           F.try_multiply(sy, sy)).cast("double"),
-            n.cast("double") * F.col(f"syyd_{tag}")
-            - F.col(f"syd_{tag}") * F.col(f"syd_{tag}"),
-        )
+        css = exact_css(
+            n, syy, sy, sy,
+            fallback=n.cast("double") * F.col(f"syyd_{tag}")
+            - F.col(f"syd_{tag}") * F.col(f"syd_{tag}"))
         var = css / n / (n - 1) / (S * S)
         return n, mean, var
 
@@ -294,6 +297,22 @@ def p_value_chi2(chi2: float, dof: int) -> float | None:
     except ImportError:
         from dataprofiler_spark.functions.special import chi2_sf
         return float(chi2_sf(chi2, dof))
+
+
+def smoothed_psi(ca: list[int], cb: list[int]) -> float:
+    """Driver-side PSI over two count lists aligned bin by bin (or
+    category by category), +1-smoothed on both sides: p = (c + 1) /
+    (n + k), k = len(ca) — the same smoothing as categorical_psi and
+    numeric_psi. Callers decide when there is no PSI (no bins, an empty
+    side) and how to round."""
+    k = len(ca)
+    na, nb = sum(ca), sum(cb)
+    psi = 0.0
+    for a, b in zip(ca, cb):
+        pa = (a + 1) / (na + k)
+        pb = (b + 1) / (nb + k)
+        psi += (pb - pa) * math.log(pb / pa)
+    return psi
 
 
 def p_value_welch(t_stat: float, dof: float) -> float | None:
@@ -492,16 +511,15 @@ def quantile_shift(df_a: DataFrame, df_b: DataFrame, col: str,
     Plan: two counts-CDF quantile passes (histogram.cdf_quantiles — no
     native percentile, bounded state, identical interpolation both
     engines) + a 1-row cross join."""
-    from pyspark.sql import functions as F
-
     from dataprofiler_spark.functions.rounding import duckdb_round
     from dataprofiler_spark.operators.histogram import cdf_quantiles
 
     probs = probs or [0.01, 0.05, 0.25, 0.5, 0.75, 0.95, 0.99]
-    qa = cdf_quantiles(df_a, col, probs).select(
-        *[F.col(f"q{i}").alias(f"qa{i}") for i in range(len(probs))])
-    qb = cdf_quantiles(df_b, col, probs).select(
-        *[F.col(f"q{i}").alias(f"qb{i}") for i in range(len(probs))])
+    ca, cb = cdf_quantiles(df_a, col, probs), cdf_quantiles(df_b, col, probs)
+    qa = ca.select(*[F.col(f"q{i}").alias(f"qa{i}")
+                     for i in range(len(probs))])
+    qb = cb.select(*[F.col(f"q{i}").alias(f"qb{i}")
+                     for i in range(len(probs))])
     row = qa.crossJoin(F.broadcast(qb))
     structs = []
     for i, p in enumerate(probs):
@@ -513,8 +531,9 @@ def quantile_shift(df_a: DataFrame, df_b: DataFrame, col: str,
             duckdb_round(b - a, round_digits).alias("shift"),
             duckdb_round(F.when(F.abs(a) > 0, (b - a) / F.abs(a)),
                          round_digits).alias("rel_shift")))
-    return (row.select(F.explode(F.array(*structs)).alias("s"))
-            .select("s.*"))
+    return register_persisted(
+        row.select(F.explode(F.array(*structs)).alias("s")).select("s.*"),
+        *ca._dps_persisted, *cb._dps_persisted)
 
 
 def oracle_quantile_shift_sql(table_a: str, table_b: str, col: str,

@@ -24,6 +24,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from dataprofiler_spark.operators.numeric import SCALE, scaled
+from dataprofiler_spark.session import register_persisted
+
 SESSION_GAP_MINUTES = 30
 
 
@@ -118,8 +121,7 @@ def rolling_avg(df: DataFrame, order_col: str = "event_id",
     driver) verifies it and falls back to fewer buckets (ultimately the
     single-bucket global window) when the data is too small — correctness
     never depends on the bucket layout."""
-    xi = F.round(F.col(value_col).cast("double") * 1000, 0) \
-          .cast("decimal(19,0)").cast("decimal(38,0)")
+    xi = scaled(value_col).cast("decimal(38,0)")
     base = df.select(F.col(order_col).alias("oid"), xi.alias("xi"))
 
     db = F.lit(0)  # dense bucket id; lit(0) = single bucket fallback
@@ -163,9 +165,9 @@ def rolling_avg(df: DataFrame, order_col: str = "event_id",
     s = F.sum("xi").over(w)
     n = F.count(F.lit(1)).over(w)
     return (own.unionByName(halo)
-            .withColumn("roll_sum", F.round(s.cast("double") / 1000,
+            .withColumn("roll_sum", F.round(s.cast("double") / SCALE,
                                             round_digits))
-            .withColumn("roll_avg", F.round(s.cast("double") / n / 1000,
+            .withColumn("roll_avg", F.round(s.cast("double") / n / SCALE,
                                             round_digits))
             .where(~F.col("is_halo"))
             .select(F.col("oid").alias("event_id"), "roll_sum", "roll_avg"))
@@ -370,20 +372,21 @@ def daily_volume_anomalies(df: DataFrame, ts_col: str = "ts",
     days = (df.where(F.col(ts_col).isNotNull())
             .groupBy(F.date_format(ts_col, "yyyy-MM-dd").alias("day"))
             .agg(F.count(F.lit(1)).alias("n_events")))
-    med = cdf_quantiles(days, "n_events", [0.5]).select(
-        F.col("q0").alias("m"))
+    mq = cdf_quantiles(days, "n_events", [0.5])
+    med = mq.select(F.col("q0").alias("m"))
     j = days.crossJoin(F.broadcast(med))
     dev = F.abs(F.col("n_events").cast("double") - F.col("m"))
-    mad = (cdf_quantiles(j, dev, [0.5]).select(F.col("q0").alias("mad"))
-           .crossJoin(F.broadcast(med)))
+    dq = cdf_quantiles(j, dev, [0.5])
+    mad = dq.select(F.col("q0").alias("mad")).crossJoin(F.broadcast(med))
     out = days.crossJoin(F.broadcast(mad))
     rz = F.when(F.col("mad") > 0,
                 F.round(0.6745 * F.abs(F.col("n_events").cast("double")
                                        - F.col("m")) / F.col("mad"),
                         round_digits))
-    return out.select(
-        "day", "n_events", rz.alias("robust_z"),
-        F.coalesce(rz > z, F.lit(False)).alias("is_anomaly"))
+    return register_persisted(
+        out.select("day", "n_events", rz.alias("robust_z"),
+                   F.coalesce(rz > z, F.lit(False)).alias("is_anomaly")),
+        *mq._dps_persisted, *dq._dps_persisted)
 
 
 def oracle_daily_volume_anomalies_sql(table: str, ts_col: str = "ts",
@@ -529,8 +532,8 @@ def interarrival_stats(df: DataFrame, user_col: str = "user_id",
                     .alias("g"))
             .where(F.col("g").isNotNull()))
     d = "decimal(38,0)"
-    med_row = cdf_quantiles(gaps, "g", [0.5]).select(
-        F.col("q0").alias("med"))
+    mq = cdf_quantiles(gaps, "g", [0.5])
+    med_row = mq.select(F.col("q0").alias("med"))
     agg = gaps.agg(
         F.count(F.lit(1)).alias("n_gaps"),
         F.sum(F.col("g").cast(d)).alias("s1"),
@@ -542,12 +545,13 @@ def interarrival_stats(df: DataFrame, user_col: str = "user_id",
            / n / (n - 1)) / 1e12
     sd = F.sqrt(var)
     burst = F.when((sd + mu) > 0, (sd - mu) / (sd + mu))
-    return agg.select(
+    return register_persisted(agg.select(
         "n_gaps",
         F.round(mu, round_digits).alias("mean_gap_s"),
         F.round(F.when(n > 1, sd), round_digits).alias("stddev_gap_s"),
         F.round(F.col("med") / 1e6, round_digits).alias("median_gap_s"),
-        F.round(F.when(n > 1, burst), round_digits).alias("burstiness"))
+        F.round(F.when(n > 1, burst), round_digits).alias("burstiness")),
+        *mq._dps_persisted)
 
 
 def oracle_interarrival_sql(table: str, user_col: str = "user_id",
@@ -917,14 +921,15 @@ def session_stats(df: DataFrame, user_col: str = "user_id",
     q = cdf_quantiles(sess.select(dur_s.alias("__d")), "__d",
                       [0.5, 0.95])
     j = agg.crossJoin(F.broadcast(q))
-    return j.select(
+    return register_persisted(j.select(
         "n_sessions", "n_users",
         duckdb_round(F.col("__ev").cast("double")
                      / F.nullif(F.col("n_sessions"), F.lit(0)),
                      round_digits).alias("mean_events"),
         duckdb_round(F.col("q0"), round_digits)
         .alias("median_duration_s"),
-        duckdb_round(F.col("q1"), round_digits).alias("p95_duration_s"))
+        duckdb_round(F.col("q1"), round_digits).alias("p95_duration_s")),
+        *q._dps_persisted)
 
 
 def oracle_session_stats_sql(table: str, user_col: str = "user_id",

@@ -27,6 +27,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataprofiler_spark.session import _checkpoint_tracking, register_persisted
+
 # Reference bin-count clamp (numerical_column_stats.py:1267-1320 via
 # profiler_options bin_count_or_method="auto").
 MIN_AUTO_BINS = 1000
@@ -278,12 +280,13 @@ def counts_cdf_pair(vc: DataFrame, keys: tuple[str, ...] | list[str] = (),
     (``repartitionByRange`` into defaultParallelism chunks —
     scale-adaptive, not a local constant), the chunk id captured with
     ``spark_partition_id()``, and THAT frame materialized with a lazy
-    ``localCheckpoint`` (one narrow row per distinct (keys, value);
-    lineage-truncated blocks are freed by the ContextCleaner when the
-    plan is garbage-collected, so no unpersist contract leaks onto
-    callers). A single ``count()`` probe — which doubles as the
-    materializing job, so the upstream aggregation runs exactly once —
-    then picks the arm:
+    ``localCheckpoint`` (one narrow row per distinct (keys, value)).
+    The snapshot's RDD id is registered on both returned frames
+    (``session.register_persisted``): an operator built on the CDF
+    carries it to its result, and ``session.unpersist_plan(result)``
+    frees it after the last action. A single ``count()`` probe — which
+    doubles as the materializing job, so the upstream aggregation runs
+    exactly once — then picks the arm:
 
     * ≤ ``CDF_SMALL_MAX_ROWS`` distinct rows: the classic ordered
       window over the stored blocks — a single task over a tiny
@@ -328,11 +331,11 @@ def counts_cdf_pair(vc: DataFrame, keys: tuple[str, ...] | list[str] = (),
     # scan → agg → range exchange → pid → store. (An eager checkpoint,
     # or a separate percentile-sketch boundary pass, each added ~1 s of
     # fixed latency per call at sf0.1 — measured on robust/decile.)
-    vcp = (vc.repartitionByRange(n_parts, *ks, val_col)
-           .withColumn("__pid", F.spark_partition_id())
-           .localCheckpoint(eager=False))
+    vcp, ids = _checkpoint_tracking(
+        vc.repartitionByRange(n_parts, *ks, val_col)
+        .withColumn("__pid", F.spark_partition_id()), eager=False)
     nr = vcp.count()
-    vc_c = vcp.drop("__pid")
+    vc_c = register_persisted(vcp.drop("__pid"), *ids)
     if nr <= CDF_SMALL_MAX_ROWS:
         wk = (Window.partitionBy(*ks) if ks else
               Window.partitionBy(F.lit(1)))
@@ -340,7 +343,8 @@ def counts_cdf_pair(vc: DataFrame, keys: tuple[str, ...] | list[str] = (),
                                F.sum(cnt_col).over(wk.orderBy(val_col)))
                .withColumn("c_start", F.col("c_end") - F.col(cnt_col))
                .withColumn("n", F.sum(cnt_col).over(wk)))
-        return out.select(*cols, "n", "c_end", "c_start"), vc_c
+        return (register_persisted(out.select(*cols, "n", "c_end", "c_start"),
+                                   *ids), vc_c)
     pt = vcp.groupBy(*ks, "__pid").agg(F.sum(cnt_col).alias("__t"))
     woff = (Window.partitionBy(*ks) if ks else
             Window.partitionBy(F.lit(1))).orderBy("__pid").rowsBetween(
@@ -356,13 +360,14 @@ def counts_cdf_pair(vc: DataFrame, keys: tuple[str, ...] | list[str] = (),
                        F.sum(cnt_col).over(wloc) + F.col("__off"))
            .withColumn("c_start", F.col("c_end") - F.col(cnt_col))
            .select(*cols, "n", "c_end", "c_start"))
-    return out, vc_c
+    return register_persisted(out, *ids), vc_c
 
 
 def cdf_quantiles(df: DataFrame, col, probs: list[float]) -> DataFrame:
     """ONE-row frame (q0..q{k-1} double, n long): exact Type-7
     (percentile_cont) quantiles of ``col`` (a name or Column) via the
-    counts-CDF. Empty/all-NULL input yields NULL quantiles and n NULL."""
+    counts-CDF. Empty/all-NULL input yields NULL quantiles and n NULL.
+    The CDF snapshot is registered on the result (see counts_cdf_pair)."""
     x = (F.col(col) if isinstance(col, str) else col).cast("double")
     vc = (df.where(x.isNotNull()).groupBy(x.alias("v"))
           .agg(F.count(F.lit(1)).alias("cnt")))
@@ -390,7 +395,8 @@ def cdf_quantiles(df: DataFrame, col, probs: list[float]) -> DataFrame:
         a, b, g = (F.col(f"__a{i}"), F.col(f"__b{i}"), F.col(f"__g{i}"))
         sel.append(F.when(g == 0.0, a).otherwise(a + g * (b - a))
                    .alias(f"q{i}"))
-    return row.select(*sel, F.col("__n").alias("n"))
+    return register_persisted(row.select(*sel, F.col("__n").alias("n")),
+                              *cdf._dps_persisted)
 
 
 def oracle_cdf_quantiles_cte(table: str, col_expr: str,
@@ -452,7 +458,9 @@ def quantiles(df: DataFrame, col: str, probs: list[float],
                  duckdb_round(F.col(f"q{i}"), round_digits).alias("value"))
         for i, p in enumerate(probs)
     ]
-    return row.select(F.explode(F.array(*pairs)).alias("s")).select("s.*")
+    return register_persisted(
+        row.select(F.explode(F.array(*pairs)).alias("s")).select("s.*"),
+        *row._dps_persisted)
 
 
 def oracle_quantiles_sql(table: str, col: str, probs: list[float],
@@ -472,13 +480,17 @@ def median_mad(df: DataFrame, col: str, round_digits: int = 6) -> DataFrame:
     deviations against the broadcast median scalar)."""
     from dataprofiler_spark.functions.rounding import duckdb_round
 
-    med = cdf_quantiles(df, col, [0.5]).select(F.col("q0").alias("m"))
+    mq = cdf_quantiles(df, col, [0.5])
+    med = mq.select(F.col("q0").alias("m"))
     j = df.crossJoin(F.broadcast(med))
     dev = F.abs(F.col(col).cast("double") - F.col("m"))
-    mad = cdf_quantiles(j, dev, [0.5]).select(F.col("q0").alias("d"))
-    return (med.crossJoin(F.broadcast(mad))
-            .select(duckdb_round(F.col("m"), round_digits).alias("median"),
-                    duckdb_round(F.col("d"), round_digits).alias("mad")))
+    dq = cdf_quantiles(j, dev, [0.5])
+    mad = dq.select(F.col("q0").alias("d"))
+    return register_persisted(
+        med.crossJoin(F.broadcast(mad))
+        .select(duckdb_round(F.col("m"), round_digits).alias("median"),
+                duckdb_round(F.col("d"), round_digits).alias("mad")),
+        *mq._dps_persisted, *dq._dps_persisted)
 
 
 def oracle_median_mad_sql(table: str, col: str, round_digits: int = 6) -> str:
@@ -674,8 +686,9 @@ def decile_stats(df: DataFrame, col: str, n_buckets: int = 10,
             duckdb_round(F.col(f"__s{dd}").cast("double")
                          / F.nullif(cnt, F.lit(0)),
                          round_digits).alias("mean")))
-    return (row.select(F.explode(F.array(*structs)).alias("s"))
-            .select("s.*"))
+    return register_persisted(
+        row.select(F.explode(F.array(*structs)).alias("s")).select("s.*"),
+        *cdf._dps_persisted)
 
 
 def oracle_decile_stats_sql(table: str, col: str, n_buckets: int = 10,
@@ -772,9 +785,11 @@ def grouped_quantiles(df: DataFrame, group_col: str, col: str,
         structs.append(F.struct(
             F.lit(float(p)).alias("prob"),
             duckdb_round(q, round_digits).alias("value")))
-    return (row.select(F.col("g").alias("group"),
-                       F.explode(F.array(*structs)).alias("s"))
-            .select("group", "s.prob", "s.value"))
+    return register_persisted(
+        row.select(F.col("g").alias("group"),
+                   F.explode(F.array(*structs)).alias("s"))
+        .select("group", "s.prob", "s.value"),
+        *cdf._dps_persisted)
 
 
 def oracle_grouped_quantiles_sql(table: str, group_col: str, col: str,

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataprofiler_spark.operators.numeric import SCALE, scaled
+
 
 def null_replication_metrics(df: DataFrame, target_cols: list[str],
                              numeric_cols: list[str],
@@ -27,7 +29,6 @@ def null_replication_metrics(df: DataFrame, target_cols: list[str],
 
     Uses the scaled-integer sums so results are engine-reproducible.
     """
-    S = 1000.0
     exprs = []
     for t in target_cols:
         is_null = F.col(t).isNull()
@@ -36,8 +37,7 @@ def null_replication_metrics(df: DataFrame, target_cols: list[str],
         for o in numeric_cols:
             if o == t:
                 continue
-            xi = F.round(F.col(o).cast("double") * S, 0).cast("decimal(19,0)") \
-                  .cast("decimal(38,0)")
+            xi = scaled(o).cast("decimal(38,0)")
             exprs.append(F.sum(F.when(is_null, xi)).alias(f"{t}__{o}__sn"))
             exprs.append(F.sum(F.when(~is_null, xi)).alias(f"{t}__{o}__snn"))
     row = df.agg(*exprs)
@@ -49,8 +49,8 @@ def null_replication_metrics(df: DataFrame, target_cols: list[str],
         for o in numeric_cols:
             if o == t:
                 continue
-            sn = F.col(f"{t}__{o}__sn").cast("double") / F.lit(S)
-            snn = F.col(f"{t}__{o}__snn").cast("double") / F.lit(S)
+            sn = F.col(f"{t}__{o}__sn").cast("double") / F.lit(float(SCALE))
+            snn = F.col(f"{t}__{o}__snn").cast("double") / F.lit(float(SCALE))
             structs.append(F.struct(
                 F.lit(t).alias("target_column"), F.lit(o).alias("other_column"),
                 nn.alias("null_count"), nnn.alias("not_null_count"),

@@ -35,13 +35,44 @@ STAT_FIELDS = [
     "variance", "stddev", "skewness", "kurtosis", "num_zeros", "num_negatives",
 ]
 
-# Exact mode works on scaled integers (x * 10^EXACT_SCALE rounded to an
+# Exact sums work on scaled integers (x * 10^EXACT_SCALE rounded to an
 # integer held in scale-0 decimals). Scale-0 decimal → double is a SINGLE
 # correctly-rounded conversion in both Spark (BigDecimal) and DuckDB
 # (int128), whereas scaled decimals double-round in DuckDB (int128 →
 # double, then ÷10^scale) which costs ~1 ulp of cross-engine drift.
 EXACT_SCALE = 3
-_S = 10 ** EXACT_SCALE
+SCALE = 10 ** EXACT_SCALE
+
+
+def scaled(col: str | Column) -> Column:
+    """round(x · SCALE) as a decimal(19,0): the scaled integer every
+    exact sum in the package is taken over. Per-row products of two
+    such values always fit decimal(38,0) (|xi| < 1e19 ⇒ xi² < 1e38)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.round(c.cast("double") * SCALE, 0).cast("decimal(19,0)")
+
+
+def exact_css(n: Column, sab: Column, sa: Column, sb: Column,
+              fallback: Column) -> Column:
+    """n·Σab − Σa·Σb as ONE double: exact decimal(38,0) arithmetic, then
+    a single correctly-rounded conversion (mirrored by the oracles'
+    HUGEINT form). Past decimal(38,0) the try_* chain yields NULL instead
+    of an ANSI abort, and ``fallback`` — the caller's own overflow
+    policy — takes over."""
+    return F.coalesce(
+        F.try_subtract(F.try_multiply(n.cast("decimal(38,0)"), sab),
+                       F.try_multiply(sa, sb)).cast("double"),
+        fallback)
+
+
+def _overflow_error(n: Column, op: str, col: str) -> Column:
+    """Fallback for the operators with no centered second moment: a
+    variance that overflows decimal(38,0) fails the plan instead of
+    coming back NULL."""
+    return F.when(n > 1, F.raise_error(F.lit(
+        f"{op}: the exact variance of column {col!r} overflows "
+        "decimal(38,0); numeric_profile_exact covers this range with its "
+        "centered fallback")))
 
 
 def numeric_columns(df: DataFrame) -> list[str]:
@@ -94,8 +125,7 @@ def numeric_profile_exact(
     p1_exprs: list[Column] = []
     for c in cols:
         col = F.col(c)
-        # scaled integer: round(x * 10^s) as a scale-0 decimal
-        xi = F.round(col.cast("double") * _S, 0).cast("decimal(19,0)")
+        xi = scaled(col)
         p1_exprs.extend([
             F.count(F.lit(1)).alias(f"{c}__ss"),
             F.sum(F.when(col.isNull(), 1).otherwise(0)).alias(f"{c}__nulls"),
@@ -116,7 +146,7 @@ def numeric_profile_exact(
     # correctly-rounded conversion, then two double divisions — identical
     # IEEE sequence in the SQL oracle.
     mean_cols = [
-        (F.col(f"{c}__s1").cast("double") / F.col(f"{c}__n") / F.lit(float(_S)))
+        (F.col(f"{c}__s1").cast("double") / F.col(f"{c}__n") / F.lit(float(SCALE)))
         .alias(f"{c}__mu")
         for c in cols
     ]
@@ -135,7 +165,7 @@ def numeric_profile_exact(
     joined = p1.crossJoin(F.broadcast(p2))
 
     out_cols: list[Column] = []
-    s2lit = F.lit(float(_S))
+    s2lit = F.lit(float(SCALE))
     for c in cols:
         n = F.col(f"{c}__n")
         s1 = F.col(f"{c}__s1")   # decimal(38,0) scaled integers
@@ -155,11 +185,9 @@ def numeric_profile_exact(
         # bit-identical to the oracle. s1 (plain sum, safe while
         # |mean|·S·n < 1e38) is the remaining hard domain limit: past it
         # the mean — and the centering pass with it — fails loudly.
-        css = F.coalesce(
-            F.try_subtract(F.try_multiply(n.cast("decimal(38,0)"), s2),
-                           F.try_multiply(s1, s1)).cast("double"),
-            F.col(f"{c}__m2") * n.cast("double") * (s2lit * s2lit),
-        )
+        css = exact_css(
+            n, s2, s1, s1,
+            fallback=F.col(f"{c}__m2") * n.cast("double") * (s2lit * s2lit))
         var = F.when(n > 1, css / n / (n - 1) / (s2lit * s2lit)).otherwise(F.lit(None))
         b2 = css / n / n / (s2lit * s2lit)  # biased variance for moment ratios
         # b2 == 0 (constant column) → moments undefined, not NaN/Inf
@@ -197,11 +225,13 @@ def numeric_profile_by_group(df: DataFrame, group_col: str, value_col: str,
     drill-downs the second-moment battery is the standard ask, and the
     full battery remains available per segment via a filter +
     :func:`numeric_profile_exact`. Decimal power sums keep results
-    engine-exact (same formulation as numeric_profile_exact)."""
+    engine-exact (same formulation as numeric_profile_exact); a group
+    whose variance overflows decimal(38,0) fails the plan rather than
+    reporting a NULL variance."""
     r = round_digits
     col = F.col(value_col)
-    xi = F.round(col.cast("double") * _S, 0).cast("decimal(19,0)")
-    s2lit = F.lit(float(_S))
+    xi = scaled(col)
+    s2lit = F.lit(float(SCALE))
     g = df.groupBy(F.col(group_col).cast("string").alias("grp")).agg(
         F.count(F.lit(1)).alias("ss"),
         F.sum(F.when(col.isNull(), 1).otherwise(0)).alias("nulls"),
@@ -214,8 +244,8 @@ def numeric_profile_by_group(df: DataFrame, group_col: str, value_col: str,
         F.sum(F.when(col < 0, 1).otherwise(0)).alias("negs"),
     )
     n, s1, s2 = F.col("n"), F.col("s1"), F.col("s2")
-    css = F.try_subtract(F.try_multiply(n.cast("decimal(38,0)"), s2),
-                         F.try_multiply(s1, s1)).cast("double")
+    css = exact_css(n, s2, s1, s1, fallback=_overflow_error(
+        n, "numeric_profile_by_group", value_col))
     var = F.when(n > 1, css / n / (n - 1) / (s2lit * s2lit)).otherwise(
         F.lit(None))
     return g.select(
@@ -238,7 +268,7 @@ def oracle_numeric_profile_by_group_sql(table: str, group_col: str,
                                         value_col: str,
                                         round_digits: int = 6) -> str:
     r = round_digits
-    S = float(_S)
+    S = float(SCALE)
     c = value_col
     x = f"CAST(ROUND(CAST({c} AS DOUBLE) * {S}, 0) AS DECIMAL(19,0))"
     css = ("CAST(CAST(n AS HUGEINT) * CAST(s2 AS HUGEINT)"
@@ -275,7 +305,7 @@ def oracle_numeric_profile_sql(table: str, cols: list[str], round_digits: int = 
     so double-precision results are bit-identical.
     """
     r = round_digits
-    S = float(_S)
+    S = float(SCALE)
     xi = "CAST(ROUND(CAST({c} AS DOUBLE) * {S}, 0) AS DECIMAL(19,0))"
     selects = []
     for c in cols:
@@ -337,15 +367,16 @@ def outlier_counts(df: DataFrame, cols: list[str] | None = None,
     broadcast 1-row fence frame. The fence doubles derive from integer
     sums through a fixed IEEE division sequence, so the per-row
     comparisons are engine-exact (a row precisely ON a fence is kept on
-    every engine, not a coin flip)."""
+    every engine, not a coin flip). A variance that overflows
+    decimal(38,0) fails the plan: NULL fences would report 0 outliers."""
     cols = cols or numeric_columns(df)
     r = round_digits
-    s2lit = F.lit(float(_S))
+    s2lit = F.lit(float(SCALE))
 
     p1_exprs: list[Column] = []
     for c in cols:
         col = F.col(c)
-        xi = F.round(col.cast("double") * _S, 0).cast("decimal(19,0)")
+        xi = scaled(col)
         p1_exprs.extend([
             F.count(col).alias(f"{c}__n"),
             F.sum(xi.cast("decimal(38,0)")).alias(f"{c}__s1"),
@@ -358,8 +389,8 @@ def outlier_counts(df: DataFrame, cols: list[str] | None = None,
         n = F.col(f"{c}__n")
         s1, s2 = F.col(f"{c}__s1"), F.col(f"{c}__s2")
         mu = s1.cast("double") / n / s2lit
-        css = F.try_subtract(F.try_multiply(n.cast("decimal(38,0)"), s2),
-                             F.try_multiply(s1, s1)).cast("double")
+        css = exact_css(n, s2, s1, s1,
+                        fallback=_overflow_error(n, "outlier_counts", c))
         var = F.when(n > 1, css / n / (n - 1) / (s2lit * s2lit)) \
                .otherwise(F.lit(None))
         sd = F.sqrt(var)
@@ -407,7 +438,7 @@ def oracle_outlier_counts_sql(table: str, cols: list[str], z: float = 3.0,
     """Mirror of ``outlier_counts`` — identical division sequence, so the
     fence doubles (and therefore every comparison) are bit-identical."""
     r = round_digits
-    S = float(_S)
+    S = float(SCALE)
     xi = "CAST(ROUND(CAST({c} AS DOUBLE) * {S}, 0) AS DECIMAL(19,0))"
     selects = []
     for c in cols:
@@ -509,6 +540,7 @@ def robust_stats(df: DataFrame, cols: list[str],
     # fence pass below reads the MATERIALIZED counts frame the CDF
     # checkpointed, so the melt+agg runs once, not twice.
     cdf, vc = counts_cdf_pair(vc, keys=["column"])
+    handles = cdf._dps_persisted
     cdf = cdf.drop("n")
 
     # per-column totals from the base frame so all-NULL columns keep a row
@@ -575,6 +607,7 @@ def robust_stats(df: DataFrame, cols: list[str],
                      .otherwise(0)).alias("nhi")))
 
     from dataprofiler_spark.functions.rounding import duckdb_round
+    from dataprofiler_spark.session import register_persisted
 
     dlo = F.round(F.col("vlo"), 6).cast("decimal(38,6)")
     dhi = F.round(F.col("vhi"), 6).cast("decimal(38,6)")
@@ -582,8 +615,8 @@ def robust_stats(df: DataFrame, cols: list[str],
     # duckdb_round, not F.round: a 6-dp decimal sum over an integer
     # count lands EXACTLY on 7th-digit halves (this operator's r6
     # driver-red was literally 53055.8184745) — see functions/rounding.
-    return (q.join(F.broadcast(fc), "column", "left")
-            .select(
+    out = (q.join(F.broadcast(fc), "column", "left")
+           .select(
                 "column", F.col("n").alias("n"),
                 duckdb_round(F.col("q1d"), round_digits).alias("q1"),
                 duckdb_round(F.col("q3d"), round_digits).alias("q3"),
@@ -598,6 +631,7 @@ def robust_stats(df: DataFrame, cols: list[str],
                 duckdb_round(w_sum.cast("double")
                              / F.nullif(F.col("n"), F.lit(0)),
                              round_digits).alias("winsorized_mean")))
+    return register_persisted(out, *handles)
 
 
 def oracle_robust_stats_sql(table: str, cols: list[str],

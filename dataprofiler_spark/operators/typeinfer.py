@@ -10,8 +10,9 @@ is_float: float(x) parses).
 Spark design: all ratios for all columns in ONE wide agg over stringified
 cells — sum(when(predicate,1)) per (column, type). Datetime here uses the
 ISO shapes (portable across engines); the full strptime-format battery is
-functions/types.py:parse_datetime (used by the profile plan, where
-the engine — not an external oracle — defines parse semantics).
+functions/types.py:DATETIME_FORMATS, matched inline by the profile plan
+(plans/profile_plan.py), where the engine — not an external oracle —
+defines parse semantics.
 """
 
 from __future__ import annotations

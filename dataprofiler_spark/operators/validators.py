@@ -16,6 +16,9 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dataprofiler_spark.operators.numeric import SCALE, scaled
+from dataprofiler_spark.session import register_persisted
+
 
 @dataclass(frozen=True)
 class Rule:
@@ -109,13 +112,6 @@ class Expectation:
         return f"{self.column or '*'}:{self.kind}"
 
 
-# scaled-integer decimal sum: engine-exact mean (same trick as
-# operators/numeric.numeric_profile_exact — a plain double sum is summation-
-# order-dependent and would make pass/fail nondeterministic at the
-# boundary)
-_MEAN_SCALE = 1000
-
-
 def expectation_report(df: DataFrame, expectations: list["Expectation"],
                        round_digits: int = 6) -> DataFrame:
     """(check, observed, passed) — all expectations in one agg pass.
@@ -147,10 +143,12 @@ def expectation_report(df: DataFrame, expectations: list["Expectation"],
                                               F.count(F.lit(1))),
                                  round_digits).alias(f"__o{i}"))
         elif e.kind == "mean_between":
-            s1 = F.sum(F.round(c.cast("double") * _MEAN_SCALE, 0)
-                       .cast("decimal(38,0)"))
+            # scaled-integer decimal sum (numeric.scaled): an engine-exact
+            # mean — a plain double sum is summation-order-dependent and
+            # would make pass/fail nondeterministic at the boundary
+            s1 = F.sum(scaled(c).cast("decimal(38,0)"))
             exprs.append(F.round(
-                F.try_divide(s1.cast("double") / _MEAN_SCALE, F.count(c)),
+                F.try_divide(s1.cast("double") / SCALE, F.count(c)),
                 round_digits).alias(f"__o{i}"))
         else:
             raise ValueError(e.kind)
@@ -192,9 +190,9 @@ def oracle_expectation_sql(table: str, expectations: list["Expectation"],
                    f"{round_digits})")
             passed = f"({obs}) >= {float(e.low)}"
         elif e.kind == "mean_between":
-            s1 = (f"SUM(CAST(ROUND({e.column} * {_MEAN_SCALE}, 0) "
+            s1 = (f"SUM(CAST(ROUND({e.column} * {SCALE}, 0) "
                   f"AS DECIMAL(38,0)))")
-            obs = (f"ROUND((CAST({s1} AS DOUBLE) / {_MEAN_SCALE}) "
+            obs = (f"ROUND((CAST({s1} AS DOUBLE) / {SCALE}) "
                    f"/ COUNT({e.column}), {round_digits})")
             passed = _bounds(obs, e)
         else:
@@ -515,8 +513,6 @@ def roc_auc(df: "DataFrame", score_col: str, label_col: str,
     integer arithmetic until one final division, mirrored verbatim in
     the oracle. Same bounded-state plan as every CDF operator (groupBy
     score + one spillable ordered window)."""
-    from pyspark.sql import functions as F
-
     from dataprofiler_spark.functions.rounding import duckdb_round
     from dataprofiler_spark.operators.histogram import counts_cdf
 
@@ -529,9 +525,9 @@ def roc_auc(df: "DataFrame", score_col: str, label_col: str,
         F.sum(F.col("y").cast("long")).alias("pos"))
     # parallel prefix-sum CDF (r12, guide §2.5) — the previous global
     # ordered window ranked every distinct score on one task
-    cdf = counts_cdf(vc, val_col="s").drop("n")
+    cdf = counts_cdf(vc, val_col="s")
     d = "decimal(38,0)"
-    agg = cdf.agg(
+    agg = cdf.drop("n").agg(
         F.coalesce(F.sum("cnt"), F.lit(0)).cast("long").alias("n"),
         F.coalesce(F.sum("pos"), F.lit(0)).cast("long").alias("n_pos"),
         F.coalesce(F.sum(
@@ -542,10 +538,10 @@ def roc_auc(df: "DataFrame", score_col: str, label_col: str,
     n_neg = (F.col("n") - n_pos).alias("n_neg")
     num = (F.col("r2") - n_pos.cast(d) * (n_pos + 1)).cast("double")
     den = (2 * n_pos.cast(d) * (F.col("n") - n_pos)).cast("double")
-    return agg.select(
+    return register_persisted(agg.select(
         "n", "n_pos", n_neg,
         duckdb_round(F.when(den > 0, num / den),
-                     round_digits).alias("auc"))
+                     round_digits).alias("auc")), *cdf._dps_persisted)
 
 
 def oracle_roc_auc_sql(table: str, score_expr: str, label_expr: str,

@@ -238,14 +238,14 @@ def rollup_events_type_day(spark, sf_dir):
     scaled-integer decimals for cross-engine bit-identity (NOTES_r1
     playbook)."""
     df = T(spark, sf_dir, "events")
-    xi = (F.round(F.col("value").cast("double") * 1000, 0)
-          .cast("decimal(19,0)").cast("decimal(38,0)"))
+    from dataprofiler_spark.operators.numeric import SCALE, scaled
+
     return (df.withColumn("day", F.date_format(F.date_trunc("day", "ts"),
                                                "yyyy-MM-dd"))
-            .withColumn("__xi", xi)
+            .withColumn("__xi", scaled("value").cast("decimal(38,0)"))
             .rollup("event_type", "day")
             .agg(F.count("value").alias("n_events"),
-                 F.round(F.sum("__xi").cast("double") / 1000, 6)
+                 F.round(F.sum("__xi").cast("double") / SCALE, 6)
                   .alias("sum_value"))
             .select("event_type", "day", "n_events", "sum_value"))
 

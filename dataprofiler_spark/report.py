@@ -546,13 +546,12 @@ sliced AS (
 """
 
 
-def _psi_from_histograms(ha: dict, hb: dict, bins: int = 10) -> float | None:
-    """Numeric PSI over histograms re-binned to common edges
-    (numerical_column_stats.py:667-816 _preprocess_for_calculate_psi:
-    both histograms are projected onto shared equal-width bins over the
-    combined range, then the categorical PSI formula applies)."""
-    from dataprofiler_spark.state import _merge_histograms
-
+def _common_bins(ha: dict, hb: dict, bins: int
+                 ) -> tuple[list[int], list[int]] | None:
+    """Both histograms projected onto ``bins`` shared equal-width bins
+    over the combined range, each source bin counted at its midpoint
+    (numerical_column_stats.py:667-816 _preprocess_for_calculate_psi).
+    None when the range is empty or either side has no mass."""
     lo = min(ha["bin_edges"][0], hb["bin_edges"][0])
     hi = max(ha["bin_edges"][-1], hb["bin_edges"][-1])
     if hi <= lo:
@@ -567,38 +566,29 @@ def _psi_from_histograms(ha: dict, hb: dict, bins: int = 10) -> float | None:
         return counts
 
     ca, cb = project(ha), project(hb)
-    na, nb = sum(ca), sum(cb)
-    if not na or not nb:
+    if not sum(ca) or not sum(cb):
         return None
-    psi = 0.0
-    for a, b in zip(ca, cb):
-        pa = (a + 1) / (na + bins)
-        pb = (b + 1) / (nb + bins)
-        psi += (pb - pa) * math.log(pb / pa)
-    return psi
+    return ca, cb
+
+
+def _psi_from_histograms(ha: dict, hb: dict, bins: int = 10) -> float | None:
+    """Numeric PSI over histograms re-binned to common edges: the
+    categorical PSI formula over the common-bin projection."""
+    from dataprofiler_spark.operators.drift import smoothed_psi
+
+    proj = _common_bins(ha, hb, bins)
+    return None if proj is None else smoothed_psi(*proj)
 
 
 def _ks_from_histograms(ha: dict, hb: dict, bins: int = 10) -> float | None:
     """Binned Kolmogorov-Smirnov statistic over the same common-bin
     projection as _psi_from_histograms (max CDF gap); the distributed
     two-sample variant is operators/drift.numeric_ks_js."""
-    lo = min(ha["bin_edges"][0], hb["bin_edges"][0])
-    hi = max(ha["bin_edges"][-1], hb["bin_edges"][-1])
-    if hi <= lo:
+    proj = _common_bins(ha, hb, bins)
+    if proj is None:
         return None
-
-    def project(h):
-        w = (hi - lo) / bins
-        counts = [0] * bins
-        for i, c in enumerate(h["bin_counts"]):
-            mid = (h["bin_edges"][i] + h["bin_edges"][i + 1]) / 2
-            counts[min(max(int((mid - lo) / w), 0), bins - 1)] += c
-        return counts
-
-    ca, cb = project(ha), project(hb)
+    ca, cb = proj
     na, nb = sum(ca), sum(cb)
-    if not na or not nb:
-        return None
     ks, cum_a, cum_b = 0.0, 0, 0
     for a, b in zip(ca, cb):
         cum_a += a
@@ -610,16 +600,13 @@ def _ks_from_histograms(ha: dict, hb: dict, bins: int = 10) -> float | None:
 def _psi_from_dicts(da: dict[str, int], db: dict[str, int]) -> float | None:
     """Categorical PSI with +1 smoothing (categorical_column_profile.py:
     245-333) — same formula as operators/drift.categorical_psi."""
+    from dataprofiler_spark.operators.drift import smoothed_psi
+
     keys = sorted(set(da) | set(db))
     if not keys:
         return None
-    na, nb, k = sum(da.values()), sum(db.values()), len(keys)
-    psi = 0.0
-    for key in keys:
-        pa = (da.get(key, 0) + 1) / (na + k)
-        pb = (db.get(key, 0) + 1) / (nb + k)
-        psi += (pb - pa) * math.log(pb / pa)
-    return psi
+    return smoothed_psi([da.get(k, 0) for k in keys],
+                        [db.get(k, 0) for k in keys])
 
 
 def _chi2_from_dicts(da: dict[str, int], db: dict[str, int]) -> dict | None:

@@ -11,7 +11,10 @@ counts), and each micro-batch runs one small groupBy + broadcast join
 against the frozen counts — per batch cost is one scan of the batch,
 O(categories) driver state, no growing state store.
 
-Semantics match operators/drift.py exactly where the framing allows:
+Semantics match operators/drift.py exactly where the framing allows.
+Both kinds score on the driver through operators/drift.smoothed_psi, the
+one +1-smoothed PSI over aligned count lists (report.py's profile diff
+uses it too):
   * categorical: identical smoothing ((c+1)/(n+k), k = aligned category
     count) and the same NULL rule (NULL is not a category; null-rate
     drift is the profile diff's null stats) — a micro-batch's PSI
@@ -56,11 +59,12 @@ with diff_profiles' null stats.
 
 from __future__ import annotations
 
-import math
 import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from dataprofiler_spark.operators.drift import smoothed_psi
 
 
 class StreamingDriftMonitor:
@@ -190,8 +194,8 @@ class StreamingDriftMonitor:
 
     def _psi_categorical(self, batch: dict[str, int],
                          col: str) -> float | None:
-        """PSI over the full outer union of baseline/batch keys, +1
-        smoothing on both sides (same formula the r12 per-column Spark
+        """smoothed_psi over the full outer union of baseline/batch
+        keys in sorted order (same formula the r12 per-column Spark
         aggregate computed; moved to the driver over the single-pass
         melted counts — bounded by max_categories, and float-sum order
         differences land below the round_digits rounding). NULL is not
@@ -199,31 +203,23 @@ class StreamingDriftMonitor:
         batch operator's NULL)."""
         base = dict(self._cat_counts[col])
         keys = sorted(set(base) | set(batch))
-        k = len(keys)
-        if k == 0:
+        if not keys:
             return None
-        na = sum(base.values())
-        nb = sum(batch.values())
-        psi = 0.0
-        for key in keys:
-            pa = (base.get(key, 0) + 1) / (na + k)
-            pb = (batch.get(key, 0) + 1) / (nb + k)
-            psi += (pb - pa) * math.log(pb / pa)
-        return round(psi, self.round_digits)
+        return round(smoothed_psi([base.get(k, 0) for k in keys],
+                                  [batch.get(k, 0) for k in keys]),
+                     self.round_digits)
 
     def _psi_numeric(self, batch: dict[int, int], col: str) -> float | None:
+        """smoothed_psi over every frozen bin (len(edges) + 1 of them,
+        observed or not); an empty batch has no PSI."""
         edges, base_counts = self._num_state[col]
-        n_bins = len(edges) + 1
-        base = dict(base_counts)
-        na, nb = sum(base.values()), sum(batch.values())
-        if nb == 0:
+        if not sum(batch.values()):
             return None
-        psi = 0.0
-        for bucket in range(n_bins):
-            pa = (base.get(bucket, 0) + 1) / (na + n_bins)
-            pb = (batch.get(bucket, 0) + 1) / (nb + n_bins)
-            psi += (pb - pa) * math.log(pb / pa)
-        return round(psi, self.round_digits)
+        base = dict(base_counts)
+        bins = range(len(edges) + 1)
+        return round(smoothed_psi([base.get(b, 0) for b in bins],
+                                  [batch.get(b, 0) for b in bins]),
+                     self.round_digits)
 
     def update(self, batch_df: DataFrame, batch_id: int | None = None) -> dict:
         """foreachBatch hook: score one micro-batch against the frozen

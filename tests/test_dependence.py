@@ -93,18 +93,30 @@ def test_spearman_complete_case_and_constant(spark):
     assert out[("y", "c")] is None
 
 
-def test_spearman_no_global_row_window(spark, sf_dir):
-    """The ranking must never sort the full table in one partition:
-    every window in the plan is partitioned by the range bucket."""
+def test_spearman_no_global_row_window(spark, sf_dir, monkeypatch):
+    """The ranking must never sort the full table in one partition. With
+    the counts-CDF's range-chunked arm forced (as in
+    test_counts_cdf_parallel_matches_global_window), every window in the
+    plan either partitions by the range chunk ``__pid`` or orders the
+    per-chunk totals by it."""
     import os
     import re
 
+    from dataprofiler_spark.operators import histogram as H
+
+    monkeypatch.setattr(H, "CDF_SMALL_MAX_ROWS", 8)
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
     plan = (corr.spearman_matrix(li, ["l_quantity", "l_extendedprice"])
             ._jdf.queryExecution().executedPlan().toString())
-    for spec in re.findall(r"windowspecdefinition\(([^)]*)\)", plan):
-        assert spec.lstrip().startswith("b#") or ", b#" in spec or \
-            spec.split(",")[0].strip().startswith("b"), (spec, plan[:2000])
+    windows = re.findall(
+        r"(\w+)\(([^)]*)\) windowspecdefinition\(([^)]*)\)", plan)
+    assert windows, plan[:2000]
+    for fn, arg, spec in windows:
+        first = spec.split(",")[0].strip()
+        by_chunk = re.fullmatch(r"__pid#\d+", first)
+        chunk_totals = (re.fullmatch(r"__pid#\d+ ASC NULLS FIRST", first)
+                        and fn == "sum" and arg.startswith("__t#"))
+        assert by_chunk or chunk_totals, (spec, plan[:2000])
 
 
 def test_cramers_v_known_values(spark):

@@ -6,7 +6,9 @@ magnitudes the naive n·s2 − s1² formulation would emit NULL variance /
 correlation / t-stat while the DuckDB oracle (HUGEINT) keeps working.
 These tests drive the magnitudes into the overflow regime on purpose and
 assert the operators still produce correct (non-NULL) values via their
-centered-m2 / min-pivot / double fallbacks.
+centered-m2 / min-pivot / double fallbacks. The operators with no such
+fallback (outlier_counts, numeric_profile_by_group) must raise instead of
+returning a NULL variance.
 """
 
 from __future__ import annotations
@@ -58,6 +60,23 @@ def test_numeric_exact_variance_survives_overflow(spark):
     assert out["x"]["variance"] == pytest.approx(expected_var, rel=1e-6)
     assert out["x"]["stddev"] == pytest.approx(math.sqrt(expected_var), rel=1e-6)
     assert out["x"]["mean"] == pytest.approx(3.0e14 + (n - 1) / 2, rel=1e-12)
+
+
+def test_outlier_counts_raises_on_overflow(spark):
+    """NULL fences would report 0 outliers and ratio 0.0 as if the column
+    were clean; the plan fails instead and names the column."""
+    from dataprofiler_spark.operators.numeric import outlier_counts
+
+    with pytest.raises(Exception, match="'x'.*numeric_profile_exact"):
+        outlier_counts(_big_df(spark), ["x"]).collect()
+
+
+def test_grouped_profile_raises_on_overflow(spark):
+    from dataprofiler_spark.operators.numeric import numeric_profile_by_group
+
+    df = _big_df(spark).withColumn("g", F.lit("a"))
+    with pytest.raises(Exception, match="'x'.*numeric_profile_exact"):
+        numeric_profile_by_group(df, "g", "x").collect()
 
 
 def test_correlation_survives_overflow(spark):

@@ -713,6 +713,69 @@ def test_graph_outputs_release_through_unpersist_plan(spark, sf_dir):
         assert persisted() - before == set(), name
 
 
+def test_counts_cdf_outputs_release_through_unpersist_plan(spark, sf_dir):
+    """histogram.counts_cdf takes a localCheckpoint of the range-chunked
+    counts and registers it on its frames; every operator built on it
+    carries it to its result. So after the final action, unpersist_plan
+    on each output leaves the session's persisted RDDs as they were."""
+    from dataprofiler_spark.operators import correlation as corr
+    from dataprofiler_spark.operators import drift as dr
+    from dataprofiler_spark.operators import events as evo
+    from dataprofiler_spark.operators import histogram as H
+    from dataprofiler_spark.operators.numeric import robust_stats
+    from dataprofiler_spark.operators.validators import roc_auc
+    from dataprofiler_spark.queries import T
+    from dataprofiler_spark.session import unpersist_plan
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
+                   .toArray())
+
+    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
+    ev = T(spark, sf_dir, "events")
+    cols = ["l_quantity", "l_extendedprice"]
+    early = F.col("o_orderdate") < "1996-01-01"
+    outputs = {
+        "spearman_matrix": lambda: corr.spearman_matrix(li, cols),
+        "cdf_quantiles": lambda: H.cdf_quantiles(
+            li, "l_extendedprice", [0.5]),
+        "quantiles": lambda: H.quantiles(li, "l_extendedprice", [0.5]),
+        "median_mad": lambda: H.median_mad(li, "l_quantity"),
+        "decile_stats": lambda: H.decile_stats(li, "l_extendedprice"),
+        "grouped_quantiles": lambda: H.grouped_quantiles(
+            li, "l_returnflag", "l_extendedprice", [0.5]),
+        "robust_stats": lambda: robust_stats(li, cols),
+        "roc_auc": lambda: roc_auc(
+            li.select("l_quantity",
+                      (F.col("l_returnflag") == "R").alias("y")),
+            "l_quantity", "y"),
+        "quantile_shift": lambda: dr.quantile_shift(
+            orders.where(early), orders.where(~early), "o_totalprice"),
+        "daily_volume_anomalies": lambda: evo.daily_volume_anomalies(ev),
+        "interarrival_stats": lambda: evo.interarrival_stats(ev),
+        "session_stats": lambda: evo.session_stats(ev),
+    }
+    for name, build in outputs.items():
+        before = persisted()
+        out = build()
+        out.collect()
+        assert unpersist_plan(out) > 0, name
+        assert persisted() - before == set(), name
+
+
+def test_spearman_job_budget(spark, sf_dir):
+    """spearman_matrix ranks each column through counts_cdf: per column
+    the CDF's materializing probe (with its AQE stage jobs), then one
+    Pearson aggregate over the rank joins. Four columns at sf0.001."""
+    from dataprofiler_spark.operators.correlation import spearman_matrix
+
+    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
+    cols = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
+    assert _count_jobs(
+        spark, lambda: spearman_matrix(li, cols).collect()) == 30
+
+
 def test_warm_calls_reuse_generated_code(spark, sf_dir):
     """A warm call must not recompile generated code. One pass of the
     profile / diff / streaming sequence below needs more distinct
