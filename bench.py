@@ -407,14 +407,22 @@ def build_runners(spark, sf_dir):
     add("clustering", "kmeans_embeddings",
         lambda: clus.kmeans_assign(embeddings, "vec_id", "embedding",
                                    k=4, iters=2).count())
-    # the high-k scale path (r12): forced two-level at target=2 so the
-    # hierarchical quantizer (coarse fit + per-cell local Lloyd) gets a
-    # per-round number at bench scale (resolved k = n/2)
+    # the high-k scale path (r12): the hierarchical quantizer (coarse
+    # fit + per-cell local Lloyd) gets a per-round number at bench
+    # scale. Target 2 resolves k = n/2 (1,000 at sf0.1), below
+    # TWO_LEVEL_MIN_K, so the threshold is lowered around the call —
+    # otherwise the row would time the flat path.
+    def _semdedup_two_level():
+        saved = clus.TWO_LEVEL_MIN_K
+        clus.TWO_LEVEL_MIN_K = 1
+        try:
+            clus.semantic_dedup(embeddings, "vec_id", "embedding",
+                                target_cell_size=2, iters=2,
+                                threshold=0.9).count()
+        finally:
+            clus.TWO_LEVEL_MIN_K = saved
     add("clustering", "semantic_dedup_two_level_embeddings",
-        lambda: clus.semantic_dedup(embeddings, "vec_id", "embedding",
-                                    target_cell_size=2, iters=2,
-                                    threshold=0.9,
-                                    two_level=True).count())
+        _semdedup_two_level)
     add("clustering", "ivf_topk_embeddings",
         lambda: clus.ivf_topk_det(embeddings, "vec_id", "embedding",
                                   k_clusters=8, iters=2, nprobe=2,

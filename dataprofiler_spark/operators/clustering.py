@@ -270,10 +270,10 @@ def kmeans_fit(df: DataFrame, id_col: str, vec_col: str, k: int = 4,
     return kmeans_fit_multi(df, id_col, vec_col, [(None, None, k, iters)])[0]
 
 
-# Resolved auto-k at or above this engages the two-level quantizer in
-# semantic_dedup (two_level="auto"): a FLAT fit costs n·k·dim per
-# assign scan plus a k-row driver fold per Lloyd round — fine to a few
-# thousand cells, driver-bound at the SemDeDup-paper regime (k≈50k).
+# Resolved k at or above this engages the two-level quantizer in
+# semantic_dedup: a FLAT fit costs n·k·dim per assign scan plus a
+# k-row driver fold per Lloyd round — fine to a few thousand cells,
+# driver-bound at the SemDeDup-paper regime (k≈50k).
 # The threshold sits above every oracled configuration (driver corpora
 # resolve to k ≤ ~10), so flat-path oracle parity is untouched.
 TWO_LEVEL_MIN_K = 4096
@@ -1417,9 +1417,7 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
                    threshold: float = 0.9, round_digits: int = 6,
                    max_cluster_size: int = 10_000,
                    target_cell_size: int = 2_000,
-                   cache: bool = True,
-                   keep: str = "min_id",
-                   two_level: bool | str = "auto") -> DataFrame:
+                   keep: str = "min_id") -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication over an embedding column — cluster with k-means,
     then drop near-duplicates WITHIN each cluster only, so pair work
@@ -1470,16 +1468,19 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     SQL can compute as a scalar subquery (oracle_semantic_dedup_sql
     with k_clusters="auto").
 
-    ``two_level="auto"`` (default) switches to the hierarchical
-    quantizer (:func:`two_level_cells`) once the resolved k reaches
-    ``TWO_LEVEL_MIN_K``: coarse sqrt(k) distributed fit + per-cell
-    local Lloyd on executors, cutting assign cost from n·k·dim to
-    n·2·sqrt(k)·dim and keeping the driver codebook at sqrt(k) rows —
-    the SemDeDup-paper regime (k≈50k) stops being driver-bound. Cells
+    Once the resolved k reaches ``TWO_LEVEL_MIN_K`` the operator
+    switches to the hierarchical quantizer (:func:`two_level_cells`):
+    coarse sqrt(k) distributed fit + per-cell local Lloyd on executors,
+    cutting assign cost from n·k·dim to n·2·sqrt(k)·dim and keeping the
+    driver codebook at sqrt(k) rows — the SemDeDup-paper regime
+    (k≈50k) stops being driver-bound. Cells
     still target ``target_cell_size``; the keep/guard semantics are
     identical (cluster ids become packed longs). Every oracled
     configuration resolves k far below the threshold and stays on the
-    flat, SQL-mirrored path; True/False force the choice."""
+    flat, SQL-mirrored path.
+
+    The assign frame is persisted and registered on the result: call
+    ``session.unpersist_plan(result)`` after the last action over it."""
     from dataprofiler_spark.operators.similarity import cosine_expr
 
     if keep not in ("min_id", "centroid_far"):
@@ -1488,9 +1489,8 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
     if k_clusters == "auto":
         n_vecs = df.count()
         k_clusters = max(1, -(-n_vecs // int(target_cell_size)))
-    use_two_level = (k_clusters >= TWO_LEVEL_MIN_K
-                     if two_level == "auto" else bool(two_level))
-    if use_two_level:
+    hierarchical = k_clusters >= TWO_LEVEL_MIN_K
+    if hierarchical:
         # high-k regime (SemDeDup-paper scale): hierarchical quantizer
         # — the flat fit's n·k·dim assign and k-row driver fold become
         # driver-bound around k≈10⁴. Cells stay ~target_cell_size, the
@@ -1511,28 +1511,26 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
             df.select(F.col(id_col).alias("id"),
                       F.col(vec_col).alias("v")), [(0, dim, cents)], dim
         ).withColumnRenamed("__cl0", "cluster")
-    if cache:
-        # persist discipline (the minhash_lsh_pairs `cache` contract):
-        # `assigned` feeds FOUR plan subtrees (the size agg, the sized
-        # output join, and both sides of the pair self-join) —
-        # re-evaluating the assign scan per subtree multiplied the
-        # semantic stage ~5x at sf1 (SCALE.md §34). Materialize NOW:
-        # a lazy persist leaves the first consuming JOB to race its
-        # own stages into computing the cold cache several times over
-        # (measured: run-to-run 2-6x swings on the funnel's collect).
-        # The operator is already eager (auto-k count, k-means fit),
-        # so one more small job changes nothing semantically. Callers
-        # running many corpora per session: spark.catalog.clearCache().
-        assigned = assigned.persist()
-        assigned.count()
+    # persist discipline (the minhash_lsh_pairs contract): `assigned`
+    # feeds FOUR plan subtrees (the size agg, the sized output join,
+    # and both sides of the pair self-join) — re-evaluating the assign
+    # scan per subtree multiplied the semantic stage ~5x at sf1
+    # (SCALE.md §34). Materialize NOW: a lazy persist leaves the first
+    # consuming JOB to race its own stages into computing the cold
+    # cache several times over (measured: run-to-run 2-6x swings on
+    # the funnel's collect). The operator is already eager (auto-k
+    # count, k-means fit), so one more small job changes nothing
+    # semantically. The result carries the release handle.
+    assigned = assigned.persist()
+    assigned.count()
     sizes = assigned.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("__csz"))
     sized = assigned.join(sizes, "cluster")
     keep_cols = ["id", "v", "cluster"] + (
-        ["ck"] if (keep == "centroid_far" and use_two_level) else [])
+        ["ck"] if (keep == "centroid_far" and hierarchical) else [])
     elig = (sized.where(F.col("__csz") <= max_cluster_size)
             .select(*keep_cols))
-    if keep == "centroid_far" and not use_two_level:
+    if keep == "centroid_far" and not hierarchical:
         # rounded cosine to the row's own centroid — the priority key.
         # Broadcast-literal centroid matrix; rounding keeps the
         # ordering (and its ties) identical across engines. (The
@@ -1556,12 +1554,10 @@ def semantic_dedup(df: DataFrame, id_col: str, vec_col: str,
            .select("id", "cluster",
                    F.col("__drop").isNull().alias("keep"),
                    (F.col("__csz") > max_cluster_size).alias("guarded")))
-    if cache:
-        # release handle (ADVICE r11): session.unpersist_plan(result)
-        # drops the pinned assign frame once the caller is done.
-        from dataprofiler_spark.session import register_persisted
-        register_persisted(out, assigned)
-    return out
+    # release handle (ADVICE r11): session.unpersist_plan(result)
+    # drops the pinned assign frame once the caller is done.
+    from dataprofiler_spark.session import register_persisted
+    return register_persisted(out, assigned)
 
 
 def _semantic_dedup_ctes(table: str, id_col: str, vec_col: str,

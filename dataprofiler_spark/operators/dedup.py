@@ -314,7 +314,6 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
                       max_bucket_size: int | str | None =
                       DEFAULT_MAX_BUCKET_SIZE,
                       verify_k: int | None = None,
-                      cache: bool = True,
                       pair_budget_per_doc: int = 50,
                       cap_ladder: tuple = (16, 64, 256, 1024)) -> DataFrame:
     """Near-duplicate pairs (id1, id2, jaccard ≥ threshold) via banded LSH.
@@ -359,13 +358,11 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
     exact-Jaccard semantics; the oracle mirrors whichever rule is
     active.
 
-    ``cache`` (default True) persists the wide minhash aggregate and the
-    bucket keys — the band explode and both verify joins reread them, so
-    recomputation would triple the shingle-hash scan, the hottest stage.
-    The cached frames stay until the session drops them; callers running
-    many corpora in one session should ``spark.catalog.clearCache()``
-    after materializing, or pass ``cache=False`` for a stateless
-    (slower) plan."""
+    The wide minhash aggregate and the bucket keys are persisted — the
+    band explode and both verify joins reread them, so recomputation
+    would triple the shingle-hash scan, the hottest stage. They are
+    registered on the result: call ``session.unpersist_plan(result)``
+    after the last action over it to release them."""
     assert num_hashes % bands == 0
     from dataprofiler_spark.session import ensure_parallelism
     df = ensure_parallelism(df)
@@ -378,11 +375,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
                          verify_k=verify_k)
     # The band explode and the two verify joins all read from this one
     # aggregate — persist the small intermediate.
-    if cache:
-        wide = wide.persist()
+    wide = wide.persist()
     sh = wide.select("id", "hs")
     buckets = _band_buckets(wide, num_hashes, bands)
-    auto_sizes = None
+    handles = [wide]
     if max_bucket_size == "auto":
         # auto-cap (the lsh_bucket_profile dial folded into the plan):
         # the bucket-size aggregate the guard needs anyway also feeds
@@ -394,10 +390,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
         # stage probe showed the re-aggregation as auto mode's extra
         # cost over the fixed cap).
         sizes = (buckets.groupBy("band", "bucket")
-                 .agg(F.count(F.lit(1)).alias("__bsz")))
-        if cache:
-            sizes = sizes.persist()
-            auto_sizes = sizes
+                 .agg(F.count(F.lit(1)).alias("__bsz"))).persist()
+        handles.append(sizes)
         capdf = _suggested_cap_df(sizes, bands, pair_budget_per_doc,
                                   cap_ladder)
         small = (sizes.crossJoin(F.broadcast(capdf))
@@ -410,8 +404,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
                  .where(F.col("__bsz") <= max_bucket_size)
                  .select("band", "bucket"))
         buckets = buckets.join(small, ["band", "bucket"], "left_semi")
-    if cache:
-        buckets = buckets.persist()
+    buckets = buckets.persist()
+    handles.append(buckets)
 
     a, b = buckets.alias("a"), buckets.alias("b")
     pairs = (
@@ -454,13 +448,8 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
         .select("id1", "id2", jacc.alias("jaccard"))
         .where(F.col("jaccard") >= threshold)
     )
-    if cache:
-        from dataprofiler_spark.session import register_persisted
-        if auto_sizes is not None:
-            register_persisted(verified, wide, buckets, auto_sizes)
-        else:
-            register_persisted(verified, wide, buckets)
-    return verified
+    from dataprofiler_spark.session import register_persisted
+    return register_persisted(verified, *handles)
 
 
 def _lsh_oracle_ctes(table: str, id_col: str, text_col: str, k: int,
@@ -746,15 +735,13 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str, text_col: str,
                           bits: int = SIMHASH_BITS, bands: int = 4,
                           max_hamming: int = 3,
                           max_bucket_size: int | None =
-                          DEFAULT_MAX_BUCKET_SIZE,
-                          cache: bool = True) -> DataFrame:
+                          DEFAULT_MAX_BUCKET_SIZE) -> DataFrame:
     """Near-duplicate pairs (id1, id2, hamming ≤ max_hamming) via SimHash
     multi-index banding (Manku et al., WWW'07 shape).
 
-    ``cache`` persists the signature frame (read by the band explode and
-    the verify join); callers running many corpora in one session should
-    ``spark.catalog.clearCache()`` after materializing, or pass
-    ``cache=False``.
+    The signature frame is persisted (read by the band explode and the
+    verify join) and registered on the result: call
+    ``session.unpersist_plan(result)`` after the last action over it.
 
     The ``bits``-bit signature splits into ``bands`` equal slices; by
     pigeonhole, any pair within Hamming distance ``bands − 1`` agrees on
@@ -770,9 +757,7 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str, text_col: str,
     band_bits = bits // bands
     mask = (1 << band_bits) - 1
 
-    sig = simhash(df, id_col, text_col, bits)
-    if cache:
-        sig = sig.persist()
+    sig = simhash(df, id_col, text_col, bits).persist()
     band_structs = [
         F.struct(
             F.lit(b).alias("band"),
@@ -808,10 +793,8 @@ def simhash_neardup_pairs(df: DataFrame, id_col: str, text_col: str,
                  .cast("int").alias("hamming"))
         .where(F.col("hamming") <= max_hamming)
     )
-    if cache:
-        from dataprofiler_spark.session import register_persisted
-        register_persisted(out, sig)
-    return out
+    from dataprofiler_spark.session import register_persisted
+    return register_persisted(out, sig)
 
 
 def oracle_simhash_neardup_pairs_sql(table: str, id_col: str, text_col: str,
@@ -1043,8 +1026,7 @@ def winnow_neardup_pairs(df: DataFrame, id_col: str, text_col: str,
                          k: int = 5, window: int = 4,
                          min_shared: int = 2,
                          max_fp_freq: int | None = DEFAULT_MAX_FP_FREQ,
-                         round_digits: int = 6,
-                         cache: bool = True) -> DataFrame:
+                         round_digits: int = 6) -> DataFrame:
     """(id1, id2, n_shared, overlap): document pairs sharing at least
     ``min_shared`` winnowing fingerprints; ``overlap`` is the overlap
     coefficient n_shared / min(|fp₁|, |fp₂|). Localized copying (one
@@ -1058,19 +1040,18 @@ def winnow_neardup_pairs(df: DataFrame, id_col: str, text_col: str,
     the same fp-keyed shuffle). Deterministic, so the oracle mirrors it
     exactly.
 
-    ``cache`` (default True) persists the capped fingerprint frame —
-    it feeds the per-doc counts AND both sides of the fp self-join, and
-    the MOSS char-gram md5 extraction above it is the expensive part
-    (it would otherwise run up to 3x; the same cache contract as
-    ``minhash_lsh_pairs``). Pass ``cache=False`` for a stateless plan."""
+    The capped fingerprint frame is persisted — it feeds the per-doc
+    counts AND both sides of the fp self-join, and the MOSS char-gram
+    md5 extraction above it is the expensive part (it would otherwise
+    run up to 3x). As for ``minhash_lsh_pairs``, it is registered on the
+    result: release it with ``session.unpersist_plan(result)``."""
     fps = winnow_fingerprints(df, id_col, text_col, k=k, window=window)
     if max_fp_freq is not None:
         from pyspark.sql.window import Window
         fps = (fps.withColumn("__f", F.count(F.lit(1))
                               .over(Window.partitionBy("fp")))
                .where(F.col("__f") <= max_fp_freq).drop("__f"))
-    if cache:
-        fps = fps.persist()
+    fps = fps.persist()
     counts = fps.groupBy("id").agg(F.count(F.lit(1)).alias("c"))
     a = fps.select(F.col("id").alias("id1"), "fp")
     b = fps.select(F.col("id").alias("id2"), "fp")
@@ -1088,10 +1069,8 @@ def winnow_neardup_pairs(df: DataFrame, id_col: str, text_col: str,
                    F.round(F.col("n_shared").cast("double")
                            / F.least("c1", "c2"),
                            round_digits).alias("overlap")))
-    if cache:
-        from dataprofiler_spark.session import register_persisted
-        register_persisted(out, fps)
-    return out
+    from dataprofiler_spark.session import register_persisted
+    return register_persisted(out, fps)
 
 
 def _winnow_oracle_fps_cte(table: str, id_col: str, text_col: str,

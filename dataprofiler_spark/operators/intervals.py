@@ -17,8 +17,9 @@ false candidate pairs that the exact filter discards. A good default is
 the median interval length.
 
 Scale shape: one shuffle on (key, bucket) for each side (or zero when
-the interval side broadcasts); the explode is map-side; no nested-loop
-operator anywhere (plan-asserted in tests/test_plans.py).
+adaptive execution broadcasts a small interval side by its measured
+size); the explode is map-side; no nested-loop operator anywhere
+(plan-asserted in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -30,7 +31,6 @@ from pyspark.sql import functions as F
 def interval_join(events: DataFrame, intervals: DataFrame, key: str,
                   ts_col: str, start_col: str, end_col: str,
                   granularity_seconds: int = 3600,
-                  broadcast_intervals: bool = False,
                   max_buckets_per_interval: int = 10_000) -> DataFrame:
     """Rows of ``events`` matched to every interval of the same key with
     ``start <= ts < end`` (half-open, the standard window convention).
@@ -71,8 +71,6 @@ def interval_join(events: DataFrame, intervals: DataFrame, key: str,
           .withColumn("__bucket",
                       F.explode(F.sequence("__b0", b1_guarded)))
           .drop("__b0", "__b1"))
-    if broadcast_intervals:
-        iv = F.broadcast(iv)
     joined = ev.join(
         iv,
         on=[ev[key] == iv[key], ev["__bucket"] == iv["__bucket"]],

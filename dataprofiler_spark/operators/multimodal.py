@@ -6,10 +6,8 @@ signature, partition sizing — is real and tested, and so is the default
 feature extractor: :func:`parse_media_header` reads format + dimensions
 straight from PNG/GIF/BMP/JPEG container headers in pure Python (no
 codec library needed — dimension metadata lives in the first bytes).
-Full pixel/audio decode (PIL/librosa/ffmpeg) remains environment-gated:
-``decoder="fake"`` keeps the deterministic stand-in for pipelines that
-need to exercise a full-decode-shaped stage without those libraries.
-Swapping in a real pixel decoder changes no Spark code: same
+Full pixel/audio decode (PIL/librosa/ffmpeg) is not part of the
+package. Swapping in a real pixel decoder changes no Spark code: same
 iterator-of-DataFrames contract.
 
 Scale notes: media rows are large, so ``spark.sql.files.maxPartitionBytes``
@@ -264,34 +262,14 @@ def _header_decode(payload: bytes) -> dict:
             "height": h, "checksum": hashlib.md5(payload).hexdigest()}
 
 
-def _fake_decode(payload: bytes) -> dict:
-    """Deterministic stand-in for a FULL pixel decode (PIL/ffmpeg not in
-    this environment). Derives pseudo width/height/format from the bytes
-    deterministically so full-decode-shaped stages stay testable."""
-    import hashlib
-
-    n = len(payload)
-    digest = hashlib.md5(payload).hexdigest()
-    return {
-        "byte_len": n,
-        "format": ["png", "jpeg", "webp"][n % 3],
-        "width": 64 + (n % 512),
-        "height": 64 + ((n // 7) % 512),
-        "checksum": digest,
-    }
-
-
-def decode_media_features(df: DataFrame, id_col: str, bin_col: str,
-                          decoder: str = "headers") -> DataFrame:
-    """mapInPandas feature extraction over a binary column.
-
-    ``decoder="headers"`` (default) parses real container headers;
-    ``decoder="fake"`` is the documented full-decode stand-in.
+def decode_media_features(df: DataFrame, id_col: str,
+                          bin_col: str) -> DataFrame:
+    """mapInPandas feature extraction over a binary column: parses the
+    real container headers (:func:`parse_media_header`).
     Arrow-batched: each pandas DataFrame chunk holds ``maxRecordsPerBatch``
     rows; the UDF is a generator so memory stays bounded per batch.
     """
     id_name, bin_name = id_col, bin_col
-    decode = _header_decode if decoder == "headers" else _fake_decode
 
     _null = {"byte_len": None, "format": None, "width": None,
              "height": None, "checksum": None}
@@ -301,7 +279,7 @@ def decode_media_features(df: DataFrame, id_col: str, bin_col: str,
             # NULL media cell -> NULL features (aggregates skip them,
             # n_media still counts the row — mirrors SQL NULL algebra)
             feats = pdf[bin_name].map(
-                lambda p: _null if p is None else decode(p))
+                lambda p: _null if p is None else _header_decode(p))
             out = pd.DataFrame({
                 "id": pdf[id_name].astype("int64"),
                 "byte_len": pd.array([f["byte_len"] for f in feats],

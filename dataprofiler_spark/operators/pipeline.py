@@ -182,8 +182,7 @@ def curate_corpus_semantic(df: DataFrame, id_col: str, text_col: str,
                            round_digits: int = 6,
                            max_cluster_size: int = 10_000,
                            target_cell_size: int = 2_000,
-                           keep: str = "min_id",
-                           two_level: bool | str = "auto") -> DataFrame:
+                           keep: str = "min_id") -> DataFrame:
     """The full modern curation chain, one composed plan:
 
         quality filter → exact dedup → SimHash near-dup → SemDeDup
@@ -209,8 +208,8 @@ def curate_corpus_semantic(df: DataFrame, id_col: str, text_col: str,
     # persist: the curated keep-set feeds THREE plan subtrees (the
     # semantic join, the final join, and the n_text_curated count) —
     # without it each subtree re-runs the 3-shuffle text chain (same
-    # persist discipline as minhash_lsh_pairs; callers running many
-    # corpora per session should spark.catalog.clearCache()).
+    # persist discipline as minhash_lsh_pairs; the report carries the
+    # release handle, see below).
     curated = curate_corpus(df, id_col, text_col, min_quality).persist()
     emb = (embeddings
            .select(F.col(emb_id_col).alias("id"),
@@ -220,8 +219,7 @@ def curate_corpus_semantic(df: DataFrame, id_col: str, text_col: str,
                         iters=iters, threshold=semantic_threshold,
                         round_digits=round_digits,
                         max_cluster_size=max_cluster_size,
-                        target_cell_size=target_cell_size, keep=keep,
-                        two_level=two_level)
+                        target_cell_size=target_cell_size, keep=keep)
     final = curated.join(sd.where(F.col("keep")).select("id"), "id")
     n_in = df.select(F.count(F.lit(1)).alias("n_docs_in"))
     n_text = curated.agg(F.count(F.lit(1)).alias("n_text_curated"))

@@ -256,8 +256,7 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
                             planes_per_band: int = 8, dim: int = 64,
                             round_digits: int = 6,
                             max_bucket_size: int | None =
-                            DEFAULT_MAX_BUCKET_SIZE,
-                            cache: bool = True) -> DataFrame:
+                            DEFAULT_MAX_BUCKET_SIZE) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via BANDED hyperplane LSH —
     the same design as ``dedup.minhash_lsh_pairs``: B independent
     plane-sets (bands), candidates = pairs sharing any (band, bucket),
@@ -274,19 +273,15 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
     (safe-by-default; the oracle generators share the default so parity
     holds); ``None`` opts into the unguarded quadratic path explicitly.
 
-    ``cache=True`` (default — the minhash cache contract, r12)
-    persists the bucket frame: the B·P hyperplane dot products per row
-    feed the sizing aggregate, the cap join, and both self-join sides,
-    which would otherwise re-evaluate them up to 3× (~1.25× wall
-    measured at bench scale). Release with
-    ``session.unpersist_plan(result)``; ``cache=False`` for a
-    stateless plan."""
+    The bucket frame is persisted (the minhash cache contract): the B·P
+    hyperplane dot products per row feed the sizing aggregate, the cap
+    join, and both self-join sides, which would otherwise re-evaluate
+    them up to 3× (~1.25× wall measured at bench scale). Release with
+    ``session.unpersist_plan(result)``."""
     b = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     buckets = embedding_band_buckets(b, "id", "v", bands=bands,
                                      planes_per_band=planes_per_band,
-                                     dim=dim)
-    if cache:
-        buckets = buckets.persist()
+                                     dim=dim).persist()
     pinned = buckets                       # the frame the handle frees
     if max_bucket_size is not None:
         small = (buckets.groupBy("band", "bucket")
@@ -325,10 +320,8 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str, vec_col: str,
         )
         .where(F.col("cosine") >= threshold)
     )
-    if cache:
-        from dataprofiler_spark.session import register_persisted
-        register_persisted(out, pinned)
-    return out
+    from dataprofiler_spark.session import register_persisted
+    return register_persisted(out, pinned)
 
 
 def _duck_bucket(planes: list[list[float]], dim: int, vec: str) -> str:

@@ -154,12 +154,12 @@ def register_persisted(out, *handles):
     from :func:`_checkpoint_tracking`, which iterative operators
     (connected_components, pagerank) return.
 
-    Operators with a ``cache=True`` contract (minhash_lsh_pairs,
-    semantic_dedup, winnow_neardup_pairs, curate_corpus_semantic, ...)
-    persist an intermediate that several plan subtrees share. The
-    persisted frame is NOT the returned frame, so callers had no handle
-    to unpersist it short of ``spark.catalog.clearCache()`` — a session
-    running many corpora accumulated pinned cache entries (ADVICE r11).
+    Operators that persist an intermediate several plan subtrees share
+    (minhash_lsh_pairs, semantic_dedup, winnow_neardup_pairs,
+    curate_corpus_semantic, ...) always register it here. The persisted
+    frame is NOT the returned frame, so without the handle a session
+    running many corpora accumulated pinned cache entries (ADVICE r11);
+    ``unpersist_plan(result)`` is the one release path.
     Handles already registered on an input plan are propagated, so the
     composed funnel releases its stages' caches too. The attribute is
     plain Python state on the DataFrame wrapper: it survives returns
@@ -171,7 +171,7 @@ def register_persisted(out, *handles):
     return out
 
 
-def unpersist_plan(df, blocking: bool = False) -> int:
+def unpersist_plan(df) -> int:
     """Release every cache and snapshot an operator pinned under this
     returned plan (see :func:`register_persisted`). Safe to call on any
     DataFrame (no-op when nothing is registered); returns the number of
@@ -182,7 +182,7 @@ def unpersist_plan(df, blocking: bool = False) -> int:
     rdd_ids = {h for h in handles if isinstance(h, int)}
     for h in handles:
         if not isinstance(h, int):
-            h.unpersist(blocking)
+            h.unpersist()
     if rdd_ids:
         _release_rdds(df.sparkSession.sparkContext, rdd_ids)
     if handles:

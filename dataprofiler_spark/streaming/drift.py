@@ -23,26 +23,23 @@ uses it too):
   * numeric: bin edges are FROZEN from the baseline — a monitor cannot
     re-derive edges from data it hasn't seen yet; out-of-range batch
     values clamp into the edge bins (the standard monitoring
-    formulation). Two edge rules (``numeric_bins``):
-      - "quantile" (default): edges from the baseline's approximate
-        quantiles (percentile_approx at freeze time) — every bin holds
-        ~1/bins of the baseline mass, so one extreme baseline outlier
-        cannot collapse all the mass into a single bin the way
-        equal-width (min, max) edges do (VERDICT r4 item 7). This is
-        the standard PSI formulation for monitoring.
-      - "width": equal-width bins over the baseline (min, max),
-        bit-compatible with drift.numeric_psi's framing.
+    formulation). Edges come from the baseline's approximate
+    quantiles (percentile_approx at freeze time) — every bin holds
+    ~1/bins of the baseline mass, so one extreme baseline outlier
+    cannot collapse all the mass into a single bin the way equal-width
+    (min, max) edges do (VERDICT r4 item 7). This is the standard PSI
+    formulation for monitoring; the batch drift.numeric_psi keeps its
+    own equal-width framing.
 
 COMPATIBILITY — recorded PSI baselines (r5 semantics change): two
 behaviors changed together in round 5 and BOTH shift the numeric PSI a
 monitor reports, so PSI values logged by a pre-r5 monitor are NOT
 comparable to post-r5 values for the same data:
-  1. the default edge rule moved "width" → "quantile" (VERDICT r4
-     item 7); construct with ``numeric_bins="width"`` to keep the old
-     edges, and
+  1. the edge rule moved from equal-width to quantile edges (VERDICT
+     r4 item 7; the equal-width rule is no longer offered), and
   2. smoothing now runs over ALL dense bins rather than only the
-     observed buckets — this affects "width" mode too (an unobserved
-     bin now contributes its smoothed mass instead of being absent).
+     observed buckets (an unobserved bin now contributes its smoothed
+     mass instead of being absent).
 If you alert on absolute PSI thresholds against historical logs,
 re-freeze the baseline and re-record the expected PSI level once after
 upgrading rather than comparing across the seam.
@@ -80,14 +77,9 @@ class StreamingDriftMonitor:
     def __init__(self, baseline_df: DataFrame, columns: dict[str, str],
                  bins: int = 10, max_categories: int = 10_000,
                  alert_threshold: float | None = None,
-                 sink_path: str | None = None, round_digits: int = 6,
-                 numeric_bins: str = "quantile"):
-        if numeric_bins not in ("quantile", "width"):
-            raise ValueError(f"numeric_bins must be 'quantile' or 'width',"
-                             f" got {numeric_bins!r}")
+                 sink_path: str | None = None, round_digits: int = 6):
         self.columns = dict(columns)
         self.bins = bins
-        self.numeric_bins = numeric_bins
         self.alert_threshold = alert_threshold
         self.sink_path = sink_path
         self.round_digits = round_digits
@@ -122,39 +114,27 @@ class StreamingDriftMonitor:
         # numeric baselines: the r12 shape ran TWO jobs per column
         # (edge sketch, then bucket counts), each a full baseline scan.
         # r13 (guide §1.2): one agg carrying every column's
-        # percentile_approx (or min/max) sketch, then one melted
-        # explode → groupBy(column, bucket) pass for every column's
-        # bin counts — 2 scans total regardless of column count.
+        # percentile_approx sketch, then one melted explode →
+        # groupBy(column, bucket) pass for every column's bin counts —
+        # 2 scans total regardless of column count.
         # Identical edge values (same expressions), identical counts.
         if num_cols:
-            if self.numeric_bins == "quantile":
-                qs = [i / self.bins for i in range(1, self.bins)]
-                row = baseline_df.agg(*[
-                    F.percentile_approx(F.col(c).cast("double"), qs,
-                                        10_000).alias(f"__e{i}")
-                    for i, c in enumerate(num_cols)]).collect()[0]
-                for i, col in enumerate(num_cols):
-                    # dedupe: a heavy point mass yields repeated cut
-                    # points; repeated edges would mint empty bins that
-                    # only add smoothing noise.
-                    edges, seen = [], set()
-                    for e in (row[f"__e{i}"] or []):
-                        if e is not None and e not in seen:
-                            seen.add(e)
-                            edges.append(float(e))
-                    edges.sort()
-                    self._num_state[col] = (edges, [])
-            else:
-                mm = baseline_df.agg(*[
-                    g for i, c in enumerate(num_cols) for g in
-                    (F.min(F.col(c).cast("double")).alias(f"__lo{i}"),
-                     F.max(F.col(c).cast("double")).alias(f"__hi{i}"))
-                ]).collect()[0]
-                for i, col in enumerate(num_cols):
-                    lo, hi = float(mm[f"__lo{i}"]), float(mm[f"__hi{i}"])
-                    w = (hi - lo) / float(self.bins) or 1.0
-                    self._num_state[col] = (
-                        [lo + w * j for j in range(1, self.bins)], [])
+            qs = [i / self.bins for i in range(1, self.bins)]
+            row = baseline_df.agg(*[
+                F.percentile_approx(F.col(c).cast("double"), qs,
+                                    10_000).alias(f"__e{i}")
+                for i, c in enumerate(num_cols)]).collect()[0]
+            for i, col in enumerate(num_cols):
+                # dedupe: a heavy point mass yields repeated cut points;
+                # repeated edges would mint empty bins that only add
+                # smoothing noise.
+                edges, seen = [], set()
+                for e in (row[f"__e{i}"] or []):
+                    if e is not None and e not in seen:
+                        seen.add(e)
+                        edges.append(float(e))
+                edges.sort()
+                self._num_state[col] = (edges, [])
             entries = [F.struct(
                 F.lit(c).alias("column"),
                 self._bucket_expr(c, self._num_state[c][0])

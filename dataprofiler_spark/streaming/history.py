@@ -10,12 +10,9 @@ through the SAME diff machinery as the batch ``profile.diff(other)``
 API (report.diff_profiles), so a monitoring job reads PSI / t-test /
 KS per interval without ever touching the raw data again.
 
-Snapshot modes:
-  * "per_batch"  — each snapshot profiles ONLY its micro-batch: the
-    timeline diffs interval-vs-interval (drift localization).
-  * "cumulative" — each snapshot is the running fold: the timeline
-    diffs corpus-so-far vs corpus-so-far (trend smoothing; late
-    intervals are down-weighted by the growing denominator).
+Each snapshot profiles ONLY its micro-batch, so the timeline diffs
+interval-vs-interval (drift localization). The running fold of every
+batch is StreamingProfiler's job.
 
 File layout: {path}/snap_{batch_id:08d}.json — one JSON per snapshot,
 atomic enough for a single writer (foreachBatch is serialized per
@@ -40,27 +37,16 @@ class ProfileHistory:
     """foreachBatch hook: profile each micro-batch and persist the
     snapshot."""
 
-    def __init__(self, path: str, options: ProfilerOptions | None = None,
-                 mode: str = "per_batch"):
-        if mode not in ("per_batch", "cumulative"):
-            raise ValueError(f"mode must be 'per_batch' or 'cumulative',"
-                             f" got {mode!r}")
+    def __init__(self, path: str, options: ProfilerOptions | None = None):
         self.path = path
         self.options = options or ProfilerOptions()
-        self.mode = mode
         self.state: DatasetState | None = None
         self.batches_seen = 0
         os.makedirs(path, exist_ok=True)
 
     def update(self, batch_df: DataFrame,
                batch_id: int | None = None) -> DatasetState:
-        chunk = Profiler(batch_df, self.options).profile()
-        if self.mode == "cumulative":
-            self.state = chunk if self.state is None else self.state + chunk
-            snap = self.state
-        else:
-            self.state = chunk
-            snap = chunk
+        snap = self.state = Profiler(batch_df, self.options).profile()
         bid = self.batches_seen if batch_id is None else int(batch_id)
         fname = os.path.join(self.path, f"snap_{bid:08d}.json")
         tmp = fname + ".tmp"

@@ -32,12 +32,39 @@ periodically (compact_store) as with any append-heavy parquet table.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 STORE_SCHEMA = "id long, band int, bucket string, batch long"
 SETS_SCHEMA = "id long, hs array<bigint>, batch long"
+
+
+def restore_parked(path: str) -> bool:
+    """Restore a store that a compaction crash parked at
+    ``<path>.compact-old`` with no live ``path`` (a crash between the
+    two moves of :func:`compact_store`); return whether ``path`` exists
+    afterwards. Run it BEFORE reading path-missing as "empty store":
+    otherwise the session appends fresh rows, and the next compaction
+    discards the park as stale — permanent silent loss."""
+    old = path.rstrip("/") + ".compact-old"
+    if not os.path.isdir(path) and os.path.isdir(old):
+        shutil.move(old, path)
+    return os.path.isdir(path)
+
+
+def read_store(spark: SparkSession, path: str,
+               schema: str) -> DataFrame | None:
+    """The append store at ``path``, or None when it does not exist yet.
+    After :func:`restore_parked`, path-missing is the only "empty store"
+    signal. A corrupt or unreadable store RAISES, never reads as empty —
+    that would pass every later batch unflagged and append its rows,
+    permanently polluting the dedup history (false negatives, no
+    error)."""
+    if not restore_parked(path):
+        return None
+    return spark.read.schema(schema).parquet(path)
 
 
 class StreamingNearDup:
@@ -66,26 +93,6 @@ class StreamingNearDup:
     def _sets_path(self) -> str:
         return os.path.join(self.store_path, "sets")
 
-    def _read(self, spark: SparkSession, path: str, schema: str
-              ) -> DataFrame | None:
-        # A compact_store crash between its two moves leaves the history
-        # parked at .compact-old with no live dir — restore it BEFORE
-        # interpreting path-missing, otherwise this session reads
-        # "empty store", appends fresh signatures, and the next
-        # compaction discards the park as stale: permanent silent loss.
-        old = path.rstrip("/") + ".compact-old"
-        if not os.path.isdir(path) and os.path.isdir(old):
-            import shutil
-            shutil.move(old, path)
-        # After recovery, path-missing is the only "empty store" signal.
-        # A corrupt or unreadable store must RAISE, not read as empty —
-        # silently treating it as empty would pass every subsequent
-        # batch unflagged and append its signatures, permanently
-        # polluting the dedup history (false negatives, no error).
-        if not os.path.isdir(path):
-            return None
-        return spark.read.schema(schema).parquet(path)
-
     def _flag_candidates(self, keys: DataFrame, wide: DataFrame,
                          store_keys: DataFrame, spark: SparkSession
                          ) -> set[int]:
@@ -101,7 +108,7 @@ class StreamingNearDup:
         if self.verify_threshold is None:
             return {r["bid"] for r in
                     cand_pairs.select("bid").distinct().collect()}
-        store_sets = self._read(spark, self._sets_path, SETS_SCHEMA)
+        store_sets = read_store(spark, self._sets_path, SETS_SCHEMA)
         if store_sets is None:
             return set()
         batch_sets = wide.select("id", "hs")
@@ -126,7 +133,7 @@ class StreamingNearDup:
                              self.k, self.num_hashes).persist()
         try:
             keys = _band_buckets(wide, self.num_hashes, self.bands)
-            store_keys = self._read(spark, self._keys_path, STORE_SCHEMA)
+            store_keys = read_store(spark, self._keys_path, STORE_SCHEMA)
             flagged: set[int] = set()
             if store_keys is not None:
                 # flagged sets are tiny per batch; a production pipeline
@@ -160,6 +167,31 @@ class StreamingNearDup:
         return stream_df.writeStream.foreachBatch(self.update)
 
 
+def _compact(spark: SparkSession, path: str, schema: str,
+             min_batch: int | None, write) -> int:
+    """The crash-safe rewrite both compactions share (protocol in
+    :func:`compact_store`): recover leftovers of a crashed prior run,
+    read and retention-prune the store, ``write(df, tmp)`` the rewrite
+    beside it, then swap it in. Returns the rewritten row count."""
+    tmp = path.rstrip("/") + ".compact-tmp"
+    old = path.rstrip("/") + ".compact-old"
+    restore_parked(path)                  # crash between the two moves
+    if os.path.isdir(old):
+        shutil.rmtree(old)                # crash before cleanup: stale park
+    if os.path.isdir(tmp):
+        shutil.rmtree(tmp)                # stale partial rewrite
+    df = spark.read.schema(schema).parquet(path)
+    if min_batch is not None:
+        df = df.where(F.col("batch").isNull()
+                      | (F.col("batch") >= min_batch))
+    write(df, tmp)
+    n = spark.read.schema(schema).parquet(tmp).count()
+    shutil.move(path, old)
+    shutil.move(tmp, path)
+    shutil.rmtree(old)
+    return n
+
+
 def compact_store(spark: SparkSession, keys_path: str,
                   target_files_per_band: int = 1,
                   min_batch: int | None = None,
@@ -188,28 +220,11 @@ def compact_store(spark: SparkSession, keys_path: str,
     crash without checking which case applies. (For a verify-mode store,
     pass ``<store>/keys``; the ``sets/`` table can be coalesced the same
     way without the band partitioning.)"""
-    import shutil
-
-    tmp = keys_path.rstrip("/") + ".compact-tmp"
-    old = keys_path.rstrip("/") + ".compact-old"
-    if os.path.isdir(old):
-        if not os.path.isdir(keys_path):
-            shutil.move(old, keys_path)   # crash between the two moves
-        else:
-            shutil.rmtree(old)            # crash before cleanup: stale park
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)                # stale partial rewrite
-    df = spark.read.schema(schema).parquet(keys_path)
-    if min_batch is not None:
-        df = df.where(F.col("batch").isNull()
-                      | (F.col("batch") >= min_batch))
-    (df.repartition(target_files_per_band, "band")
-     .write.mode("overwrite").partitionBy("band").parquet(tmp))
-    n = spark.read.schema(schema).parquet(tmp).count()
-    shutil.move(keys_path, old)
-    shutil.move(tmp, keys_path)
-    shutil.rmtree(old)
-    return n
+    return _compact(
+        spark, keys_path, schema, min_batch,
+        lambda df, tmp: (df.repartition(target_files_per_band, "band")
+                         .write.mode("overwrite").partitionBy("band")
+                         .parquet(tmp)))
 
 
 def compact_sets(spark: SparkSession, sets_path: str,
@@ -218,27 +233,10 @@ def compact_sets(spark: SparkSession, sets_path: str,
     """Coalesce + retention-prune the verify-mode ``sets/`` table (one
     hashed-shingle array per surviving doc). Same crash-safety protocol
     as :func:`compact_store`; no band partitioning."""
-    import shutil
-
-    tmp = sets_path.rstrip("/") + ".compact-tmp"
-    old = sets_path.rstrip("/") + ".compact-old"
-    if os.path.isdir(old):
-        if not os.path.isdir(sets_path):
-            shutil.move(old, sets_path)
-        else:
-            shutil.rmtree(old)
-    if os.path.isdir(tmp):
-        shutil.rmtree(tmp)
-    df = spark.read.schema(SETS_SCHEMA).parquet(sets_path)
-    if min_batch is not None:
-        df = df.where(F.col("batch").isNull()
-                      | (F.col("batch") >= min_batch))
-    df.repartition(target_files).write.mode("overwrite").parquet(tmp)
-    n = spark.read.schema(SETS_SCHEMA).parquet(tmp).count()
-    shutil.move(sets_path, old)
-    shutil.move(tmp, sets_path)
-    shutil.rmtree(old)
-    return n
+    return _compact(
+        spark, sets_path, SETS_SCHEMA, min_batch,
+        lambda df, tmp: (df.repartition(target_files)
+                         .write.mode("overwrite").parquet(tmp)))
 
 
 def oracle_streaming_neardup_sql(table: str, id_col: str, text_col: str,

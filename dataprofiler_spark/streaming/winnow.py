@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataprofiler_spark.operators.dedup import DEFAULT_MAX_FP_FREQ
+from dataprofiler_spark.streaming.neardup import read_store
 
 WINNOW_STORE_SCHEMA = "id long, fp long, band int, batch long"
 
@@ -64,20 +65,6 @@ class StreamingWinnowDup:
     def _keys_path(self) -> str:
         return os.path.join(self.store_path, "fps")
 
-    def _read_store(self, spark: SparkSession) -> DataFrame | None:
-        # Same crash-recovery contract as StreamingNearDup._read: a
-        # parked .compact-old with no live dir is restored first; a
-        # missing dir is the ONLY "empty store" signal — a corrupt
-        # store must raise, never silently read as empty.
-        path = self._keys_path
-        old = path.rstrip("/") + ".compact-old"
-        if not os.path.isdir(path) and os.path.isdir(old):
-            import shutil
-            shutil.move(old, path)
-        if not os.path.isdir(path):
-            return None
-        return spark.read.schema(WINNOW_STORE_SCHEMA).parquet(path)
-
     def update(self, batch_df: DataFrame, batch_id: int) -> None:
         from dataprofiler_spark.operators.dedup import winnow_fingerprints
 
@@ -104,7 +91,7 @@ class StreamingWinnowDup:
                 "that do not cast to BIGINT; map ids to integers first "
                 "(e.g. xxhash64(id))")
         try:
-            store = self._read_store(spark)
+            store = read_store(spark, self._keys_path, WINNOW_STORE_SCHEMA)
             flagged: set[int] = set()
             if store is not None:
                 probe = store

@@ -258,12 +258,11 @@ def test_embedding_outliers_no_int64_overflow(spark):
 
 
 def test_embedding_neardup_pairs_cache_contract(spark, sf_dir):
-    """r12 contract (supersedes the r4 no-persist rule): the default
-    path persists exactly ONE frame (the hyperplane bucket computation,
-    read by the sizing agg + cap join + both self-join sides) and the
+    """r12 contract (supersedes the r4 no-persist rule): the operator
+    persists exactly ONE frame (the hyperplane bucket computation, read
+    by the sizing agg + cap join + both self-join sides) and the
     returned plan carries the release handle — after unpersist_plan the
-    session state is back where it started. cache=False stays
-    stateless."""
+    session state is back where it started."""
     import os as _os
 
     from dataprofiler_spark.operators import similarity as sim
@@ -285,11 +284,6 @@ def test_embedding_neardup_pairs_cache_contract(spark, sf_dir):
     after = set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
                 .toArray())
     assert after - before == set()
-
-    sim.embedding_neardup_pairs(emb, "vec_id", "embedding",
-                                threshold=0.8, cache=False).count()
-    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()
-               .toArray()) - before == set()
 
 
 def test_embedding_group_cosines_semantics(spark):
@@ -638,24 +632,20 @@ def test_two_level_cells_invariants(spark):
     assert (a["ck"] == b["ck"]).all()
 
 
-def test_semantic_dedup_two_level_semantics(spark):
-    """semantic_dedup(two_level=True) keeps the operator's observable
-    contract at forced-low threshold: one row per vector, keep XOR
+def test_semantic_dedup_two_level_semantics(spark, monkeypatch):
+    """semantic_dedup on the two-level path (forced by lowering
+    TWO_LEVEL_MIN_K) keeps the operator's observable contract at
+    forced-low threshold: one row per vector, keep XOR
     dropped-by-an-in-cell-winner, guarded consistent with cell size —
-    verified by brute-force within each emitted cell."""
+    verified by brute-force within each emitted cell. At the default
+    constant the same small corpus takes the flat path."""
     import numpy as np
 
     from dataprofiler_spark.operators import clustering as cl
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     thr = 0.3
-    out = cl.semantic_dedup(emb, "vec_id", "embedding", threshold=thr,
-                            target_cell_size=50, iters=2,
-                            two_level=True).toPandas()
     n = emb.where("embedding is not null").count()
-    assert len(out) == n and out["id"].is_unique
-    assert not out["guarded"].any()   # cells ~50 << max_cluster_size
-
     vecs = {r["vec_id"]: np.asarray(r["embedding"], dtype=np.float64)
             for r in emb.collect()}
 
@@ -663,31 +653,37 @@ def test_semantic_dedup_two_level_semantics(spark):
         d = np.linalg.norm(a) * np.linalg.norm(b)
         return round(float(a @ b / d), 6) if d else 0.0
 
-    # brute-force replay of the min_id ε-ball rule inside every cell
-    for cell, grp in out.groupby("cluster"):
-        ids = sorted(grp["id"])
-        kept = {r["id"]: bool(r["keep"]) for _, r in grp.iterrows()}
-        for i in ids:
-            beats = [j for j in ids if j < i
-                     and cos(vecs[j], vecs[i]) >= thr]
-            assert kept[i] == (not beats), (cell, i)
+    def check_min_id_rule(out):
+        assert len(out) == n and out["id"].is_unique
+        assert not out["guarded"].any()   # cells ~50 << max_cluster_size
+        # brute-force replay of the min_id ε-ball rule inside every cell
+        for cell, grp in out.groupby("cluster"):
+            ids = sorted(grp["id"])
+            kept = {r["id"]: bool(r["keep"]) for _, r in grp.iterrows()}
+            for i in ids:
+                beats = [j for j in ids if j < i
+                         and cos(vecs[j], vecs[i]) >= thr]
+                assert kept[i] == (not beats), (cell, i)
 
-    # the auto switch: tiny corpus resolves k << TWO_LEVEL_MIN_K, so
-    # two_level="auto" must take the flat (oracle-mirrored) path and
-    # match the explicit flat run exactly
+    # the auto switch: the tiny corpus resolves k = ceil(n / 50) <<
+    # TWO_LEVEL_MIN_K, so the default takes the flat (oracle-mirrored)
+    # path — its cells are exactly the flat k-means assignment
     auto = cl.semantic_dedup(emb, "vec_id", "embedding", threshold=thr,
-                             target_cell_size=50, iters=2,
-                             two_level="auto").toPandas()
-    flat = cl.semantic_dedup(emb, "vec_id", "embedding", threshold=thr,
-                             target_cell_size=50, iters=2,
-                             two_level=False).toPandas()
-    a = auto.sort_values("id").reset_index(drop=True)
-    b = flat.sort_values("id").reset_index(drop=True)
-    assert (a["cluster"] == b["cluster"]).all()
-    assert (a["keep"] == b["keep"]).all()
+                             target_cell_size=50, iters=2).toPandas()
+    check_min_id_rule(auto)
+    k = -(-n // 50)
+    flat = {r["vec_id"]: r["cluster"] for r in
+            cl.kmeans_assign(emb, "vec_id", "embedding", k=k,
+                             iters=2).collect()}
+    assert dict(zip(auto["id"], auto["cluster"])) == flat
+
+    monkeypatch.setattr(cl, "TWO_LEVEL_MIN_K", 1)
+    two = cl.semantic_dedup(emb, "vec_id", "embedding", threshold=thr,
+                            target_cell_size=50, iters=2).toPandas()
+    check_min_id_rule(two)
 
 
-def test_two_level_cells_edge_shapes(spark):
+def test_two_level_cells_edge_shapes(spark, monkeypatch):
     """Degenerate inputs: a single vector, a corpus smaller than
     target_cell_size (one coarse cell, one fine cell), and NULL
     vectors (excluded, like every clustering entry point)."""
@@ -708,13 +704,13 @@ def test_two_level_cells_edge_shapes(spark):
     assert len(rows) == 5               # NULL vector has no cell
     assert len({r["cluster"] for r in rows}) == 1  # n << target: 1 cell
 
-    # semantic_dedup over the degenerate corpus still keeps exactly the
-    # min-id member of each ε-ball
+    # semantic_dedup on the two-level path over the degenerate corpus
+    # still keeps exactly the min-id member of each ε-ball
+    monkeypatch.setattr(cl, "TWO_LEVEL_MIN_K", 1)
     sd = cl.semantic_dedup(
         spark.createDataFrame([(i, [1.0, 0.0]) for i in range(4)],
                               "id long, v array<double>"),
-        "id", "v", threshold=0.9, target_cell_size=2,
-        two_level=True).collect()
+        "id", "v", threshold=0.9, target_cell_size=2).collect()
     kept = sorted(r["id"] for r in sd if r["keep"])
     cells = {r["id"]: r["cluster"] for r in sd}
     # identical vectors: whoever shares a cell with a lower id drops

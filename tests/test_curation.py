@@ -847,12 +847,13 @@ def test_funnel_missing_embedding_audit(spark):
             <= int(half["n_text_curated"]))
 
 
-def test_unpersist_plan_releases_operator_caches(spark):
-    """ADVICE r11: cache=True operators pin intermediates with no
-    release handle. register_persisted/unpersist_plan is that handle —
-    after the final action + unpersist_plan, the session's persistent
-    RDD set is empty again (funnel propagates its semantic stage's
-    frames too)."""
+def test_unpersist_plan_releases_operator_caches(spark, monkeypatch):
+    """ADVICE r11: operators that persist shared intermediates pinned
+    them with no release handle. register_persisted/unpersist_plan is
+    that handle — after the final action + unpersist_plan, the
+    session's persistent RDD set is back where it started (funnel
+    propagates its semantic stage's frames too)."""
+    from dataprofiler_spark.operators import clustering as cl
     from dataprofiler_spark.operators import dedup as dd
     from dataprofiler_spark.operators import pipeline as pl
     from dataprofiler_spark.session import unpersist_plan
@@ -876,6 +877,24 @@ def test_unpersist_plan_releases_operator_caches(spark):
     assert unpersist_plan(pairs) == 1
     assert pinned() - before == set()
 
+    # (operator output, handles it registers): the signature frame; the
+    # wide aggregate + bucket sizes + bucket keys of the auto cap; the
+    # assign frame of the two-level semantic path
+    # (built one at a time: semantic_dedup materializes its frame eagerly)
+    monkeypatch.setattr(cl, "TWO_LEVEL_MIN_K", 1)
+    for build, n_handles in (
+            (lambda: dd.simhash_neardup_pairs(docs, "doc_id", "text"), 1),
+            (lambda: dd.minhash_lsh_pairs(docs, "doc_id", "text",
+                                          max_bucket_size="auto"), 3),
+            (lambda: cl.semantic_dedup(emb, "vec_id", "embedding",
+                                       target_cell_size=50, iters=2), 1)):
+        out = build()
+        out.collect()
+        assert len(pinned() - before) == n_handles
+        assert unpersist_plan(out) == n_handles
+        assert pinned() - before == set()
+    monkeypatch.undo()
+
     rep = pl.curate_corpus_semantic(
         docs, "doc_id", "text", emb, "vec_id", "embedding",
         k_clusters="auto", target_cell_size=100, iters=2)
@@ -885,20 +904,23 @@ def test_unpersist_plan_releases_operator_caches(spark):
     assert unpersist_plan(rep) == 0   # idempotent
 
 
-def test_funnel_two_level_passthrough(spark):
-    """curate_corpus_semantic(two_level=True) routes the semantic stage
-    through the hierarchical quantizer: same report schema, sane
-    counts, and forcing it at tiny scale still produces a valid funnel
-    row (kept + guarded bounded by the text survivors)."""
+def test_funnel_two_level_passthrough(spark, monkeypatch):
+    """curate_corpus_semantic routes the semantic stage through the
+    hierarchical quantizer once k reaches TWO_LEVEL_MIN_K: same report
+    schema, sane counts, and forcing it at tiny scale (the constant
+    lowered to 1) still produces a valid funnel row (kept + guarded
+    bounded by the text survivors)."""
+    from dataprofiler_spark.operators import clustering as cl
     from dataprofiler_spark.operators import pipeline as pl
+
+    monkeypatch.setattr(cl, "TWO_LEVEL_MIN_K", 1)
 
     sf = "/root/testdata/sf0.001"
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     row = pl.curate_corpus_semantic(
         docs, "doc_id", "text", emb, "vec_id", "embedding",
-        target_cell_size=50, iters=2, two_level=True
-    ).toPandas().iloc[0]
+        target_cell_size=50, iters=2).toPandas().iloc[0]
     assert int(row["n_semantic_kept"]) > 0
     assert (int(row["n_semantic_kept"])
             <= int(row["n_text_curated"]) - int(row["n_missing_embedding"]))

@@ -416,7 +416,7 @@ def test_neardup_sets_compaction(spark, tmp_path):
 def test_neardup_streaming_session_recovers_parked_store(spark, tmp_path):
     """A compact_store crash between its two moves must NOT cost the
     dedup history when the next access is a streaming session rather
-    than a compaction: _read restores the parked store first."""
+    than a compaction: read_store restores the parked store first."""
     import shutil as sh
 
     from dataprofiler_spark.streaming.neardup import StreamingNearDup
@@ -670,9 +670,6 @@ def test_profile_history_and_drift_timeline(spark, sf_dir, tmp_path):
     vals = [v for _, v in series if v is not None]
     assert len(vals) == 2
     assert max(vals) > 0.2  # the distribution shift interval screams
-
-    with pytest.raises(ValueError, match="mode"):
-        ProfileHistory(str(tmp_path / "x"), mode="weekly")
 
 
 def test_streaming_winnow_store(spark, tmp_path):
