@@ -25,12 +25,26 @@ operators/sampling.hash_sample) — deterministic and oracle-mirrorable,
 unlike Spark's partition-order-dependent ``DataFrame.sample``.
 
 Distance: cosine. Deterministic: the same input builds the same index.
+
+Serving reads an index once per build and Spark context: the first
+query against a path parses both JSON sidecars, collects the centroid
+table and opens the ``vectors`` relation (its file listing and schema),
+and keeps them in a small driver-side LRU keyed by the absolute path.
+An entry is reused while the ``(st_mtime_ns, st_size)`` of
+``_ivf_meta.json`` and of ``_pq_codebooks.json`` (or its absence) and
+the SparkContext's ``applicationId`` are the ones it recorded, so a
+rebuild at the same path or a restarted context refills it. Later
+queries run one Spark job: each builds its own ``centroid IN (...)``
+plan on the cached relation, so partition pruning is unchanged.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import threading
+from collections import OrderedDict
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,10 +110,71 @@ def ivf_build(df: DataFrame, id_col: str, vec_col: str, path: str,
             "pq_iters": pq_iters if pq_m else None}
     with open(os.path.join(path, "_ivf_meta.json"), "w") as f:
         json.dump(meta, f)
+    books_path = os.path.join(path, "_pq_codebooks.json")
     if pq_books is not None:
-        with open(os.path.join(path, "_pq_codebooks.json"), "w") as f:
+        with open(books_path, "w") as f:
             json.dump(pq_books, f)
+    elif os.path.exists(books_path):
+        # a plain rebuild over a PQ index must not leave its codebooks
+        os.remove(books_path)
     return meta
+
+
+class _Index(NamedTuple):
+    """One index as the query paths read it; ``key`` is what it was
+    read under (see _index)."""
+    key: tuple
+    meta: dict
+    books: list | None
+    centroids: list[tuple[int, list[float]]]  # sorted by centroid id
+    vectors: DataFrame
+
+
+_INDEX_CACHE_SIZE = 8
+_INDEX_CACHE: OrderedDict[str, _Index] = OrderedDict()
+_INDEX_LOCK = threading.Lock()
+
+
+def _stamp(path: str) -> tuple[int, int] | None:
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
+
+def _index(spark: SparkSession, path: str) -> _Index:
+    """The index at ``path``, read once per build and Spark context.
+
+    The key is taken before the files are read, so a rebuild that
+    lands mid-read leaves an entry whose key no longer matches and the
+    next query refills it. The application id covers a stopped and
+    restarted context, whose old relation cannot run."""
+    path = os.path.abspath(path)
+    key = (_stamp(os.path.join(path, "_ivf_meta.json")),
+           _stamp(os.path.join(path, "_pq_codebooks.json")),
+           spark.sparkContext.applicationId)
+    with _INDEX_LOCK:
+        hit = _INDEX_CACHE.get(path)
+        if hit is not None and hit.key == key:
+            _INDEX_CACHE.move_to_end(path)
+            return hit
+    meta = ivf_meta(path)
+    books = None
+    if meta.get("pq_m"):
+        with open(os.path.join(path, "_pq_codebooks.json")) as f:
+            books = json.load(f)
+    rows = spark.read.parquet(os.path.join(path, "centroids")).collect()
+    centroids = sorted(((r["centroid"], list(r["center"])) for r in rows),
+                       key=lambda c: c[0])
+    entry = _Index(key, meta, books, centroids,
+                   spark.read.parquet(os.path.join(path, "vectors")))
+    with _INDEX_LOCK:
+        _INDEX_CACHE[path] = entry
+        _INDEX_CACHE.move_to_end(path)
+        while len(_INDEX_CACHE) > _INDEX_CACHE_SIZE:
+            _INDEX_CACHE.popitem(last=False)
+    return entry
 
 
 def _cosine(a: list[float], b: list[float]) -> float:
@@ -113,10 +188,9 @@ def ivf_probe_centroids(spark: SparkSession, path: str,
                         query_vec: list[float], nprobe: int) -> list[int]:
     """Rank centroids by cosine against the query (driver-side — the
     centroid table is O(n_centroids), tiny by construction)."""
-    rows = spark.read.parquet(os.path.join(path, "centroids")).collect()
-    ranked = sorted(rows, key=lambda r: (-_cosine(query_vec, r["center"]),
-                                         r["centroid"]))
-    return [r["centroid"] for r in ranked[:nprobe]]
+    ranked = sorted(_index(spark, path).centroids,
+                    key=lambda c: (-_cosine(query_vec, c[1]), c[0]))
+    return [cid for cid, _ in ranked[:nprobe]]
 
 
 def ivf_query(spark: SparkSession, path: str, query_vec: list[float],
@@ -132,8 +206,7 @@ def ivf_query(spark: SparkSession, path: str, query_vec: list[float],
     from dataprofiler_spark.operators.topk import ranked_topk
 
     probe = ivf_probe_centroids(spark, path, query_vec, nprobe)
-    vecs = spark.read.parquet(os.path.join(path, "vectors"))
-    cand = vecs.where(F.col("centroid").isin(probe))
+    cand = _index(spark, path).vectors.where(F.col("centroid").isin(probe))
     if exclude_id is not None:
         cand = cand.where(F.col("id") != exclude_id)
     q = F.array(*[F.lit(float(x)) for x in query_vec])
@@ -161,28 +234,21 @@ def ivf_query_adc(spark: SparkSession, path: str,
     from dataprofiler_spark.operators import clustering as cl
     from dataprofiler_spark.operators.topk import ranked_topk
 
-    meta = ivf_meta(path)
-    if not meta.get("pq_m"):
+    ix = _index(spark, path)
+    if not ix.meta.get("pq_m"):
         raise ValueError(f"index at {path} was built without pq_m — "
                          "rebuild with ivf_build(..., pq_m=m)")
-    with open(os.path.join(path, "_pq_codebooks.json")) as f:
-        books = json.load(f)
-    m = meta["pq_m"]
+    m = ix.meta["pq_m"]
     qv = [float(x) for x in query_vec]
-    cent_rows = spark.read.parquet(
-        os.path.join(path, "centroids")).collect()
-    coarse = [list(r["center"])
-              for r in sorted(cent_rows, key=lambda r: r["centroid"])]
-    probe = cl._adc_probe(qv, coarse, nprobe)
+    probe = cl._adc_probe(qv, [c for _, c in ix.centroids], nprobe)
 
     cols = ["id", "centroid"] + [f"code{j}" for j in range(m)]
-    vecs = spark.read.parquet(os.path.join(path, "vectors")).select(*cols)
-    cand = vecs.where(F.col("centroid").isin(probe))
+    cand = ix.vectors.select(*cols).where(F.col("centroid").isin(probe))
     if exclude_id is not None:
         cand = cand.where(F.col("id") != exclude_id)
     scored = cand.select(
         F.col("id").alias("vec_id"),
-        cl._adc_expr(F.lit(cl._adc_table(qv, books)), m).alias("d6"))
+        cl._adc_expr(F.lit(cl._adc_table(qv, ix.books)), m).alias("d6"))
     return (ranked_topk(scored, [F.asc("d6"), F.asc("vec_id")], k)
             .select("rank", "vec_id",
                     F.round(F.col("d6") / F.lit(float(cl._SCALE)), 6)

@@ -101,6 +101,10 @@ def test_ivf_build_quantizer_variants(spark, sf_dir, tmp_path):
                          quantizer=bad)
 
 
+def _adc_rows(rows):
+    return [(r["rank"], r["vec_id"], r["approx_d"]) for r in rows]
+
+
 @pytest.mark.parametrize("pq_codes", [4, 24])
 def test_ivf_pq_persisted_matches_inline(spark, sf_dir, tmp_path,
                                          pq_codes):
@@ -127,9 +131,7 @@ def test_ivf_pq_persisted_matches_inline(spark, sf_dir, tmp_path,
     qrow = emb.where(F.col("vec_id") == qid).head()
     out = ai.ivf_query_adc(spark, path, list(qrow["embedding"]), k=5,
                            nprobe=2, exclude_id=qid)
-    persisted = out.collect()
-    assert ([(r["rank"], r["vec_id"], r["approx_d"]) for r in persisted]
-            == [(r["rank"], r["vec_id"], r["approx_d"]) for r in inline])
+    assert _adc_rows(out.collect()) == _adc_rows(inline)
 
     plan = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "formatted")
@@ -137,12 +139,131 @@ def test_ivf_pq_persisted_matches_inline(spark, sf_dir, tmp_path,
     # the serving scan reads codes, never the stored fp32 vectors
     assert "embedding" not in plan.split("ReadSchema")[1][:200], plan
 
+    # a plain rebuild over the PQ index removes its codebooks, and the
     # unbuilt-PQ index refuses ADC queries loudly
-    plain = str(tmp_path / "plain")
-    ai.ivf_build(emb, "vec_id", "embedding", plain, n_centroids=4,
+    ai.ivf_build(emb, "vec_id", "embedding", path, n_centroids=4,
                  quantizer="det", iters=1)
+    assert not os.path.exists(os.path.join(path, "_pq_codebooks.json"))
     with pytest.raises(ValueError, match="pq_m"):
-        ai.ivf_query_adc(spark, plain, list(qrow["embedding"]))
+        ai.ivf_query_adc(spark, path, list(qrow["embedding"]))
+
+
+def test_ivf_query_adc_rebuild_same_path_serves_new_index(spark, sf_dir,
+                                                          tmp_path):
+    """A query reads the index through ann_index's driver cache; a
+    rebuild at the same path with other settings (more PQ codes, a
+    filtered input) must be served from the new files, exactly as the
+    inline ivf_pq_topk ranks the new settings."""
+    from dataprofiler_spark.operators import ann_index as ai
+    from dataprofiler_spark.operators import clustering as cl
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    path = str(tmp_path / "ivfpq")
+    for src, pq_codes in ((emb, 4), (emb.where(F.col("vec_id") % 3 != 1),
+                                     24)):
+        ai.ivf_build(src, "vec_id", "embedding", path, n_centroids=4,
+                     iters=1, pq_m=4, pq_codes=pq_codes, pq_iters=1)
+        inline = cl.ivf_pq_topk(src, "vec_id", "embedding", k_clusters=4,
+                                iters=1, m=4, k_codes=pq_codes, pq_iters=1,
+                                nprobe=2, n_queries=1, k=5,
+                                dim=64).collect()
+        qid = inline[0]["query_id"]
+        q = list(src.where(F.col("vec_id") == qid).head()["embedding"])
+        for _ in range(2):  # the filling query, then a cached one
+            assert _adc_rows(ai.ivf_query_adc(
+                spark, path, q, k=5, nprobe=2,
+                exclude_id=qid).collect()) == _adc_rows(inline)
+        cached = ai._INDEX_CACHE[os.path.abspath(path)]
+        assert cached.meta["pq_codes"] == pq_codes
+        assert len(cached.books[0]) == pq_codes
+
+
+def test_ivf_index_cache_refills_for_another_context(spark, sf_dir,
+                                                     tmp_path):
+    """An entry recorded under another SparkContext (a stopped and
+    restarted one) is read again, not reused: its relation belongs to
+    the dead context."""
+    from dataprofiler_spark.operators import ann_index as ai
+
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    path = str(tmp_path / "ivfpq")
+    ai.ivf_build(emb, "vec_id", "embedding", path, n_centroids=4, iters=1,
+                 pq_m=4, pq_codes=4, pq_iters=1)
+    q = [float(x) for x in emb.orderBy("vec_id").head()["embedding"]]
+    first = ai.ivf_query_adc(spark, path, q, k=5, nprobe=2).collect()
+    key = os.path.abspath(path)
+    filled = ai._INDEX_CACHE[key]
+    assert filled.key[2] == spark.sparkContext.applicationId
+    stale = filled._replace(key=filled.key[:2] + ("app-restarted",))
+    ai._INDEX_CACHE[key] = stale
+    assert ai.ivf_query_adc(spark, path, q, k=5,
+                            nprobe=2).collect() == first
+    refilled = ai._INDEX_CACHE[key]
+    assert refilled is not stale and refilled.key == filled.key
+
+
+def test_ivf_index_cache_threads_keep_lru_bound(tmp_path, monkeypatch):
+    """Threads querying more indexes than the LRU holds: every lookup
+    returns its own index's entry, no insert/evict interleaving raises,
+    and the cache never grows past its bound. The Spark reads are faked
+    (the cache only collects the centroid table and keeps the vectors
+    relation), so the threads contend on the cache alone."""
+    import json
+    import random
+    import sys
+    import threading
+    from collections import OrderedDict
+    from types import SimpleNamespace
+
+    from dataprofiler_spark.operators import ann_index as ai
+
+    n_paths = ai._INDEX_CACHE_SIZE + 4
+    paths = []
+    for i in range(n_paths):
+        p = tmp_path / f"ix{i}"
+        p.mkdir()
+        (p / "_ivf_meta.json").write_text(json.dumps({"n_centroids": i}))
+        paths.append(os.path.abspath(p))
+
+    def parquet(p):
+        i = paths.index(os.path.dirname(p))
+        return SimpleNamespace(path=p, collect=lambda: [
+            {"centroid": 1, "center": [float(i)]},
+            {"centroid": 0, "center": [-float(i)]}])
+
+    fake = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="a"),
+                           read=SimpleNamespace(parquet=parquet))
+    monkeypatch.setattr(ai, "_INDEX_CACHE", OrderedDict())
+    errors, sizes = [], []
+
+    def worker(w):
+        try:
+            rng = random.Random(w)  # hits and evicting misses
+            for _ in range(500):
+                i = rng.randrange(n_paths)
+                ix = ai._index(fake, paths[i])
+                assert ix.meta == {"n_centroids": i}
+                assert ix.centroids == [(0, [-float(i)]), (1, [float(i)])]
+                assert ix.vectors.path == os.path.join(paths[i], "vectors")
+                sizes.append(len(ai._INDEX_CACHE))
+        except Exception as e:  # surfaced by the assertion below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,))
+                   for w in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(sizes) == 8 * 500
+    assert max(sizes) <= ai._INDEX_CACHE_SIZE
 
 
 def test_embedding_decontaminate_semantics(spark, sf_dir):

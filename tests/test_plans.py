@@ -500,8 +500,10 @@ def test_vector_ops_job_budgets(spark, sf_dir, tmp_path):
     added Spark action fails here instead of surfacing later as a bench
     drift. kmeans_fit = init collect + 2 per Lloyd round (AQE runs the
     shuffle map stage as its own job); pq_fit = one fused fit; the
-    build adds its own fit, the write and the centroid table; a query
-    reads the centroid table and scans the probed cells."""
+    build adds its own fit, the write and the centroid table; the first
+    query against an index reads the centroid table and the vectors
+    relation into ann_index's driver cache and scans the probed cells,
+    a second query against the same index only scans."""
     from dataprofiler_spark.operators import ann_index as ai
     from dataprofiler_spark.operators import clustering as cl
 
@@ -518,9 +520,11 @@ def test_vector_ops_job_budgets(spark, sf_dir, tmp_path):
             quantizer="det", iters=1, pq_m=4, pq_codes=4, pq_iters=1)),
         "ivf_query_adc": _count_jobs(spark, lambda: ai.ivf_query_adc(
             spark, path, q, k=5, nprobe=2).collect()),
+        "ivf_query_adc_warm": _count_jobs(spark, lambda: ai.ivf_query_adc(
+            spark, path, q[::-1], k=5, nprobe=2).collect()),
     }
     assert counts == {"kmeans_fit": 5, "pq_fit": 3, "ivf_build": 8,
-                      "ivf_query_adc": 4}
+                      "ivf_query_adc": 4, "ivf_query_adc_warm": 1}
 
 
 def _next_job_id(spark) -> int:
